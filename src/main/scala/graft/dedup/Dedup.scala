@@ -127,43 +127,6 @@ object Dedup {
     full.union(star).distinct()
   }
 
-  /** Eagerly checkpoint several INDEPENDENT frames at once: Spark
-    * happily runs jobs submitted from separate driver threads in
-    * parallel (the idle-capacity overlap every A/B here confirmed),
-    * while sequential eager checkpoints serialize pipelines a single
-    * lazy DAG would have overlapped. Values are unaffected — each
-    * frame materializes exactly once either way.
-    *
-    * STABLE checkpoints (graft.util.Checkpoints): these frames feed
-    * the query result, and a lineage-free executor block
-    * (localCheckpoint) dies with its executor on a real cluster — on
-    * a cluster master the materialization routes through reliable
-    * checkpoint files; locally it keeps the cheaper memory blocks.
-    * The worker threads inherit the caller's job group / description /
-    * scheduler pool (local properties are thread-local, so a bare
-    * Future would otherwise break cancellation and fair-pool routing),
-    * and the await is FINITE — a hung materialization fails the query
-    * instead of hanging it forever.
-    */
-  private def checkpointConcurrently(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    if (dfs.isEmpty) return Nil
-    val sc = dfs.head.sparkSession.sparkContext
-    // nulls included — clears a reused pool thread's stale properties
-    // (same rationale as graft.util.DriverPar)
-    val inherit = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel", "spark.scheduler.pool")
-      .map(k => k -> sc.getLocalProperty(k))
-    Await.result(
-      Future.sequence(dfs.map(df => Future {
-        inherit.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-        graft.util.Checkpoints.ReliableOps(df).stableCheckpoint()
-      })),
-      Duration(30, java.util.concurrent.TimeUnit.MINUTES))
-  }
-
   /** Exact Jaccard verification of candidate pairs against shingle sets. */
   def verifyJaccard(pairs: DataFrame, shingled: DataFrame, threshold: Double): DataFrame = {
     val s1 = shingled.select(col("doc_id").as("id1"), col("shingles").as("sh1"))
@@ -451,9 +414,10 @@ object Dedup {
       // CONCURRENTLY: the two pipelines are independent, and two
       // sequential eager checkpoints serialized stages the old
       // single-DAG form overlapped (measured +1 s steady at sf0.1).
-      val Seq(lsh, exact) = checkpointConcurrently(Seq(
+      val Seq(lsh, exact) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
         minHashDedup(sh, perms = 64, rowsPerBand = 4, threshold = 0.5),
-        jaccardExactPairs(docs).select(col("id1"), col("id2"))))
+        jaccardExactPairs(docs).select(col("id1"), col("id2")))
+        .map(df => () => graft.util.Checkpoints.ReliableOps(df).stableCheckpoint()))
       val tp = lsh.join(exact, Seq("id1", "id2"), "left_semi")
       lsh.agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("id1")).as("n_docs_with_dup"),
@@ -516,10 +480,11 @@ object Dedup {
       val sh = charShingles(docs, 5)
       // same pair-table checkpoint + concurrent-materialization
       // rationale as dedup_minhash (29 executed scans before)
-      val Seq(lsh, exact) = checkpointConcurrently(Seq(
+      val Seq(lsh, exact) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
         minHashDedup(sh, perms = 64, rowsPerBand = 8, threshold = 0.7)
           .select(col("id1"), col("id2"), col("jaccard")),
-        charJaccardExactPairs(docs).select(col("id1"), col("id2"))))
+        charJaccardExactPairs(docs).select(col("id1"), col("id2")))
+        .map(df => () => graft.util.Checkpoints.ReliableOps(df).stableCheckpoint()))
       val tp = lsh.join(exact, Seq("id1", "id2"), "left_semi")
       lsh.agg(count(lit(1)).as("n_pairs_lsh"),
           coalesce(round(avg(col("jaccard")), 4), lit(0.0)).as("avg_jaccard"))
@@ -985,18 +950,11 @@ object Dedup {
   // tiering so maintenance never pays a full-index rewrite per cycle.
   // Exactly-once folds ride the manifest's committed-batch state; a
   // crashed writer leaves only unreferenced dirs vacuum collects.
-  // (The former rename-based protocol — staged dirs promoted under
-  // marker files with OS-lock leases, graft.util.IndexCommit — is
-  // retired: proven bit-identical and perf-equal first, SCALE.md
-  // §Rounds 13-15. Legacy rename indexes adopt zero-copy via
-  // migrateMinHashIndexToManifest / JobRunner index_migrate.)
 
   def saveMinHashIndex(docs: DataFrame, indexDir: String, shingleW: Int = 5,
-                       perms: Int = 64, rowsPerBand: Int = 4,
-                       protocol: graft.util.CommitProtocol =
-                         graft.util.CommitProtocol.Auto): Unit = {
-    val conf = docs.sparkSession.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.forBuild(conf, indexDir, protocol)
+                       perms: Int = 64, rowsPerBand: Int = 4): Unit = {
+    graft.util.ManifestCommit.assertPublishable(
+      docs.sparkSession.sessionState.newHadoopConf(), indexDir)
     saveMinHashManifest(docs, indexDir, shingleW, perms, rowsPerBand)
   }
 
@@ -1024,10 +982,10 @@ object Dedup {
   // maintenance step writes FRESH data dirs and publishes ONE new
   // manifest (graft.util.ManifestCommit), so the protocol needs no
   // renames, no OS locks, and no marker recovery: exactly what an
-  // S3-class store offers. Probes resolve a manifest SNAPSHOT, which
-  // deletes the rename protocol's probe-vs-compaction scheduling
-  // caveat outright. Level-1 runs are flat (band, bmod, bucket)-sorted
-  // files pruned by parquet footer stats (TieredIndex.layFlatSorted).
+  // S3-class store offers. Probes resolve a manifest SNAPSHOT, so no
+  // probe ever needs scheduling against compaction. Level-1 runs are
+  // flat (band, bmod, bucket)-sorted files pruned by parquet footer
+  // stats (TieredIndex.layFlatSorted).
 
   import graft.util.{ManifestCommit, ManifestTiered}
 
@@ -1037,8 +995,8 @@ object Dedup {
     val spark = docs.sparkSession
     val conf = spark.sessionState.newHadoopConf()
     // meta marker first: a reader that can resolve the manifest must
-    // always find the params file (between the two writes the index
-    // reads as empty, which is the honest mid-build state)
+    // always find the params file (between the two writes a first
+    // build has no manifest yet, so probes fail with "no index")
     writeIndexMeta(spark, indexDir, shingleW, perms, rowsPerBand)
     val banded = bandedSignatures(docs, shingleW, perms, rowsPerBand).persist()
     try {
@@ -1057,12 +1015,6 @@ object Dedup {
         tables = Map("bands" -> Seq(bd), "widths" -> Seq(wd)),
         committed = Map.empty, writers = Map.empty, floor = 0L)); ()
     } finally { banded.unpersist(blocking = false); () }
-    // protocol-crossing REBUILD (Auto resolves manifest): the old
-    // rename tree is unreachable now that the manifest is published —
-    // delete it AFTER the publish, so a crash mid-build leaves readers
-    // serving the old rename index instead of nothing (a crash in the
-    // gap merely leaks the tree until the next rebuild's pass here)
-    ManifestTiered.clearRenameLayout(conf, indexDir, Seq("bands", "widths"))
   }
 
   private def appendMinHashManifest(banded0: DataFrame, indexDir: String,
@@ -1070,7 +1022,6 @@ object Dedup {
                                     expectMeta: String): Unit = {
     val conf = banded0.sparkSession.sessionState.newHadoopConf()
     val m = ManifestCommit.current(conf, indexDir)
-    ManifestTiered.assertAdopted(conf, indexDir, m, "bands")
     if (batchId.exists(m.isCommitted)) return
     val banded = banded0.persist()
     try appendAtManifest(banded, indexDir, m, batchId, commuting = true,
@@ -1177,29 +1128,18 @@ object Dedup {
           .select(col("bucket"), col("bw"), col("aid"), col("band"), col("bmod")))))
   }
 
-  /** Zero-copy migration of a rename-protocol MinHash index onto the
-    * versioned-manifest protocol (see ManifestTiered.adoptRenameTiered
-    * for the adoption semantics) — the operational path from a local
-    * index to the object-store deployment: copy the tree, adopt where
-    * it lands, and every future maintenance step runs manifest-side.
-    * The params meta marker is shared by both protocols and carries
-    * over untouched; committed batch ids carry over too.
+  /** The params meta marker's text; a missing marker throws with
+    * `ifMissing` appended to the "no marker" message.
     */
-  def migrateMinHashIndexToManifest(spark: SparkSession,
-                                    indexDir: String): Unit = {
-    readIndexMetaText(spark, indexDir) // fail loudly on an unknown layout
-    ManifestTiered.adoptRenameTiered(spark, indexDir,
-      tiered = Seq("bands" -> BandsSchema, "widths" -> WidthsSchema),
-      plain = Nil); ()
-  }
-
-  private def readIndexMetaText(spark: SparkSession, indexDir: String): String = {
+  private def readIndexMetaText(spark: SparkSession, indexDir: String,
+                                ifMissing: String =
+                                  "; refusing to compact an unrecognized layout.")
+      : String = {
     val fs = indexMetaPath(indexDir).getFileSystem(
       spark.sessionState.newHadoopConf())
     if (!fs.exists(indexMetaPath(indexDir)))
       throw new IllegalStateException(
-        s"MinHash index at $indexDir has no _graft_minhash_meta marker; " +
-          s"refusing to compact an unrecognized layout.")
+        s"MinHash index at $indexDir has no _graft_minhash_meta marker$ifMissing")
     val in = fs.open(indexMetaPath(indexDir))
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
@@ -1243,19 +1183,10 @@ object Dedup {
   private def validateIndexMeta(spark: SparkSession, indexDir: String,
                                 shingleW: Int, perms: Int, rowsPerBand: Int,
                                 verb: String): Unit = {
-    val fs = indexMetaPath(indexDir).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    if (!fs.exists(indexMetaPath(indexDir)))
-      throw new IllegalStateException(
-        s"MinHash index at $indexDir has no _graft_minhash_meta marker: it was " +
-          s"built by an older binary with an unknown hash family — $verb it " +
-          s"would silently break (empty probes / a poisoned index). " +
-          s"Rebuild with saveMinHashIndex.")
-    val meta = {
-      val in = fs.open(indexMetaPath(indexDir))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
+    val meta = readIndexMetaText(spark, indexDir,
+      s": it was built by an older binary with an unknown hash family — " +
+        s"$verb it would silently break (empty probes / a poisoned " +
+        s"index). Rebuild with saveMinHashIndex.")
     val expect = minHashMeta(shingleW, perms, rowsPerBand)
     if (meta != expect)
       throw new IllegalStateException(
@@ -1268,14 +1199,14 @@ object Dedup {
   /** Fold a NEW batch's signatures into an existing MinHash index —
     * the cross-crawl maintenance arm (MinHash's counterpart of the IVF
     * `ann_index_update` and the BM25 delta fold): crawl N+1's
-    * signatures land as delta part-files inside the SAME (band, bmod)
-    * partition dirs, so the index grows by exactly the batch's
-    * ~0.5 KB/doc and the dominant bytes are never rewritten; the widths
-    * sidecar gets matching delta rows in the same commit. The marker is
-    * validated FIRST — appending signatures from a different hash
-    * family/banding would poison every later probe. With a `batchId`,
-    * the append is retry-idempotent: a batch already recorded under
-    * committed/ is a no-op. doc_id novelty is upstream's contract, same
+    * signatures land as one flat tail dir, so the index grows by
+    * exactly the batch's ~0.5 KB/doc and the dominant bytes are never
+    * rewritten; the widths sidecar gets matching delta rows in the
+    * same manifest publish. The marker is validated FIRST — appending
+    * signatures from a different hash family/banding would poison
+    * every later probe. With a `batchId`, the append is
+    * retry-idempotent: a batch already committed in the resolved
+    * snapshot is a no-op. doc_id novelty is upstream's contract, same
     * as [[dedupAgainstMinHashIndex]].
     */
   def appendMinHashIndex(newDocs: DataFrame, indexDir: String,
@@ -1284,7 +1215,7 @@ object Dedup {
                          batchId: Option[String] = None): Unit = {
     validateIndexMeta(newDocs.sparkSession, indexDir,
       shingleW, perms, rowsPerBand, "appending")
-    graft.util.CommitProtocol.requireManifest(
+    graft.util.ManifestCommit.requireIndex(
       newDocs.sparkSession.sessionState.newHadoopConf(), indexDir,
       "appendMinHashIndex")
     appendMinHashManifest(
@@ -1299,20 +1230,10 @@ object Dedup {
     * estimator. Returns (new_id, idx_id, est_jaccard) for pairs estimated
     * ≥ `threshold`.
     *
-    * READ-ONLY — deliberately runs no crash recovery, so concurrent
-    * probes can never destroy a writer's staged delta (a recovery that
-    * dropped unmarked staging under a writer between its parquet writes
-    * and its marker would record the batch's token over ZERO appended
-    * rows). The read-isolation contract: staged-but-uncommitted rows are
-    * invisible, and a crash-interrupted commit becomes visible when the
-    * next MAINTENANCE call (append / probe-and-append / compact) runs
-    * its recovery. Probes may run concurrently with APPENDS (the
-    * worst-case race reads a promoted bands file before its widths
-    * sibling and UNDER-counts a width, which only widens the candidate
-    * set) but NOT with compaction: its multi-dir publish can
-    * transiently double-count widths across a promoted run and the
-    * not-yet-emptied tail, and the anchor-only filter would then drop
-    * real candidates — see compactMinHashIndex's scheduling note.
+    * READ-ONLY: the probe resolves ONE manifest snapshot, so dirs a
+    * concurrent append or compaction has laid but not yet published
+    * are invisible to it, and bands and widths always come from the
+    * same tier state.
     *
     * The batch's signatures — the dominant per-batch CPU (tokenize →
     * shingle → 64-bin OPH) — are computed ONCE via an eager
@@ -1327,8 +1248,7 @@ object Dedup {
     */
   /** `asOfGen`: probe a RETAINED HISTORICAL generation instead of the
     * current snapshot (ManifestCommit.atGeneration — audit reruns,
-    * A/B-ing a crawl's contribution). Manifest protocol only: the
-    * rename protocol mutates dirs in place and has no history.
+    * A/B-ing a crawl's contribution).
     */
   def dedupAgainstMinHashIndex(newDocs: DataFrame, indexDir: String,
                                shingleW: Int = 5, perms: Int = 64,
@@ -1338,7 +1258,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     validateIndexMeta(spark, indexDir, shingleW, perms, rowsPerBand, "probing")
     val conf = spark.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, indexDir,
+    graft.util.ManifestCommit.requireIndex(conf, indexDir,
       "dedupAgainstMinHashIndex")
     val banded =
       bandedSignatures(newDocs, shingleW, perms, rowsPerBand).localCheckpoint()
@@ -1366,7 +1286,7 @@ object Dedup {
     * responsibility.
     *
     * Scale shape: the batch's DISTINCT (band, bmod) set — bounded by
-    * nBands × MinHashBucketMods (≤1024 at the defaults), a bounded
+    * nBands × MinHashBucketMods (≤64 at the defaults), a bounded
     * driver collect — pushes as a static partition filter on BOTH the
     * bands read and the widths read, so the probe scans only the index
     * partitions the batch can collide with; a broadcast SEMI-join on
@@ -1421,8 +1341,8 @@ object Dedup {
     // (band, bmod, bucket)-sorted level-1 runs and tail skip row
     // groups instead of being scanned whole per probe.
     // FULL-COVERAGE batches (every (band, bmod) pair touched — any
-    // maintenance-scale batch: ≥~80 docs hits all nBands×16 pairs)
-    // skip the filter outright: it prunes nothing, its ~1k literals
+    // maintenance-scale batch hits all nBands × MinHashBucketMods pairs)
+    // skip the filter outright: it prunes nothing, its literals
     // are evaluated against every index row, and — the expensive part
     // — the literal set varies per batch, so every micro-batch probe
     // planned a UNIQUE stage and paid a fresh whole-stage-codegen
@@ -1533,7 +1453,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     validateIndexMeta(spark, indexDir, shingleW, perms, rowsPerBand, "maintaining")
     val conf = spark.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, indexDir,
+    graft.util.ManifestCommit.requireIndex(conf, indexDir,
       "probeAndAppendMinHashIndex")
     // hits ALWAYS land under a batch_id partition — mixing flat and
     // partitioned layouts in one hitsOut dir is a read-time error
@@ -1600,7 +1520,7 @@ object Dedup {
   def compactMinHashIndex(spark: SparkSession, indexDir: String,
                           vacuumKeep: Option[Int] = None): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, indexDir,
+    graft.util.ManifestCommit.requireIndex(conf, indexDir,
       "compactMinHashIndex")
     compactMinHashManifest(spark, indexDir)
     vacuumKeep.foreach(k => ManifestCommit.vacuum(conf, indexDir, keepGens = k))
@@ -1613,7 +1533,7 @@ object Dedup {
     */
   def compactionTiers(spark: SparkSession, indexDir: String)
       : (String, graft.util.TieredIndex.TierSizes) = {
-    graft.util.CommitProtocol.requireManifest(
+    graft.util.ManifestCommit.requireIndex(
       spark.sessionState.newHadoopConf(), indexDir, "compactionTiers")
     val m = ManifestCommit.current(
       spark.sessionState.newHadoopConf(), indexDir)
@@ -1645,7 +1565,7 @@ object Dedup {
     * empty-seeded index has zero part files and inference would throw.
     */
   def indexBandCounts(spark: SparkSession, indexDir: String): DataFrame = {
-    graft.util.CommitProtocol.requireManifest(
+    graft.util.ManifestCommit.requireIndex(
       spark.sessionState.newHadoopConf(), indexDir, "indexBandCounts")
     val m = ManifestCommit.current(
       spark.sessionState.newHadoopConf(), indexDir)
@@ -1808,7 +1728,7 @@ object Dedup {
           java.nio.file.Paths.get(v._1).getParent.toString)) {
           val rt = java.nio.file.Files.createTempDirectory("graft_dic").toString
           saveMinHashIndex(docs.filter(pmod(col("doc_id"), lit(4L)) <= 1L),
-            s"$rt/work", protocol = graft.util.CommitProtocol.Manifest)
+            s"$rt/work")
           appendMinHashIndex(docs.filter(pmod(col("doc_id"), lit(4L)) === 2L),
             s"$rt/work", batchId = Some("crawl-2"))
           (s"$rt/work", ManifestCommit.current(conf, s"$rt/work").gen)
@@ -1876,8 +1796,8 @@ object Dedup {
 
   /** The SAME maintenance arm as dedup_index_compact, run on the
     * versioned-manifest (object-store) commit protocol: build crawls
-    * 0-1 with `protocol = Manifest`, fold crawl 2's appended tail
-    * (Minor — one flat sorted run, one manifest publish), probe crawl
+    * 0-1, fold crawl 2's appended tail (Minor — one flat sorted run,
+    * one manifest publish), probe crawl
     * 3 against the compacted index. The oracle is dedup_index_compact's
     * static replay verbatim — the commit protocol must be invisible to
     * retrieval, hash-checked. Each invocation rewinds the index to the
@@ -1896,7 +1816,7 @@ object Dedup {
           java.nio.file.Paths.get(v._1).getParent.toString)) {
           val rt = java.nio.file.Files.createTempDirectory("graft_dim").toString
           saveMinHashIndex(docs.filter(pmod(col("doc_id"), lit(4L)) <= 1L),
-            s"$rt/work", protocol = graft.util.CommitProtocol.Manifest)
+            s"$rt/work")
           appendMinHashIndex(docs.filter(pmod(col("doc_id"), lit(4L)) === 2L),
             s"$rt/work", batchId = Some("crawl-2"))
           (s"$rt/work", ManifestCommit.current(conf, s"$rt/work").gen)
@@ -1956,7 +1876,7 @@ object Dedup {
           java.nio.file.Paths.get(v._1).getParent.toString)) {
         val rt = java.nio.file.Files.createTempDirectory("graft_dtt").toString
         saveMinHashIndex(docs.filter(pmod(col("doc_id"), lit(4L)) <= 1L),
-          s"$rt/work", protocol = graft.util.CommitProtocol.Manifest)
+          s"$rt/work")
         val g = ManifestCommit.current(conf, s"$rt/work").gen
         appendMinHashIndex(docs.filter(pmod(col("doc_id"), lit(4L)) === 2L),
           s"$rt/work", batchId = Some("crawl-2"))

@@ -37,23 +37,7 @@ final case class JobCli(
     maxDupFrac: Option[Double] = None,
     mainContent: Boolean = false,
     topK: Int = 20,
-    asOfGeneration: Option[Long] = None,
-    commitProtocol: String = "auto") {
-
-  /** Index-build commit protocol: `auto` resolves the versioned-
-    * manifest protocol for every NEW build. `rename` still parses —
-    * the build then fails with the retirement pointer (index_migrate)
-    * instead of an unknown-flag error; legacy rename indexes are
-    * read-only until adopted.
-    */
-  def indexProtocol: graft.util.CommitProtocol = commitProtocol match {
-    case "manifest" => graft.util.CommitProtocol.Manifest
-    case "rename" => graft.util.CommitProtocol.Rename
-    case "auto" => graft.util.CommitProtocol.Auto
-    case other => sys.error(
-      s"--commit_protocol must be auto|manifest, got '$other' " +
-        s"(rename is retired — see index_migrate)")
-  }
+    asOfGeneration: Option[Long] = None) {
 
   /** `--output_option vacuum_keep=K` on the compaction verbs: run the
     * manifest vacuum inline after the fold, retaining the newest K
@@ -116,14 +100,9 @@ object JobCli {
       |           default = digest of input path + its file listing]) |
       |        ann_index_compact (input = INDEX_DIR: tiered tail fold;
       |          [--output_option vacuum_keep=K: inline generation GC]) |
-      |        index_vacuum (input = MANIFEST-protocol INDEX_DIR:
-      |                GC superseded generations; --output_option keep=K
+      |        index_vacuum (input = INDEX_DIR: GC superseded
+      |                generations; --output_option keep=K
       |                grace_minutes=M) |
-      |        index_migrate (input = legacy RENAME-protocol INDEX_DIR:
-      |                zero-copy adoption onto the manifest protocol —
-      |                required before any probe/maintenance of one;
-      |                rename builds are retired) — index builds take
-      |                [--commit_protocol auto|manifest] |
       |        datacard | heavy_hitters (--top_k K) | chunk | funnel | dq |
       |        compact (--output_option target_mb=N
       |                 --output_option zorder=colA,colB: Morton-clustered
@@ -193,7 +172,6 @@ object JobCli {
         case "--batch_id"      => cli = cli.copy(batchId = Some(value))
         case "--as_of_generation" =>
           cli = cli.copy(asOfGeneration = Some(value.toLong))
-        case "--commit_protocol" => cli = cli.copy(commitProtocol = value)
         case "--max_dup_frac"  => cli = cli.copy(maxDupFrac = Some(value.toDouble))
         case "--main_content"  => cli = cli.copy(mainContent = true)
         case "--top_k"         => cli = cli.copy(topK = value.toInt)
@@ -391,8 +369,7 @@ object JobRunner {
         // re-reading its text
         {
           val docs = spark.read.parquet(cli.input)
-          graft.dedup.Dedup.saveMinHashIndex(docs, s"${cli.output}/minhash",
-            protocol = cli.indexProtocol)
+          graft.dedup.Dedup.saveMinHashIndex(docs, s"${cli.output}/minhash")
           graft.dedup.BloomDedup.saveDigestIndex(docs, s"${cli.output}/exact")
           spark.read.parquet(s"${cli.output}/exact/digests")
         }
@@ -411,7 +388,7 @@ object JobRunner {
           exact.repartition(cli.outParts)
             .write.mode("overwrite").parquet(s"${cli.output}/exact")
           // --as_of_generation N probes a retained historical snapshot of
-          // the near-dup index (manifest protocol only)
+          // the near-dup index
           graft.dedup.Dedup.dedupAgainstMinHashIndex(newDocs, s"$idx/minhash",
               asOfGen = cli.asOfGeneration)
             .repartition(cli.outParts)
@@ -423,8 +400,7 @@ object JobRunner {
         // bucketed — text/InvertedIndex.scala): build once over a
         // documents parquet dir, probe many times without the corpus
         {
-          graft.text.InvertedIndex.save(spark.read.parquet(cli.input),
-            cli.output, protocol = cli.indexProtocol)
+          graft.text.InvertedIndex.save(spark.read.parquet(cli.input), cli.output)
           graft.text.InvertedIndex.readStats(spark, cli.output)
         }
       case "bm25_index_probe" =>
@@ -450,7 +426,7 @@ object JobRunner {
         // parameter mismatch before any write. Typical cadence: probe
         // (dedup_index_probe), drop the hits, then update with the kept.
         // --batch_id <token> makes a re-driven update a no-op (the
-        // committed/ token protocol) — pass one from any retrying
+        // manifest's committed batch ids) — pass one from any retrying
         // orchestrator.
         {
           require(cli.addInputs.nonEmpty,
@@ -460,47 +436,17 @@ object JobRunner {
             batchId = cli.batchId)
           graft.dedup.Dedup.indexBandCounts(spark, s"${cli.addInputs.head}/minhash")
         }
-      case "index_migrate" =>
-        // input = a RENAME-protocol index dir (the minhash dir from
-        // dedup_index_build, a bm25_index_build dir, or an
-        // ann_index_build dir — kind inferred from its artifacts).
-        // Zero-copy adoption onto the manifest protocol: no data byte
-        // rewritten, committed batch ids carried over; the operational
-        // path from a local index to an object-store deployment (copy
-        // the tree, migrate where it lands).
-        {
-          val conf = spark.sessionState.newHadoopConf()
-          val fs = new org.apache.hadoop.fs.Path(cli.input).getFileSystem(conf)
-          def has(n: String) =
-            fs.exists(new org.apache.hadoop.fs.Path(cli.input, n))
-          if (has("_graft_minhash_meta"))
-            graft.dedup.Dedup.migrateMinHashIndexToManifest(spark, cli.input)
-          else if (has("postings"))
-            graft.text.InvertedIndex.migrateToManifest(spark, cli.input)
-          else if (has("vectors") && has("centroids"))
-            graft.vector.VectorOps.migrateIvfIndexToManifest(spark, cli.input)
-          else sys.error(s"index_migrate: ${cli.input} is not a recognized " +
-            s"index layout (expected a minhash, bm25, or ivf index dir)")
-          val m = graft.util.ManifestCommit.current(conf, cli.input)
-          import spark.implicits._
-          m.tables.toSeq.sortBy(_._1)
-            .map { case (t, dirs) => (t, dirs.size.toLong, m.rows(t)) }
-            .toDF("table", "n_dirs", "n_rows")
-        }
       case "index_vacuum" =>
-        // input = a MANIFEST-protocol index dir (any of the three
-        // families built with --commit_protocol manifest, or on an
-        // object store). Garbage-collects data dirs no retained
-        // manifest references and manifests older than the keep
-        // window. --output_option keep=K (default 2) sizes the window
-        // to the longest-running reader (snapshot isolation);
+        // input = an index dir (any of the three families).
+        // Garbage-collects data dirs no retained manifest references
+        // and manifests older than the keep window. --output_option
+        // keep=K (default 2) sizes the window to the longest-running
+        // reader (snapshot isolation);
         // --output_option grace_minutes=M (default 60) protects a live
         // writer's laid-but-unpublished dirs.
         {
           val conf = spark.sessionState.newHadoopConf()
-          require(graft.util.ManifestCommit.exists(conf, cli.input),
-            s"index_vacuum expects a manifest-protocol index at ${cli.input} " +
-              s"(rename-protocol indexes have no superseded generations to GC)")
+          graft.util.ManifestCommit.requireIndex(conf, cli.input, "index_vacuum")
           val keep = cli.outputOptions.get("keep").map(_.toInt).getOrElse(2)
           val graceMs = cli.outputOptions.get("grace_minutes").map(_.toLong)
             .getOrElse(60L) * 60 * 1000
@@ -553,8 +499,7 @@ object JobRunner {
           graft.text.InvertedIndex.appendDelta(
             spark.read.parquet(cli.input), cli.addInputs.head,
             batchId = Some(cli.batchId.getOrElse(inputDigestBatchId(spark, cli.input))))
-          // protocol-aware: a manifest index has no physical stats/ dir
-          // (and a migrated one's legacy dir is vacuumed away)
+          // a manifest index has no physical stats/ dir
           graft.text.InvertedIndex.readStats(spark, cli.addInputs.head)
         }
       case "scd2_build" =>
@@ -671,7 +616,7 @@ object JobRunner {
           val n = c.count()
           val k = math.min(256L, math.max(4L, math.round(math.sqrt(n.toDouble)))).toInt
           graft.vector.PqOps.savePqIndex(c, cli.output, k = k, iters = 2,
-            nKnown = Some(n), protocol = cli.indexProtocol)
+            nKnown = Some(n))
           graft.vector.VectorOps.loadIvfIndex(spark, cli.output).centroids
         }
       case "ann_index_update" =>
@@ -724,27 +669,16 @@ object JobRunner {
           val idxDir = cli.addInputs.head
           val q = spark.read.parquet(cli.input)
             .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-          // scheme-agnostic (local, hdfs://, s3a://, file:, ...): resolve
-          // through the path's own FileSystem, the BloomDedup pattern —
-          // a java.io.File probe would silently fall back to flat
-          // probing for any remote index
+          // codes live under data/codes/d-* (no physical codes/ dir):
+          // decide off the resolved snapshot (the AS-OF one when
+          // pinned: a generation before the codes landed must probe
+          // flat)
           val hasPq = {
             val conf = spark.sparkContext.hadoopConfiguration
-            if (graft.util.ManifestCommit.exists(conf, idxDir)) {
-              // a manifest index keeps codes under data/codes/d-* (no
-              // physical codes/ dir), and a migrated index's legacy
-              // codes/ dir is vacuumed once superseded — decide off the
-              // resolved snapshot (the AS-OF one when pinned: a
-              // generation before the codes landed must probe flat),
-              // so probe mode is protocol-invisible
-              val m = cli.asOfGeneration
-                .map(g => graft.util.ManifestCommit.atGeneration(conf, idxDir, g))
-                .getOrElse(graft.util.ManifestCommit.current(conf, idxDir))
-              m.entries("codes").nonEmpty || m.entries("codes.tail").nonEmpty
-            } else {
-              val p = new org.apache.hadoop.fs.Path(s"$idxDir/codes")
-              p.getFileSystem(conf).exists(p)
-            }
+            val m = cli.asOfGeneration
+              .map(g => graft.util.ManifestCommit.atGeneration(conf, idxDir, g))
+              .getOrElse(graft.util.ManifestCommit.current(conf, idxDir))
+            m.entries("codes").nonEmpty || m.entries("codes.tail").nonEmpty
           }
           println(s"[graft] ann_index_probe mode=${if (hasPq) "pq" else "flat"}")
           val topk =

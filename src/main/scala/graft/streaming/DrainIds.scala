@@ -71,43 +71,14 @@ object DrainIds {
   /** The batch id to fold `batchId` under, or None when the batch is
     * already committed and the whole probe+append must be skipped
     * (its hit partition, keyed on the batch number, already landed on
-    * the first attempt).
-    *
-    * On a manifest index a batch counts as committed under ANY of its
-    * sequenced id, its pre-migration legacy free-form id `b<batchId>`
-    * (the form a rename-era drain committed and index_migrate carried
-    * over), or the reserved [[graft.util.ManifestTiered
-    * .LegacyDrainWriter]] watermark adoption seeded from the highest
-    * carried `b<N>` — the age-proof form: the free-form ids prune out
-    * of the committed window eventually, the watermark never does, so
-    * a pre-migration replay no-ops at any age. Without these checks, a
-    * batch whose rename-side token landed but whose stream checkpoint
-    * epoch did not would replay post-migration under the fresh writer
-    * watermark (empty), read as uncommitted, and double-fold into the
-    * index.
+    * the first attempt). A dir with no index fails loudly here, before
+    * any per-batch work is spent.
     */
   def pending(conf: Configuration, indexDir: String, checkpointDir: String,
               batchId: Long): Option[String] = {
-    val legacy = s"b$batchId"
-    if (ManifestCommit.exists(conf, indexDir)) {
-      val m = ManifestCommit.current(conf, indexDir)
-      val bid = ManifestCommit.seqBatchId(writerFor(conf, checkpointDir), batchId)
-      if (m.isCommitted(bid) || m.isCommitted(legacy) ||
-          m.isCommitted(ManifestCommit.seqBatchId(
-            graft.util.ManifestTiered.LegacyDrainWriter, batchId)))
-        None
-      else Some(bid)
-    } else {
-      // a legacy rename-protocol index cannot take drains (the rename
-      // maintenance bodies are retired) — the fold this id feeds would
-      // fail the same way, but failing HERE names the fix before any
-      // per-batch work is spent
-      throw new IllegalStateException(
-        s"streaming drain into $indexDir: the index runs the RETIRED " +
-          s"rename commit protocol. Adopt it zero-copy (JobRunner " +
-          s"index_migrate / the index's migrate*ToManifest API) before " +
-          s"pointing a drain at it — rename-era b<N> batch tokens carry " +
-          s"over, so already-committed batches stay no-ops.")
-    }
+    ManifestCommit.requireIndex(conf, indexDir, "streaming drain")
+    val bid = ManifestCommit.seqBatchId(writerFor(conf, checkpointDir), batchId)
+    if (ManifestCommit.current(conf, indexDir).isCommitted(bid)) None
+    else Some(bid)
   }
 }

@@ -52,16 +52,14 @@ object InvertedIndex {
     * text — costs one compact (term, doc_id, dl, tf) materialization
     * and pays the corpus scan exactly once per build.
     */
-  def save(docs: DataFrame, dir: String,
-           protocol: graft.util.CommitProtocol =
-             graft.util.CommitProtocol.Auto): Unit = {
-    val conf = docs.sparkSession.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.forBuild(conf, dir, protocol)
+  def save(docs: DataFrame, dir: String): Unit = {
+    graft.util.ManifestCommit.assertPublishable(
+      docs.sparkSession.sessionState.newHadoopConf(), dir)
     saveManifest(docs, dir)
   }
 
   /** One tokenize pass → (term, doc_id, dl, tf, bucket) — shared by
-    * build and delta fold on both commit protocols.
+    * build and delta fold.
     */
   private def tokenizedPostings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -88,10 +86,10 @@ object InvertedIndex {
   // Tables: `postings` tiered (base partitioned by bucket; flat sorted
   // L1 runs; flat tail), `terms` and `stats` replaced wholesale on
   // every fold — the pair rides the SAME publish as the postings
-  // delta, so new-terms/old-stats can never co-exist (the atomicity
-  // the rename protocol needs a marker for, a single manifest file
-  // gives outright). Probes resolve one snapshot — compaction and
-  // vacuum are invisible to them by construction.
+  // delta, so new-terms/old-stats can never co-exist (a single
+  // manifest file gives that atomicity outright). Probes resolve one
+  // snapshot — compaction and vacuum are invisible to them by
+  // construction.
 
   import graft.util.{ManifestCommit, ManifestTiered}
 
@@ -118,12 +116,6 @@ object InvertedIndex {
           "stats" -> Seq(sd)),
         committed = Map.empty, writers = Map.empty, floor = 0L)); ()
     } finally postings.unpersist(blocking = false)
-    // protocol-crossing rebuild: drop the now-unreachable rename tree
-    // AFTER the publish (readers keep serving the old rename index
-    // until the manifest lands; a crash in the gap only leaks the
-    // tree until the next rebuild's pass here)
-    ManifestTiered.clearRenameLayout(conf, dir,
-      Seq("postings", "terms", "stats"))
   }
 
   private def appendDeltaManifest(deltaDocs: DataFrame, dir: String,
@@ -142,7 +134,6 @@ object InvertedIndex {
     val s = deltaDocs.sparkSession
     val conf = s.sessionState.newHadoopConf()
     val m = ManifestCommit.current(conf, dir)
-    ManifestTiered.assertAdopted(conf, dir, m, "postings")
     // folding into a NEVER-BUILT dir would publish a real postings
     // tail next to a ZERO-row stats table — every later probe would
     // silently return empty top-k (the stats crossJoin yields nothing)
@@ -241,7 +232,7 @@ object InvertedIndex {
             asOfGen: Option[Long] = None): DataFrame = {
     import s.implicits._
     val conf = s.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, dir,
+    ManifestCommit.requireIndex(conf, dir,
       "InvertedIndex.probe")
     val m = asOfGen.map(g => ManifestCommit.atGeneration(conf, dir, g))
       .getOrElse(ManifestCommit.current(conf, dir))
@@ -280,9 +271,7 @@ object InvertedIndex {
   // (footer-stat pruned), `postings.tail` holds the fold deltas flat.
   // Every fold also replaces the vocabulary-sized `terms` + 1-row
   // `stats` pair in the SAME manifest publish, so a probe can never
-  // see new-terms/old-stats. (The rename-protocol bodies — staged
-  // dirs + markers + leases — are retired; legacy indexes adopt via
-  // [[migrateToManifest]] / JobRunner index_migrate.)
+  // see new-terms/old-stats.
 
   /** Incremental maintenance: fold a DELTA corpus into an existing
     * index without re-reading the indexed corpus. doc_ids must be new
@@ -305,7 +294,7 @@ object InvertedIndex {
     */
   def appendDelta(deltaDocs: DataFrame, dir: String,
                   batchId: Option[String] = None): Unit = {
-    graft.util.CommitProtocol.requireManifest(
+    ManifestCommit.requireIndex(
       deltaDocs.sparkSession.sessionState.newHadoopConf(), dir,
       "InvertedIndex.appendDelta")
     appendDeltaManifest(deltaDocs, dir, batchId)
@@ -332,28 +321,17 @@ object InvertedIndex {
   def compact(s: SparkSession, dir: String,
               vacuumKeep: Option[Int] = None): Unit = {
     val conf = s.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, dir,
+    ManifestCommit.requireIndex(conf, dir,
       "InvertedIndex.compact")
     compactManifest(s, dir)
     vacuumKeep.foreach(k => ManifestCommit.vacuum(conf, dir, keepGens = k))
-  }
-
-  /** Zero-copy migration of a rename-protocol BM25 index onto the
-    * versioned-manifest protocol (ManifestTiered.adoptRenameTiered):
-    * postings tiers referenced in place, terms/stats as plain tables,
-    * committed batch ids carried over.
-    */
-  def migrateToManifest(s: SparkSession, dir: String): Unit = {
-    ManifestTiered.adoptRenameTiered(s, dir,
-      tiered = Seq("postings" -> PostingsSchema),
-      plain = Seq("terms" -> TermsSchema, "stats" -> StatsSchema)); ()
   }
 
   /** The (n_docs, total_dl) stats row — the CLI verbs' bounded return
     * frame.
     */
   def readStats(s: SparkSession, dir: String): DataFrame = {
-    graft.util.CommitProtocol.requireManifest(
+    ManifestCommit.requireIndex(
       s.sessionState.newHadoopConf(), dir, "InvertedIndex.readStats")
     ManifestCommit.readTable(s, dir,
       ManifestCommit.current(s.sessionState.newHadoopConf(), dir),
@@ -366,7 +344,7 @@ object InvertedIndex {
     */
   def compactionTiers(s: SparkSession, dir: String)
       : (String, graft.util.TieredIndex.TierSizes) = {
-    graft.util.CommitProtocol.requireManifest(
+    ManifestCommit.requireIndex(
       s.sessionState.newHadoopConf(), dir, "InvertedIndex.compactionTiers")
     val m = ManifestCommit.current(s.sessionState.newHadoopConf(), dir)
     val sizes = ManifestTiered.sizes(s, dir, m, "postings", PostingsSchema)
@@ -494,9 +472,9 @@ object InvertedIndex {
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
   /** The bm25_index_compact_topk lifecycle on the versioned-manifest
-    * (object-store) commit protocol: 80% built with `protocol =
-    * Manifest`, 20% folded via the manifest appendDelta (postings tail
-    * + terms/stats replace in ONE publish), the tail Minor-folded into
+    * (object-store) commit protocol: 80% built, 20% folded via the
+    * manifest appendDelta (postings tail + terms/stats replace in ONE
+    * publish), the tail Minor-folded into
     * a flat sorted run, then probed. Oracle = the SAME full-corpus
     * BM25 SQL — the commit protocol must be invisible to retrieval,
     * hash-checked. Each invocation rewinds to the post-fold snapshot
@@ -513,8 +491,7 @@ object InvertedIndex {
         (v: (String, Long)) => graft.util.FileTrees.rmTree(v._1)) {
           val d = java.nio.file.Files.createTempDirectory("graft_bm25_mani").toString
           val docs = Tables(s, dir, "documents")
-          save(docs.filter(col("doc_id") % 5 =!= 0), d,
-            protocol = graft.util.CommitProtocol.Manifest)
+          save(docs.filter(col("doc_id") % 5 =!= 0), d)
           appendDelta(docs.filter(col("doc_id") % 5 === 0), d,
             batchId = Some("fold-1"))
           (d, ManifestCommit.current(conf, d).gen)

@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   * O(index) probe shuffle had never looked at the other two until r14:
   *
   *   MaintenanceCurve [minhash|bm25|ivf] [src] [nShards=12]
-  *                    [compactEvery=4] [manifest]
+  *                    [compactEvery=4]
   *
   * `src` = an sf dir (documents/embeddings tables) or a bare parquet
-  * dir with the right columns. `manifest` switches the index to the
-  * versioned-manifest commit protocol (object-store deployment).
+  * dir with the right columns.
   *
   * Two curves come out, one per claim:
   *  - per-batch fold wall must stay ~FLAT as the index deepens (the
@@ -72,10 +71,6 @@ object MaintenanceCurve {
     val src = rest.headOption.getOrElse("/root/testdata/sf0.1")
     val nShards = rest.lift(1).map(_.toInt).getOrElse(12)
     val compactEvery = rest.lift(2).map(_.toInt).getOrElse(4)
-    val protocol =
-      if (rest.contains("manifest") || args.contains("manifest"))
-        graft.util.CommitProtocol.Manifest
-      else graft.util.CommitProtocol.Auto
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"), "mnt-curve")
     spark.sparkContext.setLogLevel("WARN")
     val m = new Metrics
@@ -90,7 +85,7 @@ object MaintenanceCurve {
     ).persist()
     val nRows = data.count()
     println(s"[curve] mode=$mode corpus $src: $nRows rows, $nShards shards, " +
-      s"compact every $compactEvery, protocol=$protocol")
+      s"compact every $compactEvery")
 
     def shard(k: Int) = data.filter(pmod(col(idKey), lit(nShards.toLong)) === k.toLong)
 
@@ -110,7 +105,7 @@ object MaintenanceCurve {
       case "bm25" =>
         val terms = Seq("join", "vector", "filter", "dup", "the", "data")
         Ops(
-          seed = docs => graft.text.InvertedIndex.save(docs, idx, protocol),
+          seed = docs => graft.text.InvertedIndex.save(docs, idx),
           foldBatch = (docs, k) => graft.text.InvertedIndex.appendDelta(
             docs, idx, batchId = Some(s"crawl-$k")),
           probeSig = () => rowsSig(
@@ -123,7 +118,7 @@ object MaintenanceCurve {
           .cache()
         Ops(
           seed = vs => graft.vector.VectorOps.saveIvfIndex(
-            vs, idx, k = 64, iters = 2, protocol = protocol),
+            vs, idx, k = 64, iters = 2),
           foldBatch = (vs, k) => graft.vector.VectorOps.appendIvfIndex(
             vs, idx, batchId = Some(s"crawl-$k")),
           probeSig = () => rowsSig(graft.vector.VectorOps.annIvfIndexed(
@@ -132,8 +127,7 @@ object MaintenanceCurve {
           compact = () => graft.vector.VectorOps.compactIvfIndex(spark, idx))
       case _ =>
         Ops(
-          seed = docs => graft.dedup.Dedup.saveMinHashIndex(
-            docs, idx, protocol = protocol),
+          seed = docs => graft.dedup.Dedup.saveMinHashIndex(docs, idx),
           foldBatch = (docs, k) => graft.dedup.Dedup.probeAndAppendMinHashIndex(
             docs, idx, hits, batchId = Some(s"crawl-$k")),
           probeSig = () => rowsSig(
@@ -223,22 +217,19 @@ object MaintenanceCurve {
           s"compaction changed held-out probe: $refBefore vs $refAfter")
         probeRef = refAfter
         println(f"""[curve] {"stage":"compact","after_crawl":$k,"action":"$action","base_rows":${sizes.base},"l1_rows":${sizes.l1},"tail_rows":${sizes.tail},"runs":${sizes.runCount},"wall_s":$cw%.1f,"shuffle_mb":$compactShuffleMb%.1f,"files_before":$before,"files_after":$idxFiles,"probe_rows":${refAfter._1}}""")
-        // manifest protocol: GC on the same cadence production would —
-        // superseded generations' dirs otherwise accumulate unobserved
-        // for the whole drill, and the depth claim ("footprint follows
-        // the live tiers, not the fold history") goes unmeasured.
+        // GC on the same cadence production would — superseded
+        // generations' dirs otherwise accumulate unobserved for the
+        // whole drill, and the depth claim ("footprint follows the
+        // live tiers, not the fold history") goes unmeasured.
         // graceMs=0: a single-writer drill has no live racing writer
         // whose mid-publish lay the grace window exists to protect.
-        val conf = spark.sessionState.newHadoopConf()
-        if (graft.util.ManifestCommit.exists(conf, idx)) {
-          val (_, vw) = timed(graft.util.ManifestCommit.vacuum(
-            conf, idx, keepGens = 2, graceMs = 0L))
-          val refV = ops.probeSig()
-          clearLeaked()
-          require(refV == refAfter,
-            s"vacuum changed held-out probe: $refAfter vs $refV")
-          println(f"""[curve] {"stage":"vacuum","after_crawl":$k,"wall_s":$vw%.1f,"live_dirs":$dataDirs,"manifests":$manifestCount,"files_after":$idxFiles,"probe_rows":${refV._1}}""")
-        }
+        val (_, vw) = timed(graft.util.ManifestCommit.vacuum(
+          spark.sessionState.newHadoopConf(), idx, keepGens = 2, graceMs = 0L))
+        val refV = ops.probeSig()
+        clearLeaked()
+        require(refV == refAfter,
+          s"vacuum changed held-out probe: $refAfter vs $refV")
+        println(f"""[curve] {"stage":"vacuum","after_crawl":$k,"wall_s":$vw%.1f,"live_dirs":$dataDirs,"manifests":$manifestCount,"files_after":$idxFiles,"probe_rows":${refV._1}}""")
       }
     }
     println(s"[curve] final held-out probe: rows=${probeRef._1} sig=${probeRef._2}")

@@ -99,10 +99,13 @@ object Checkpoints {
   }
 
   def reliable(df: DataFrame): DataFrame = {
-    // first-use dir init is synchronized: concurrent materialization
-    // (Dedup.checkpointConcurrently) calls this from several driver
-    // threads, and two racing setCheckpointDir calls would leave one
-    // thread's checkpoint in a dir the other just replaced
+    // first-use dir init is synchronized: independent frames are
+    // materialized from several driver threads at once (DriverPar —
+    // Spark runs their jobs in parallel, where sequential eager
+    // checkpoints serialized pipelines a single lazy DAG overlapped;
+    // values are unaffected, each frame materializes exactly once),
+    // and two racing setCheckpointDir calls would leave one thread's
+    // checkpoint in a dir the other just replaced
     ensureDir(df)
     // plain checkpoint: the write job recomputes the frame, which for
     // ITERATION rounds reads the previous round's files + cached graph

@@ -6,10 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** The OBJECT-STORE-SAFE commit protocol for persisted indexes —
-  * versioned manifests in place of the retired rename-based protocol
-  * (which was local-FS-only by design: atomic same-FS renames + OS
-  * file locks do not exist on S3-class stores, and the reference's
-  * own deployment story is an object store).
+  * versioned manifests (atomic same-FS renames + OS file locks do not
+  * exist on S3-class stores, and the reference's own deployment story
+  * is an object store). Every persisted index runs on it.
   *
   * Invariants, in place of renames:
   *
@@ -41,9 +40,8 @@ import org.apache.spark.sql.types.StructType
   *    superseded dirs stay on disk until [[vacuum]], so a reader that
   *    resolved gen k keeps reading gen k's files even while gen k+1
   *    lands. This gives probe-during-compaction SNAPSHOT ISOLATION
-  *    for free — the race the rename protocol must exclude by
-  *    scheduling (a probe between two dir swaps double-counts; see
-  *    compactMinHashIndex's scheduling note).
+  *    for free (a probe between two in-place dir swaps would
+  *    double-count).
   *  - Torn manifest writes are INVISIBLE, not fatal: the writer
   *    streams a `end=<line-count>` terminator as the last line and
   *    readers skip any manifest whose terminator is absent or wrong —
@@ -188,9 +186,9 @@ object ManifestCommit {
           s"(spark.hadoop.$AtomicCreateConfKey under Spark).")
   }
 
-  /** Fail-fast hook for protocol RESOLUTION time (CommitProtocol
-    * .forBuild): a build about to lay data under a store the protocol
-    * cannot publish on should die before the lay, not after.
+  /** Fail-fast hook every index BUILD calls first: a build about to
+    * lay data under a store the protocol cannot publish on should die
+    * before the lay, not after.
     * Publish-time enforcement in [[publishAt]] still backstops paths
     * that never resolved (an orphaned dir laid before a crash is the
     * protocol's normal garbage either way).
@@ -416,25 +414,21 @@ object ManifestCommit {
       }
   }
 
-  /** True iff a manifest-protocol index exists at `indexDir` — the
-    * `_manifests` dir is the protocol marker (legacy rename-protocol
-    * indexes never created one).
+  /** True iff an index exists at `indexDir` — its first publish
+    * creates the `_manifests` dir.
     */
   def exists(conf: Configuration, indexDir: String): Boolean =
     fs(conf, indexDir).exists(manifestsDir(indexDir))
 
-  /** Every data dir (relative path) referenced by ANY retained complete
-    * manifest — what a cleanup outside [[vacuum]]'s universe (the
-    * post-publish rename-tree deletion of a protocol-crossing rebuild)
-    * must never touch: a zero-copy adopted index's legacy dirs are
-    * live data exactly as long as a retained manifest names them.
+  /** Every probe/maintenance entry point's gate: a dir with no
+    * `_manifests` was never built, and resolving it would silently
+    * read an EMPTY index — fail loudly instead, on any scheme.
     */
-  def referencedDirs(conf: Configuration, indexDir: String): Set[String] = {
-    val f = fs(conf, indexDir)
-    listGens(f, indexDir)
-      .flatMap { case (_, p) => readManifestFile(f, p) }
-      .flatMap(_.tables.values.flatten.map(_.dir)).toSet
-  }
+  def requireIndex(conf: Configuration, indexDir: String, what: String): Unit =
+    if (!exists(conf, indexDir))
+      throw new IllegalStateException(
+        s"$what: no index at $indexDir (no _manifests dir) — build it " +
+          s"first; a never-built dir must not read as an empty index")
 
   def isBatchCommitted(conf: Configuration, indexDir: String,
                        batchId: String): Boolean =
@@ -698,10 +692,9 @@ object ManifestCommit {
     * loads as empty. The frame is pinned to the SNAPSHOT the caller
     * resolved: a concurrent publish or compaction does not disturb it.
     * Dirs are read INDIVIDUALLY and unioned (filters still push into
-    * each scan): one table may legally mix partition-dir layouts and
-    * flat layouts — a zero-copy adopted index's legacy partitioned
-    * runs next to new flat runs — and a single multi-root read would
-    * make partition discovery conflict across roots.
+    * each scan): partition discovery then runs per root, where a
+    * single multi-root read of partitioned dirs would conflict across
+    * roots.
     */
   def readTable(spark: SparkSession, indexDir: String, m: Manifest,
                 table: String, schema: StructType): DataFrame = {
@@ -758,47 +751,13 @@ object ManifestCommit {
         }
       }
     }
-    // dirs OUTSIDE data/ that a manifest being dropped below referenced
-    // (a zero-copy adopted index's legacy-layout dirs — see
-    // ManifestTiered.adoptRenameTiered) are garbage once no kept
-    // manifest names them, and must be GC'd in the SAME vacuum that
-    // drops their last referencing manifest — the data/ scan above
-    // can't see them, and afterwards nothing remembers them
-    val dropFloor = kept.last._1
-    val skippedLegacy = scala.collection.mutable.Set[String]()
-    all.collect { case (g, _, Some(mf)) if g < dropFloor => mf }
-      .flatMap(_.tables.values.flatten.map(_.dir)).distinct
-      .filterNot(_.startsWith("data/"))
-      .filterNot(live.contains)
-      .foreach { rel =>
-        val p = new Path(indexDir, rel)
-        if (f.exists(p)) {
-          if (isYoung(f.getFileStatus(p))) { skippedLegacy += rel; () }
-          else {
-            f.delete(p, true)
-            // a nested legacy rel (`bands_l1/run=0`) leaves its parent
-            // behind — drop it too once empty (local-FS cosmetics;
-            // object stores have no real dirs)
-            val parent = p.getParent
-            if (parent != null &&
-                parent.toString != new Path(indexDir).toString &&
-                f.exists(parent) && f.listStatus(parent).isEmpty)
-              { f.delete(parent, false); () }
-          }
-        }
-      }
     // drop only manifests OLDER than the oldest kept complete gen —
     // never a newer torn object (publishAt's CAS self-heal owns that;
     // deleting it here could race the in-flight write that file IS on
-    // a filesystem where partial writes are visible). A manifest whose
-    // legacy (non-data/) dirs were SKIPPED by the grace window is
-    // RETAINED too: it is the only record of those dirs (the data/
-    // scan can't see them), and dropping it would leak them forever —
-    // the next vacuum, past the grace window, collects both.
-    all.filter(_._1 < dropFloor).foreach { case (_, p, mf) =>
-      val keepsSkippedRef = mf.exists(_.tables.values.flatten.map(_.dir)
-        .exists(skippedLegacy.contains))
-      if (!keepsSkippedRef) { f.delete(p, false); () }
+    // a filesystem where partial writes are visible)
+    val dropFloor = kept.last._1
+    all.filter(_._1 < dropFloor).foreach { case (_, p, _) =>
+      f.delete(p, false); ()
     }
   }
 }

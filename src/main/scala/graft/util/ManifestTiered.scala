@@ -11,8 +11,7 @@ import ManifestCommit.{DirEntry, Manifest}
   * `name` maps to three manifest tables:
   *
   *  - `name`       — the BASE: normally one dir holding a partitioned
-  *    file tree (probes prune it statically, exactly like the rename
-  *    layout's `<name>/`),
+  *    file tree (probes prune it statically),
   *  - `name.l1`    — LEVEL-1 runs: one dir per minor fold, each a few
   *    FLAT files range-sorted on the probe keys (footer min/max
   *    pruning — see [[TieredIndex.layFlatSorted]]),
@@ -20,14 +19,12 @@ import ManifestCommit.{DirEntry, Manifest}
   *
   * Every maintenance step writes FRESH dirs and publishes ONE new
   * manifest, so append+compact touch disjoint paths and probes resolve
-  * a consistent snapshot — the probe-during-compaction race the rename
-  * protocol excludes by scheduling simply does not exist here.
+  * a consistent snapshot — no probe-during-compaction race exists.
   *
   * Tier masses ride the manifest (each [[DirEntry]] carries its row
   * count, recorded once at lay time), so the [[TieredIndex]] size
-  * policy runs with ZERO Spark jobs — on an object store the
-  * rename-protocol `rowSizes` was a LIST across a many-file base per
-  * maintenance cycle.
+  * policy runs with ZERO Spark jobs — no LIST across a many-file base
+  * per maintenance cycle on an object store.
   *
   * Operational contract: each append adds ONE tail dir and reads
   * union per-dir scans, so the compaction cadence bounds the probe's
@@ -35,52 +32,12 @@ import ManifestCommit.{DirEntry, Manifest}
   * non-empty tail — at compact-every-K the union never exceeds
   * base + MaxL1Runs + K scans per table). An orchestrator that
   * appends forever without compacting degrades probe PLANNING cost
-  * linearly — same as the rename tail's file count, and with the same
-  * fix: run the compact arm on a cadence.
+  * linearly — the fix is to run the compact arm on a cadence.
   */
 object ManifestTiered {
 
   def l1Table(name: String): String = s"$name.l1"
   def tailTable(name: String): String = s"$name.tail"
-
-  /** The reserved sequenced-id writer [[adoptRenameTiered]] seeds from
-    * the highest carried rename-era `b<N>` drain token. Rename-era
-    * drains committed free-form `b<batch>` ids, which the manifest
-    * prunes once they age past the committed-retention window — after
-    * which a very late replay of a pre-migration batch would read as
-    * uncommitted and double-fold. Recording their high-water mark
-    * under this writer makes the replay no-op at ANY age (sequenced
-    * watermarks never prune). Sound because a streaming drain commits
-    * its batches in order: batch N committed ⇒ every batch ≤ N of
-    * that query committed (an index shared by several rename-era
-    * drains had colliding `b<N>` tokens already — the defect the
-    * checkpoint-derived writers fixed going forward).
-    */
-  val LegacyDrainWriter = "legacy-drain"
-
-  /** Fail loudly on the silent-empty trap: a rename-protocol index
-    * tree copied to an object store (or any dir that protocol
-    * resolution maps to Manifest) with NO published manifest reads as
-    * an EMPTY index — a probe would silently return zero rows over a
-    * dir visibly full of data. If the resolved snapshot is
-    * generation 0 but a legacy table dir exists, the tree is an
-    * un-adopted rename layout: point the operator at index_migrate
-    * instead of answering wrong.
-    */
-  def assertAdopted(conf: Configuration, indexDir: String,
-                    m: Manifest, legacyProbe: String): Unit = {
-    if (m.gen != 0L) return
-    val p = new org.apache.hadoop.fs.Path(indexDir, legacyProbe)
-    if (p.getFileSystem(conf).exists(p))
-      throw new IllegalStateException(
-        s"$indexDir resolves to the manifest commit protocol but has no " +
-          s"published manifest, while a rename-layout table ('$legacyProbe') " +
-          s"is present — this is a COPIED rename-protocol index that was " +
-          s"never adopted. Probing it as-is would silently return empty " +
-          s"results. Run JobRunner index_migrate (or the index's " +
-          s"migrate*ToManifest API) once; after that every probe and " +
-          s"maintenance step runs manifest-side.")
-  }
 
   /** Base ∪ runs ∪ tail of one tiered table, pinned to the caller's
     * snapshot. The optional filter prunes the (partitioned) base
@@ -90,7 +47,6 @@ object ManifestTiered {
     */
   def read(spark: SparkSession, indexDir: String, m: Manifest, name: String,
            schema: StructType, filter: Option[Column] = None): DataFrame = {
-    assertAdopted(spark.sessionState.newHadoopConf(), indexDir, m, name)
     def f(df: DataFrame) = filter.map(df.filter).getOrElse(df)
     f(ManifestCommit.readTable(spark, indexDir, m, name, schema))
       .unionByName(f(ManifestCommit.readTable(spark, indexDir, m, l1Table(name), schema)))
@@ -118,7 +74,6 @@ object ManifestTiered {
     */
   def sizes(spark: SparkSession, indexDir: String, m: Manifest, name: String,
             schema: StructType): TieredIndex.TierSizes = {
-    assertAdopted(spark.sessionState.newHadoopConf(), indexDir, m, name)
     def mass(table: String): Long = m.rows(table) match {
       case -1L =>
         ManifestCommit.readTable(spark, indexDir, m, table, schema).count()
@@ -167,81 +122,6 @@ object ManifestTiered {
     DirEntry(d, n)
   }
 
-  /** ZERO-COPY adoption of a rename-protocol index into the manifest
-    * protocol — the local-to-object-store migration path (copy the
-    * index tree with any tool, then adopt where it lands): the first
-    * manifest references the rename layout's dirs IN PLACE (base
-    * `name/`, level-1 runs `name_l1/run=K/`, tail `name_tail/`, plain
-    * tables by dir name), so not one data byte is rewritten. From then
-    * on every fold lays fresh dirs under `data/` and [[ManifestCommit
-    * .vacuum]] GCs a legacy dir in the same pass that drops its last
-    * referencing manifest. `committed/` batch tokens carry over as
-    * free-form ids at the adoption generation (their retention window
-    * restarts — sized far above any retry horizon).
-    *
-    * Caller contract: the rename side must be QUIESCED — no in-flight
-    * maintenance. A leftover commit marker means a crashed step whose
-    * staged artifacts recovery must finish or roll back first; this
-    * fails loudly rather than adopt a half-published layout (unmarked
-    * staging dirs, by contrast, are invisible garbage on both
-    * protocols and are simply never referenced).
-    */
-  def adoptRenameTiered(spark: SparkSession, indexDir: String,
-                        tiered: Seq[(String, StructType)],
-                        plain: Seq[(String, StructType)],
-                        markers: Seq[String] = Seq("_append_commit", "_compact_commit"))
-      : Manifest = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexDir).getFileSystem(conf)
-    require(!ManifestCommit.exists(conf, indexDir),
-      s"$indexDir already runs the manifest protocol")
-    markers.foreach { mk =>
-      require(!fs.exists(new org.apache.hadoop.fs.Path(indexDir, mk)),
-        s"$indexDir has an unfinished rename-protocol commit ($mk) — run " +
-          s"the index's recovery (any maintenance open) before adopting")
-    }
-    def entry(rel: String, schema: StructType): Option[DirEntry] = {
-      val p = new org.apache.hadoop.fs.Path(indexDir, rel)
-      if (!fs.exists(p)) None
-      else Some(DirEntry(rel,
-        spark.read.schema(schema).parquet(p.toString).count())) // footer-only
-    }
-    def runRels(name: String): Seq[String] = {
-      val d = new org.apache.hadoop.fs.Path(indexDir, s"${name}_l1")
-      if (!fs.exists(d)) Nil
-      else fs.listStatus(d).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("run="))
-        .sortBy(_.stripPrefix("run=").toLong)
-        .map(r => s"${name}_l1/$r")
-    }
-    val tables: Map[String, Seq[DirEntry]] =
-      tiered.flatMap { case (name, schema) =>
-        Seq(
-          name -> entry(name, schema).toSeq,
-          l1Table(name) -> runRels(name).flatMap(entry(_, schema)),
-          tailTable(name) -> entry(s"${name}_tail", schema).toSeq)
-      }.toMap ++
-        plain.flatMap { case (name, schema) =>
-          entry(name, schema).map(e => name -> Seq(e))
-        }.toMap
-    // committed/ tokens carry over (free-form, committed "now") — and
-    // the drain-token high-water mark ALSO seeds the reserved legacy
-    // writer, so a pre-migration batch replay still no-ops after the
-    // free-form window has pruned the b<N> ids themselves
-    val committedDir = new org.apache.hadoop.fs.Path(indexDir, "committed")
-    val carried: Seq[String] =
-      if (!fs.exists(committedDir)) Nil
-      else fs.listStatus(committedDir).toSeq.map(_.getPath.getName)
-    val legacyDrainMax: Option[Long] = carried.flatMap { t =>
-      if (t.startsWith("b")) t.stripPrefix("b").toLongOption else None
-    }.maxOption
-    ManifestCommit.publish(conf, indexDir, m => m.copy(
-      tables = tables,
-      committed = carried.map(_ -> (m.gen + 1)).toMap,
-      writers = legacyDrainMax.map(LegacyDrainWriter -> _).toMap,
-      floor = 0L))
-  }
-
   /** One tiered table's fold parameters for [[compactTables]]:
     * `refold` re-aggregates the folded mass (the widths sidecar's
     * sum/min — identity for plain tables); run files are flat-sorted
@@ -256,9 +136,7 @@ object ManifestTiered {
                             refold: DataFrame => DataFrame = identity)
 
   /** The ONE size-tiered manifest compaction driver all three indexes
-    * share (the rename protocol keeps per-index bodies because its
-    * staging paths and markers differ; here the shape is fully
-    * uniform): the FIRST spec is the dominant table and decides the
+    * share: the FIRST spec is the dominant table and decides the
     * action; every table folds the SAME action, and all new dirs land
     * in ONE publish — sidecars can never commit to a different tier
     * state than their main table.
@@ -302,45 +180,6 @@ object ManifestTiered {
       laid.foldLeft(mm) { case (acc, (s, e)) =>
         foldUpdate(acc, s.name, action, e)
       }); ()
-  }
-
-  /** Delete an old RENAME-protocol layout AFTER a manifest-protocol
-    * REBUILD into the same dir published (Auto now resolves manifest,
-    * so this is the protocol-crossing rebuild path): the fresh
-    * manifest replaces every table, which makes the rename tree —
-    * `<t>/`, `<t>_l1/`, `<t>_tail/`, `<t>_delta/` staging,
-    * `committed/` tokens, commit markers — unreachable garbage no
-    * vacuum pass would ever see (only manifest-referenced dirs and
-    * `data/` are in vacuum's universe).
-    *
-    * Call ONLY after the rebuild's first publish succeeds: until the
-    * manifest lands, readers still resolve the rename protocol and
-    * keep serving the OLD index off this very tree — deleting it first
-    * left a crash window (delete → crash → no readable index at all)
-    * where deleting late is equally correct and crash-safe (a crash
-    * between the publish and this call leaks the tree; the next
-    * rebuild's own post-publish call collects it). Dirs a retained
-    * manifest still REFERENCES (a zero-copy adopted index's legacy
-    * dirs) are never touched — those are live data and belong to
-    * vacuum's legacy-GC arm.
-    */
-  def clearRenameLayout(conf: Configuration, indexDir: String,
-                        tables: Seq[String],
-                        markers: Seq[String] = Seq("_append_commit", "_compact_commit"))
-      : Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return
-    val referenced = ManifestCommit.referencedDirs(conf, indexDir)
-    val rels = tables.flatMap(t =>
-      Seq(t, s"${t}_l1", s"${t}_tail", s"${t}_delta", s"${t}_l1_delta",
-        s"${t}_new", s"${t}_l1_new", s"${t}_tail_new")) ++
-      Seq("committed") ++ markers
-    rels.foreach { rel =>
-      val live = referenced.exists(r => r == rel || r.startsWith(s"$rel/"))
-      val p = new org.apache.hadoop.fs.Path(root, rel)
-      if (!live && fs.exists(p)) { fs.delete(p, true); () }
-    }
   }
 
   /** BENCH-HARNESS time travel — NOT a production operation
@@ -389,92 +228,4 @@ object ManifestTiered {
         tailTable(name), Nil)
     case TieredIndex.NoOp => m
   }
-}
-
-/** Which commit protocol a persisted index runs on. The RENAME
-  * protocol (atomic same-FS renames + OS file locks — local-FS only)
-  * is RETIRED as a build/maintenance target: [[ManifestCommit]]'s
-  * versioned manifests need only fresh-file create + delete, run
-  * anywhere (the object-store deployment the reference targets), and
-  * measured perf-equal at every depth (SCALE.md) — so every build
-  * resolves Manifest, and `Rename` survives only as (a) the DETECTED
-  * protocol of a legacy index dir ([[ofIndex]]), whose one legal
-  * operation is zero-copy adoption ([[ManifestTiered
-  * .adoptRenameTiered]] / JobRunner index_migrate), and (b) a refused
-  * build request with that pointer.
-  */
-sealed trait CommitProtocol
-object CommitProtocol {
-  /** Resolves [[Manifest]] at build time (see [[forBuild]]); an
-    * EXISTING index still dispatches off its own layout ([[ofIndex]]).
-    */
-  case object Auto extends CommitProtocol
-  /** Retired. A legacy rename-protocol index resolves this from
-    * [[ofIndex]]; requesting it for a build throws in [[forBuild]].
-    */
-  case object Rename extends CommitProtocol
-  case object Manifest extends CommitProtocol
-
-  private def isLocal(conf: Configuration, dir: String): Boolean = {
-    val scheme = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(conf).getUri.getScheme
-    scheme == null || scheme == "file"
-  }
-
-  /** Resolve the protocol to BUILD (or rebuild) an index with: always
-    * [[Manifest]] — a `Rename` request is refused (the rename
-    * maintenance bodies are retired; the protocols were proven
-    * bit-identical and perf-equal before retirement, SCALE.md). A
-    * rebuild over an old rename tree is a REBUILD: the new manifest
-    * replaces the index, and the save's [[ManifestTiered
-    * .clearRenameLayout]] call deletes the then-unreachable rename
-    * tree after the publish (to KEEP a rename index's bytes, migrate
-    * with adoptRenameTiered / index_migrate instead of rebuilding).
-    * Resolving also proves the store PUBLISHABLE
-    * (ManifestCommit.assertPublishable) — a store with no atomic
-    * create-no-overwrite story fails here, before any data is laid.
-    */
-  def forBuild(conf: Configuration, dir: String,
-               chosen: CommitProtocol): CommitProtocol = {
-    chosen match {
-      case Rename => throw new IllegalArgumentException(
-        s"the rename commit protocol is retired: index builds run the " +
-          s"versioned-manifest protocol everywhere (proven bit-identical " +
-          s"and perf-equal before retirement). Build $dir with " +
-          s"protocol=Auto or Manifest; to keep an EXISTING rename " +
-          s"index's bytes, adopt it zero-copy with JobRunner " +
-          s"index_migrate (or the index's migrate*ToManifest API).")
-      case _ => ()
-    }
-    ManifestCommit.assertPublishable(conf, dir)
-    Manifest
-  }
-
-  /** The protocol an EXISTING index at `dir` runs on: the `_manifests`
-    * dir is the marker a manifest-protocol build always creates (its
-    * first publish writes there); without one, a local dir is a legacy
-    * rename-protocol index and a non-local dir can only legally hold a
-    * manifest one (the rename protocol never built there).
-    */
-  def ofIndex(conf: Configuration, dir: String): CommitProtocol =
-    if (ManifestCommit.exists(conf, dir)) Manifest
-    else if (isLocal(conf, dir)) Rename
-    else Manifest
-
-  /** Every probe/maintenance entry point's gate: the index at `dir`
-    * must run the manifest protocol. A legacy rename index fails
-    * loudly with the one supported path — zero-copy adoption — instead
-    * of running the retired rename arms (and instead of resolving the
-    * manifest protocol over a manifest-less tree, which would silently
-    * read an EMPTY index).
-    */
-  def requireManifest(conf: Configuration, dir: String, what: String): Unit =
-    if (ofIndex(conf, dir) != Manifest)
-      throw new IllegalStateException(
-        s"$what: the index at $dir runs the RETIRED rename commit " +
-          s"protocol (no _manifests dir on a local filesystem). Adopt it " +
-          s"onto the manifest protocol zero-copy — JobRunner " +
-          s"index_migrate (or the index's migrate*ToManifest API), a " +
-          s"one-time metadata-only step — after which every probe and " +
-          s"maintenance verb runs manifest-side.")
 }

@@ -26,10 +26,7 @@ import org.apache.spark.sql.DataFrame
   *
   * This module owns the policy decision and the flat-run lay shape;
   * [[ManifestTiered]] owns the layout, the read-side union, and the
-  * manifest publishes. (The rename-protocol layout this module once
-  * also read — `<name>_l1/run=K` physical dirs promoted under marker
-  * files — is retired; [[ManifestTiered.adoptRenameTiered]] is the one
-  * remaining reader of that tree, for zero-copy migration.)
+  * manifest publishes.
   */
 object TieredIndex {
 

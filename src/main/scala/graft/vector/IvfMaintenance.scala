@@ -35,9 +35,7 @@ import graft.util.TieredIndex
   * `cell=` dirs, only the (compaction-bounded) flat tail
   * row-filtered. Centroids and codebooks are train-once artifacts —
   * never touched by maintenance (the FAISS add-without-retrain
-  * contract). (The rename-protocol bodies are retired; legacy rename
-  * indexes adopt zero-copy via [[VectorOps.migrateIvfIndexToManifest]]
-  * / JobRunner index_migrate.)
+  * contract).
   */
 private[vector] object IvfMaintenance {
 
@@ -65,15 +63,10 @@ private[vector] object IvfMaintenance {
   // cell IN-filter is a direct column predicate), flat tails;
   // `centroids`/`codebooks` are train-once single-dir tables replaced
   // only by a rebuild. Probes resolve ONE snapshot covering every
-  // table, so a probe can never see new vectors with old codes — the
-  // cross-table atomicity the rename protocol needs a shared marker
-  // for, a single manifest file gives outright.
+  // table, so a probe can never see new vectors with old codes — a
+  // single manifest file gives that cross-table atomicity outright.
 
-  import graft.util.{CommitProtocol, ManifestCommit, ManifestTiered}
-
-  def isManifest(spark: SparkSession, indexDir: String): Boolean =
-    CommitProtocol.ofIndex(spark.sessionState.newHadoopConf(), indexDir) ==
-      CommitProtocol.Manifest
+  import graft.util.{ManifestCommit, ManifestTiered}
 
   /** Rebuild-publish: lay every table fresh and publish a manifest
     * replacing the whole index state (committed-batch state reset — a
@@ -94,13 +87,7 @@ private[vector] object IvfMaintenance {
     ManifestCommit.publish(conf, indexDir, m => m.copy(
       tables = Map("vectors" -> Seq(vd), "centroids" -> Seq(ctd)) ++
         cd.map("codes" -> Seq(_)) ++ cbd.map("codebooks" -> Seq(_)),
-      committed = Map.empty, writers = Map.empty, floor = 0L))
-    // protocol-crossing rebuild: drop the now-unreachable rename tree
-    // AFTER the publish (readers keep serving the old rename index
-    // until the manifest lands; a crash in the gap only leaks the
-    // tree until the next rebuild's pass here)
-    ManifestTiered.clearRenameLayout(conf, indexDir,
-      Seq("vectors", "centroids", "codes", "codebooks"))
+      committed = Map.empty, writers = Map.empty, floor = 0L)); ()
   }
 
   /** FAISS add on the manifest protocol: flat unsorted tail dirs for
@@ -122,7 +109,6 @@ private[vector] object IvfMaintenance {
                      at: Option[ManifestCommit.Manifest] = None): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val m = at.getOrElse(ManifestCommit.current(conf, indexDir))
-    ManifestTiered.assertAdopted(conf, indexDir, m, "vectors")
     if (batchId.exists(m.isCommitted)) return
     // the two tail lays are independent single-publish writes —
     // overlap their jobs from driver threads (§2.6, the MinHash

@@ -546,13 +546,11 @@ object PqOps {
     * layout, so flat probes work against it too.
     */
   def savePqIndex(c: DataFrame, indexDir: String, k: Int, iters: Int,
-                  nKnown: Option[Long] = None,
-                  protocol: graft.util.CommitProtocol =
-                    graft.util.CommitProtocol.Auto): Unit = {
+                  nKnown: Option[Long] = None): Unit = {
     val spark = c.sparkSession
     import spark.implicits._
-    graft.util.CommitProtocol.forBuild(
-      spark.sessionState.newHadoopConf(), indexDir, protocol)
+    graft.util.ManifestCommit.assertPublishable(
+      spark.sessionState.newHadoopConf(), indexDir)
     val (assignments, centroids) = VectorOps.buildIvf(c, k, iters, nKnown = nKnown)
     val codebooks = trainCodebooks(c, nKnown)
     IvfMaintenance.saveManifest(spark, indexDir,
@@ -596,7 +594,7 @@ object PqOps {
                   asOfGen: Option[Long]): PqIndex = {
     val cb = Array.fill(M, Ks)(Array.fill(SubDim)(0.0))
     val conf = spark.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, indexDir, "loadPqIndex")
+    graft.util.ManifestCommit.requireIndex(conf, indexDir, "loadPqIndex")
     // ONE snapshot covers all four tables: a probe can never pair
     // new vectors with old codes or a different codebook generation
     val m = asOfGen
@@ -640,7 +638,7 @@ object PqOps {
                    batchId: Option[String] = None): Unit = {
     val spark = newBatch.sparkSession
     val conf = spark.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, indexDir, "addToPqIndex")
+    graft.util.ManifestCommit.requireIndex(conf, indexDir, "addToPqIndex")
     // resolve ONE snapshot and pin both the artifact loads AND the
     // publish to it: the batch is encoded under THIS snapshot's
     // centroids + codebooks, and publishing against a later-resolved

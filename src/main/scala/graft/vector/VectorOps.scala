@@ -476,11 +476,9 @@ object VectorOps {
     * the base corpus — at 100 TB a 2-of-1024-cell probe scans ~0.2% of
     * the index instead of joining the full corpus on vec_id.
     */
-  def saveIvfIndex(c: DataFrame, indexDir: String, k: Int, iters: Int,
-                   protocol: graft.util.CommitProtocol =
-                     graft.util.CommitProtocol.Auto): Unit = {
-    val conf = c.sparkSession.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.forBuild(conf, indexDir, protocol)
+  def saveIvfIndex(c: DataFrame, indexDir: String, k: Int, iters: Int): Unit = {
+    graft.util.ManifestCommit.assertPublishable(
+      c.sparkSession.sessionState.newHadoopConf(), indexDir)
     val (assignments, centroids) = buildIvf(c, k, iters)
     IvfMaintenance.saveManifest(c.sparkSession, indexDir,
       c.join(assignments, "vec_id")
@@ -516,7 +514,7 @@ object VectorOps {
                      at: Option[graft.util.ManifestCommit.Manifest] = None)
       : Unit = {
     val s = delta.sparkSession
-    graft.util.CommitProtocol.requireManifest(
+    graft.util.ManifestCommit.requireIndex(
       s.sessionState.newHadoopConf(), indexDir, "appendIvfIndex")
     val snap = at.getOrElse(graft.util.ManifestCommit.current(
       s.sessionState.newHadoopConf(), indexDir))
@@ -554,29 +552,11 @@ object VectorOps {
   def compactIvfIndex(spark: SparkSession, indexDir: String,
                       vacuumKeep: Option[Int] = None): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, indexDir,
+    graft.util.ManifestCommit.requireIndex(conf, indexDir,
       "compactIvfIndex")
     IvfMaintenance.compactManifest(spark, indexDir)
     vacuumKeep.foreach(k =>
       graft.util.ManifestCommit.vacuum(conf, indexDir, keepGens = k))
-  }
-
-  /** Zero-copy migration of a rename-protocol IVF (or IVF-PQ) index
-    * onto the versioned-manifest protocol
-    * (ManifestTiered.adoptRenameTiered): vectors (and codes, when the
-    * PQ flavor's store exists) tiers referenced in place, centroids
-    * (and codebooks) as plain train-once tables, committed batch ids
-    * carried over.
-    */
-  def migrateIvfIndexToManifest(spark: SparkSession, indexDir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val pq = fs.exists(new org.apache.hadoop.fs.Path(indexDir, "codes"))
-    graft.util.ManifestTiered.adoptRenameTiered(spark, indexDir,
-      tiered = Seq("vectors" -> IvfMaintenance.VectorsSchema) ++
-        (if (pq) Seq("codes" -> IvfMaintenance.CodesSchema) else Nil),
-      plain = Seq("centroids" -> IvfMaintenance.CentroidsSchema) ++
-        (if (pq) Seq("codebooks" -> IvfMaintenance.CodebooksSchema) else Nil)); ()
   }
 
   /** Per-tier vectors mass + the size policy's pending decision — the
@@ -585,7 +565,7 @@ object VectorOps {
     */
   def compactionTiers(spark: SparkSession, indexDir: String)
       : (String, graft.util.TieredIndex.TierSizes) = {
-    graft.util.CommitProtocol.requireManifest(
+    graft.util.ManifestCommit.requireIndex(
       spark.sessionState.newHadoopConf(), indexDir, "compactionTiers")
     val m = graft.util.ManifestCommit.current(
       spark.sessionState.newHadoopConf(), indexDir)
@@ -627,7 +607,7 @@ object VectorOps {
   def loadIvfIndex(spark: SparkSession, indexDir: String,
                    asOfGen: Option[Long]): IvfIndex = {
     val conf = spark.sessionState.newHadoopConf()
-    graft.util.CommitProtocol.requireManifest(conf, indexDir, "loadIvfIndex")
+    graft.util.ManifestCommit.requireIndex(conf, indexDir, "loadIvfIndex")
     val m = asOfGen
       .map(g => graft.util.ManifestCommit.atGeneration(conf, indexDir, g))
       .getOrElse(graft.util.ManifestCommit.current(conf, indexDir))
@@ -911,8 +891,7 @@ object VectorOps {
       (v: (String, Long)) => graft.util.FileTrees.rmTree(v._1)) {
       val d = java.nio.file.Files.createTempDirectory("graft_ivf_mani").toString
       val c = corpus(s, dir)
-      saveIvfIndex(c.filter(col("vec_id") % 5 =!= 0), d, k = 10, iters = 2,
-        protocol = graft.util.CommitProtocol.Manifest)
+      saveIvfIndex(c.filter(col("vec_id") % 5 =!= 0), d, k = 10, iters = 2)
       appendIvfIndex(c.filter(col("vec_id") % 5 === 0), d,
         batchId = Some("batch-1"))
       (d, graft.util.ManifestCommit.current(
@@ -920,9 +899,9 @@ object VectorOps {
     }
 
   /** The ann_ivf_compact_topk lifecycle on the versioned-manifest
-    * (object-store) commit protocol: 80% trained+built with `protocol
-    * = Manifest`, 20% appended exactly-once, the tail Minor-folded
-    * into a flat (cell, vec_id)-sorted run in one publish, then
+    * (object-store) commit protocol: 80% trained+built, 20% appended
+    * exactly-once, the tail Minor-folded into a flat (cell,
+    * vec_id)-sorted run in one publish, then
     * probed. Oracle = the same full-corpus assignment replay against
     * the index's OWN centroids — the commit protocol must be invisible
     * to retrieval, hash-checked. Each invocation rewinds to the

@@ -4,16 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.util.{CommitProtocol, ManifestCommit, ManifestTiered}
+import graft.util.{ManifestCommit, ManifestTiered}
 
 /** The MinHash index on the versioned-manifest (object-store) commit
-  * protocol: the SAME public entry points (save / append /
-  * probeAndAppend / compact / probe) must produce probe results
-  * identical to the rename-protocol index — the protocol is a
-  * deployment choice, never a semantics choice. Exercised on the local
-  * FS with protocol = Manifest (the manifest module itself never
-  * renames, so local-FS green implies the same code path an s3a:// dir
-  * takes — ManifestCommitSpec holds the primitive-level guarantees).
+  * protocol: the public entry points (save / append / probeAndAppend /
+  * compact / probe) must produce probe results identical to a
+  * from-scratch build. Exercised on the local FS (the manifest module
+  * itself never renames, so local-FS green implies the same code path
+  * an s3a:// dir takes — ManifestCommitSpec holds the primitive-level
+  * guarantees, ManifestRenameFreeSpec the object-store lifecycle).
   */
 class MinHashManifestSpec extends AnyFunSuite {
 
@@ -32,32 +31,6 @@ class MinHashManifestSpec extends AnyFunSuite {
   private def hitSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-  test("a LEGACY rename index refuses probes with the migrate pointer; " +
-      "after adoption it probes bit-for-bit like a manifest build") {
-    assume(sf.isDefined)
-    val corpus = graft.util.Tables(spark, sf.get, "documents")
-    val mDir = java.nio.file.Files.createTempDirectory("mh_mani").toString
-    val rDir = java.nio.file.Files.createTempDirectory("mh_ren").toString
-    Dedup.saveMinHashIndex(corpus, mDir, protocol = CommitProtocol.Manifest)
-    graft.util.RenameFixtures.minhashIndex(spark, rDir) { scratch =>
-      Dedup.saveMinHashIndex(corpus, scratch)
-    }
-    assert(ManifestCommit.exists(conf, mDir), "manifest build must create _manifests")
-    assert(!ManifestCommit.exists(conf, rDir), "the legacy fixture must NOT")
-    val probe = corpus.filter(col("doc_id") < 20)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-    // the retired protocol's one legal operation is adoption — probing
-    // as-is names the fix
-    val e = intercept[IllegalStateException] {
-      Dedup.dedupAgainstMinHashIndex(probe, rDir).count()
-    }
-    assert(e.getMessage.contains("index_migrate"), e.getMessage)
-    Dedup.migrateMinHashIndexToManifest(spark, rDir)
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, mDir)) ==
-      hitSet(Dedup.dedupAgainstMinHashIndex(probe, rDir)))
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, mDir)).nonEmpty)
-  }
-
   test("append folds a delta exactly once; probes equal a from-scratch build; compact is invisible") {
     assume(sf.isDefined)
     val corpus = graft.util.Tables(spark, sf.get, "documents")
@@ -65,8 +38,8 @@ class MinHashManifestSpec extends AnyFunSuite {
     val delta = corpus.filter(col("doc_id") % 3 === 0)
     val grown = java.nio.file.Files.createTempDirectory("mh_mani_g").toString
     val scratch = java.nio.file.Files.createTempDirectory("mh_mani_s").toString
-    Dedup.saveMinHashIndex(oldCrawl, grown, protocol = CommitProtocol.Manifest)
-    Dedup.saveMinHashIndex(corpus, scratch, protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(oldCrawl, grown)
+    Dedup.saveMinHashIndex(corpus, scratch)
     Dedup.appendMinHashIndex(delta, grown, batchId = Some("crawl-7"))
     // the crashed-orchestrator retry: the committed id makes it a no-op
     Dedup.appendMinHashIndex(delta, grown, batchId = Some("crawl-7"))
@@ -100,8 +73,7 @@ class MinHashManifestSpec extends AnyFunSuite {
     val corpus = graft.util.Tables(spark, sf.get, "documents")
     val dir = java.nio.file.Files.createTempDirectory("mh_mani_d").toString
     val hitsOut = java.nio.file.Files.createTempDirectory("mh_mani_h").toString
-    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 4 === 0), dir,
-      protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 4 === 0), dir)
     // two crawls through the maintenance entry: each probes the
     // PRE-batch snapshot, then appends itself in the same publish
     (1 to 2).foreach { k =>
@@ -117,8 +89,7 @@ class MinHashManifestSpec extends AnyFunSuite {
       batchId = Some(ManifestCommit.seqBatchId("drain", 2L)))
     assert(ManifestCommit.current(conf, dir).gen == genBefore)
     // a reader pinned to the pre-compaction snapshot keeps its results
-    // across compact + vacuum(keepGens=2) — snapshot isolation, the
-    // race the rename protocol excludes only by scheduling
+    // across compact + vacuum(keepGens=2) — snapshot isolation
     val probe = corpus.filter(col("doc_id") < 25)
       .withColumn("doc_id", col("doc_id") + 3000000L)
     val pinned = Dedup.dedupAgainstMinHashIndex(probe, dir)
@@ -139,7 +110,7 @@ class MinHashManifestSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val corpus = graft.util.Tables(spark, sf.get, "documents")
     val dir = java.nio.file.Files.createTempDirectory("mh_mani_p").toString
-    Dedup.saveMinHashIndex(corpus, dir, protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(corpus, dir)
     Dedup.appendMinHashIndex(corpus.filter(col("doc_id") < 50)
       .withColumn("doc_id", col("doc_id") + 7000000L), dir,
       batchId = Some("b1"))
@@ -173,125 +144,22 @@ class MinHashManifestSpec extends AnyFunSuite {
     }
   }
 
-  test("a REBUILD over a manifest index stays manifest (Auto) and refuses a rename flip") {
+  test("a REBUILD over an existing index replaces it: probes equal a fresh build") {
     assume(sf.isDefined)
     val corpus = graft.util.Tables(spark, sf.get, "documents")
       .filter(col("doc_id") < 300)
     val dir = java.nio.file.Files.createTempDirectory("mh_flip").toString
-    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), dir,
-      protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), dir)
     val probe = corpus.filter(col("doc_id") < 10)
       .withColumn("doc_id", col("doc_id") + 6000000L)
-    // an Auto rebuild on LOCAL FS must keep writing manifest-side —
-    // a rename-layout rebuild would be invisible to readers, which
-    // resolve the surviving manifest (the silent split-protocol trap)
-    Dedup.saveMinHashIndex(corpus, dir) // protocol = Auto
+    // a rebuild over an existing index publishes a manifest that
+    // replaces every table
+    Dedup.saveMinHashIndex(corpus, dir)
     val scratch = java.nio.file.Files.createTempDirectory("mh_flip_s").toString
-    Dedup.saveMinHashIndex(corpus, scratch, protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(corpus, scratch)
     assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) ==
       hitSet(Dedup.dedupAgainstMinHashIndex(probe, scratch)),
-      "Auto rebuild over a manifest index must land manifest-side")
-    // an EXPLICIT rename rebuild request is refused — the protocol is
-    // retired, with the adoption pointer in the message
-    val e = intercept[IllegalArgumentException] {
-      Dedup.saveMinHashIndex(corpus, dir, protocol = CommitProtocol.Rename)
-    }
-    assert(e.getMessage.contains("retired"), e.getMessage)
-    assert(e.getMessage.contains("index_migrate"), e.getMessage)
-  }
-
-  test("an un-adopted rename tree resolved as manifest protocol fails loudly instead of reading empty") {
-    assume(sf.isDefined)
-    val corpus = graft.util.Tables(spark, sf.get, "documents")
-      .filter(col("doc_id") < 200)
-    val dir = java.nio.file.Files.createTempDirectory("mh_unadopted").toString
-    graft.util.RenameFixtures.minhashIndex(spark, dir) { scratch =>
-      Dedup.saveMinHashIndex(corpus, scratch)
-    } // rename layout, no _manifests
-    // what a probe on an object store would do: resolve current() →
-    // Empty, then read — the silent-empty trap. The read and the size
-    // policy must throw with the index_migrate pointer; appends must
-    // refuse to publish a manifest that hides the legacy data.
-    val e = intercept[IllegalStateException] {
-      graft.util.ManifestTiered.read(spark, dir, ManifestCommit.Empty,
-        "bands", Dedup.BandsSchema).count()
-    }
-    assert(e.getMessage.contains("index_migrate"))
-    intercept[IllegalStateException] {
-      graft.util.ManifestTiered.sizes(spark, dir, ManifestCommit.Empty,
-        "bands", Dedup.BandsSchema)
-    }
-    // after adoption the same calls work
-    Dedup.migrateMinHashIndexToManifest(spark, dir)
-    val m = ManifestCommit.current(conf, dir)
-    assert(graft.util.ManifestTiered.read(spark, dir, m,
-      "bands", Dedup.BandsSchema).count() > 0)
-  }
-
-  test("zero-copy migration: a rename index adopts the manifest protocol in place, probes unchanged, legacy dirs GC on supersede") {
-    assume(sf.isDefined)
-    val corpus = graft.util.Tables(spark, sf.get, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("mh_migrate").toString
-    // a REAL rename-protocol history shape: base + legacy L1 run + live
-    // tail, with the two drain tokens committed legacy-style
-    graft.util.RenameFixtures.minhashIndex(spark, dir,
-      committed = Seq("crawl-2", "crawl-3")) { scratch =>
-      Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 4 <= 1), scratch)
-      Dedup.appendMinHashIndex(corpus.filter(col("doc_id") % 4 === 2), scratch)
-      Dedup.compactMinHashIndex(spark, scratch) // tail → run
-      Dedup.appendMinHashIndex(corpus.filter(col("doc_id") % 4 === 3), scratch)
-    } // leaves a live tail
-    val probe = corpus.filter(col("doc_id") < 25)
-      .withColumn("doc_id", col("doc_id") + 5000000L)
-    // the expected hit set: a from-scratch manifest build over the same
-    // corpus (the probe a pre-retirement rename reader produced)
-    val truth = java.nio.file.Files.createTempDirectory("mh_migrate_t").toString
-    Dedup.saveMinHashIndex(corpus, truth)
-    val before = hitSet(Dedup.dedupAgainstMinHashIndex(probe, truth))
-    assert(before.nonEmpty)
-    val filesBefore = {
-      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try { import scala.jdk.CollectionConverters._
-        st.iterator().asScala.count(_.toString.endsWith(".parquet")) }
-      finally st.close()
-    }
-    Dedup.migrateMinHashIndexToManifest(spark, dir)
-    assert(ManifestCommit.exists(conf, dir))
-    // not one data byte rewritten
-    val filesAfter = {
-      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try { import scala.jdk.CollectionConverters._
-        st.iterator().asScala.count(_.toString.endsWith(".parquet")) }
-      finally st.close()
-    }
-    assert(filesAfter == filesBefore, "adoption must not rewrite data")
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) == before,
-      "migration changed probe results")
-    // committed ids carried over: the replayed batches no-op
-    assert(ManifestCommit.isBatchCommitted(conf, dir, "crawl-2"))
-    Dedup.appendMinHashIndex(corpus.filter(col("doc_id") % 4 === 3), dir,
-      batchId = Some("crawl-3"))
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) == before,
-      "carried-over batch id failed to no-op a replay")
-    // manifest-side maintenance: l1+tail (50% of docs) ≥ base (50%) →
-    // MAJOR — every legacy tier folds into a fresh data/ base; probes
-    // invariant
-    Dedup.compactMinHashIndex(spark, dir)
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) == before)
-    val m = ManifestCommit.current(conf, dir)
-    Seq("bands", "widths").foreach { t =>
-      assert(m.table(t).forall(_.startsWith("data/")),
-        s"post-Major base of $t must live under data/")
-    }
-    // vacuum drops the superseded generations AND the legacy-layout
-    // dirs only those generations referenced (the non-data/ GC arm)
-    ManifestCommit.vacuum(conf, dir, keepGens = 1, graceMs = 0L)
-    Seq("bands", "bands_l1", "bands_tail", "widths", "widths_l1",
-      "widths_tail").foreach { legacy =>
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, legacy)),
-        s"superseded legacy dir $legacy must be GC'd by vacuum")
-    }
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) == before)
+      "a rebuild must probe like a fresh build of the same corpus")
   }
 
   test("a writer crash between lay and publish leaves probes on the old snapshot; the redrive lands clean") {
@@ -299,8 +167,7 @@ class MinHashManifestSpec extends AnyFunSuite {
     val corpus = graft.util.Tables(spark, sf.get, "documents")
       .filter(col("doc_id") < 400)
     val dir = java.nio.file.Files.createTempDirectory("mh_mani_c").toString
-    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), dir,
-      protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), dir)
     val probe = corpus.filter(col("doc_id") < 10)
       .withColumn("doc_id", col("doc_id") + 4000000L)
     val before = hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir))
@@ -319,19 +186,18 @@ class MinHashManifestSpec extends AnyFunSuite {
     Dedup.appendMinHashIndex(corpus.filter(col("doc_id") % 2 === 1), dir,
       batchId = Some("redrive-1"))
     val scratch = java.nio.file.Files.createTempDirectory("mh_mani_c2").toString
-    Dedup.saveMinHashIndex(corpus, scratch, protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(corpus, scratch)
     assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) ==
       hitSet(Dedup.dedupAgainstMinHashIndex(probe, scratch)))
   }
 
   test("AS-OF probes read a retained historical generation; vacuumed " +
-      "generations fail loudly; the rename protocol refuses time travel") {
+      "generations fail loudly") {
     assume(sf.isDefined)
     val corpus = graft.util.Tables(spark, sf.get, "documents")
       .filter(col("doc_id") < 400)
     val dir = java.nio.file.Files.createTempDirectory("mh_asof").toString
-    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), dir,
-      protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), dir)
     val g1 = ManifestCommit.current(conf, dir).gen
     val probe = corpus.filter(col("doc_id") < 40)
       .withColumn("doc_id", col("doc_id") + 7000000L)
@@ -354,16 +220,6 @@ class MinHashManifestSpec extends AnyFunSuite {
     assert(e.getMessage.contains("retained generations"))
     assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) == curHits,
       "vacuum must not disturb the current snapshot")
-    // a legacy rename index: no probes at all (let alone time travel)
-    // until adopted
-    val rdir = java.nio.file.Files.createTempDirectory("mh_asof_r").toString
-    graft.util.RenameFixtures.minhashIndex(spark, rdir) { scratch =>
-      Dedup.saveMinHashIndex(corpus, scratch)
-    }
-    val e2 = intercept[IllegalStateException] {
-      Dedup.dedupAgainstMinHashIndex(probe, rdir, asOfGen = Some(1L)).count()
-    }
-    assert(e2.getMessage.contains("index_migrate"))
   }
 
   test("an append never publishes rows banded under superseded params — " +
@@ -400,41 +256,4 @@ class MinHashManifestSpec extends AnyFunSuite {
       "the stale-banded batch must not have published")
   }
 
-  test("protocol-crossing rebuild deletes the rename tree only AFTER the " +
-      "publish; an adopted index's manifest-referenced legacy dirs survive") {
-    assume(sf.isDefined)
-    val corpus = graft.util.Tables(spark, sf.get, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("mh_cross").toString
-    graft.util.RenameFixtures.minhashIndex(spark, dir) { scratch =>
-      Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), scratch)
-    }
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bands")))
-    // crossing rebuild (Auto → Manifest): the old rename tree must be
-    // gone afterwards — and because the deletion now runs POST-publish,
-    // a crash mid-build would have left it (and its readers) whole
-    Dedup.saveMinHashIndex(corpus, dir)
-    assert(ManifestCommit.exists(conf, dir))
-    Seq("bands", "widths", "bands_tail", "widths_tail", "committed").foreach { n =>
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, n)),
-        s"rename-layout dir '$n' must be deleted by the crossing rebuild")
-    }
-    val probe = corpus.filter(col("doc_id") < 20)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)).nonEmpty)
-    // ADOPTED index: its legacy dirs are manifest-referenced live data —
-    // a rebuild must leave them for vacuum's legacy-GC arm (the retained
-    // pre-rebuild generation still resolves them via AS-OF)
-    val adir = java.nio.file.Files.createTempDirectory("mh_cross_a").toString
-    graft.util.RenameFixtures.minhashIndex(spark, adir) { scratch =>
-      Dedup.saveMinHashIndex(corpus.filter(col("doc_id") % 2 === 0), scratch)
-    }
-    Dedup.migrateMinHashIndexToManifest(spark, adir)
-    val adoptedGen = ManifestCommit.current(conf, adir).gen
-    Dedup.saveMinHashIndex(corpus, adir) // rebuild over the adopted index
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(adir, "bands")),
-      "a manifest-referenced legacy dir must survive the rebuild")
-    // the retained adoption generation still probes whole
-    assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, adir,
-      asOfGen = Some(adoptedGen))).nonEmpty)
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
-import graft.util.{CommitProtocol, ManifestCommit}
+import graft.util.ManifestCommit
 
 /** Streaming-drain writer identity (the r14 verdict's #2 finding): the
   * sequenced-id writer token must come from the query's CHECKPOINT
@@ -14,10 +14,7 @@ import graft.util.{CommitProtocol, ManifestCommit}
   * writer name, drain A committing seq 0,1 makes drain B's REAL
   * batches 0,1 read as replays and silently no-op. With
   * checkpoint-derived writers each drain keeps its own high-water
-  * mark. Also pins the post-migration replay guard: a batch committed
-  * rename-side as `b<N>` and carried over by adoption must read as
-  * committed under the NEW writer scheme too (DrainIds checks the
-  * legacy id), or the first post-migration replay double-folds.
+  * mark.
   */
 class DrainWriterIdSpec extends AnyFunSuite {
 
@@ -67,8 +64,7 @@ class DrainWriterIdSpec extends AnyFunSuite {
   test("two drains on ONE index fold disjoint batches without eating " +
       "each other's watermarks; per-drain replays still no-op") {
     val idx = tmp("dw_idx")
-    Dedup.saveMinHashIndex(docs(0, 20), idx,
-      protocol = CommitProtocol.Manifest)
+    Dedup.saveMinHashIndex(docs(0, 20), idx)
     val cpA = tmp("dw_cpA")
     val cpB = tmp("dw_cpB")
     val hits = tmp("dw_hits")
@@ -105,60 +101,4 @@ class DrainWriterIdSpec extends AnyFunSuite {
     assert(DrainIds.pending(conf, idx, cpB, 1).isDefined)
   }
 
-  test("post-migration: a batch committed rename-side as b<N> reads as " +
-      "committed under the new writer scheme (no double-fold)") {
-    val idx = tmp("dw_mig")
-    // legacy layout: the rename-era drain committed batch 1 under its
-    // free-form b1 token
-    graft.util.RenameFixtures.minhashIndex(spark, idx,
-      committed = Seq("b1")) { scratch =>
-      Dedup.saveMinHashIndex(docs(0, 20), scratch)
-      Dedup.appendMinHashIndex(docs(300, 10), scratch)
-    }
-    Dedup.migrateMinHashIndexToManifest(spark, idx)
-    assert(ManifestCommit.exists(conf, idx))
-    val cp = tmp("dw_mig_cp")
-    // the stream checkpoint for batch 1 never landed; the replay must
-    // STILL skip, because the legacy b1 token carried over at adoption
-    assert(DrainIds.pending(conf, idx, cp, 1).isEmpty,
-      "a rename-era committed batch must not double-fold after migration")
-    // batch 2 is genuinely new
-    assert(DrainIds.pending(conf, idx, cp, 2).isDefined)
-  }
-
-  test("age-proof migrated-drain replay: a pre-migration batch still " +
-      "no-ops after its legacy b<N> token pruned out of the window") {
-    val idx = tmp("dw_age")
-    // legacy layout: the rename-era drain committed batches 0..3 under
-    // free-form b<N> tokens
-    graft.util.RenameFixtures.minhashIndex(spark, idx,
-      committed = (0 to 3).map(b => s"b$b")) { scratch =>
-      Dedup.saveMinHashIndex(docs(0, 20), scratch)
-      (0 to 3).foreach(b =>
-        Dedup.appendMinHashIndex(docs(400 + b * 10, 5), scratch))
-    }
-    Dedup.migrateMinHashIndexToManifest(spark, idx)
-    // adoption carried the free-form b0..b3 AND seeded the reserved
-    // legacy-drain watermark at 3
-    val m0 = ManifestCommit.current(conf, idx)
-    assert((0 to 3).forall(b => m0.isCommitted(s"b$b")))
-    assert(m0.writers.get(graft.util.ManifestTiered.LegacyDrainWriter)
-      .contains(3L))
-    // age the index FAR past the committed-retention window (retainGens
-    // override simulates the 4096 publishes of a 24/7 cadence): the
-    // free-form tokens prune out...
-    (1 to 3).foreach(_ =>
-      ManifestCommit.publish(conf, idx, identity, retainGens = 1))
-    val aged = ManifestCommit.current(conf, idx)
-    assert((0 to 3).forall(b => !aged.committed.contains(s"b$b")),
-      "test setup: the legacy free-form ids must actually have pruned")
-    // ...and the replay of a pre-migration batch STILL no-ops, at the
-    // pending() gate, through the never-pruning legacy-drain watermark
-    val cp = tmp("dw_age_cp")
-    (0 to 3).foreach(b =>
-      assert(DrainIds.pending(conf, idx, cp, b).isEmpty,
-        s"pre-migration batch $b must not double-fold at any age"))
-    // the first genuinely-new batch past the watermark folds normally
-    assert(DrainIds.pending(conf, idx, cp, 4).isDefined)
-  }
 }

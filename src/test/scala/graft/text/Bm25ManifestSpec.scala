@@ -4,14 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.util.{CommitProtocol, ManifestCommit, ManifestTiered}
+import graft.util.{ManifestCommit, ManifestTiered}
 
 /** The BM25 inverted index on the versioned-manifest (object-store)
   * commit protocol: build / delta fold / compact / probe through the
-  * SAME public entry points, score-identical to the rename-protocol
-  * index — and with the postings-tail + terms + stats triple landing
-  * in ONE manifest publish (the cross-table atomicity the rename
-  * protocol needs a shared marker for).
+  * public entry points, score-identical to a from-scratch build — and
+  * with the postings-tail + terms + stats triple landing in ONE
+  * manifest publish (cross-table atomicity without a shared marker).
   */
 class Bm25ManifestSpec extends AnyFunSuite {
 
@@ -45,8 +44,7 @@ class Bm25ManifestSpec extends AnyFunSuite {
     val want = scores(rDir)
     assert(want.nonEmpty)
     // manifest: 80% build + 20% fold (+ retry) + Minor compact
-    InvertedIndex.save(docs.filter(col("doc_id") % 5 =!= 0), mDir,
-      protocol = CommitProtocol.Manifest)
+    InvertedIndex.save(docs.filter(col("doc_id") % 5 =!= 0), mDir)
     assert(ManifestCommit.exists(conf, mDir))
     InvertedIndex.appendDelta(docs.filter(col("doc_id") % 5 === 0), mDir,
       batchId = Some("fold-1"))
@@ -85,48 +83,12 @@ class Bm25ManifestSpec extends AnyFunSuite {
       "the refused fold must publish nothing")
   }
 
-  test("zero-copy migration: a legacy rename BM25 index adopts the manifest protocol, scores unchanged") {
-    assume(sf.isDefined)
-    val docs = graft.util.Tables(spark, sf.get, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("bm25_migrate").toString
-    // legacy layout with a live tail + a committed fold token
-    graft.util.RenameFixtures.bm25Index(spark, dir,
-      committed = Seq("fold-1")) { scratch =>
-      InvertedIndex.save(docs.filter(col("doc_id") % 5 =!= 0), scratch)
-      InvertedIndex.appendDelta(docs.filter(col("doc_id") % 5 === 0), scratch)
-    }
-    // the truth: a from-scratch build over the same corpus
-    val truth = java.nio.file.Files.createTempDirectory("bm25_migrate_t").toString
-    InvertedIndex.save(docs, truth)
-    val want = scores(truth)
-    assert(want.nonEmpty)
-    // pre-adoption the legacy index refuses probes with the fix named
-    val e = intercept[IllegalStateException] { scores(dir) }
-    assert(e.getMessage.contains("index_migrate"), e.getMessage)
-    InvertedIndex.migrateToManifest(spark, dir)
-    assert(ManifestCommit.exists(conf, dir))
-    assert(scores(dir) == want, "migration changed retrieval")
-    assert(ManifestCommit.isBatchCommitted(conf, dir, "fold-1"),
-      "committed ids must carry over")
-    // manifest-side fold + compact over the adopted layout
-    InvertedIndex.appendDelta(docs.filter(col("doc_id") % 5 === 0)
-      .withColumn("doc_id", col("doc_id") + 9000000L), dir,
-      batchId = Some("fold-2"))
-    InvertedIndex.compact(spark, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("bm25_migrate_s").toString
-    InvertedIndex.save(docs.unionByName(docs.filter(col("doc_id") % 5 === 0)
-      .withColumn("doc_id", col("doc_id") + 9000000L)), scratch)
-    assert(scores(dir) == scores(scratch),
-      "post-migration maintenance must equal a from-scratch build")
-  }
-
   test("a fold publish is all-or-nothing: terms/stats/postings move as one snapshot") {
     assume(sf.isDefined)
     val docs = graft.util.Tables(spark, sf.get, "documents")
       .filter(col("doc_id") < 300)
     val dir = java.nio.file.Files.createTempDirectory("bm25_mani_a").toString
-    InvertedIndex.save(docs.filter(col("doc_id") % 2 === 0), dir,
-      protocol = CommitProtocol.Manifest)
+    InvertedIndex.save(docs.filter(col("doc_id") % 2 === 0), dir)
     val before = scores(dir)
     val m0 = ManifestCommit.current(conf, dir)
     // crash between lay and publish: fresh dirs exist for all three
@@ -147,7 +109,7 @@ class Bm25ManifestSpec extends AnyFunSuite {
     assert(m1.table("terms") != m0.table("terms") &&
       m1.table("stats") != m0.table("stats"))
     val scratch = java.nio.file.Files.createTempDirectory("bm25_mani_s").toString
-    InvertedIndex.save(docs, scratch, protocol = CommitProtocol.Manifest)
+    InvertedIndex.save(docs, scratch)
     assert(scores(dir) == scores(scratch))
   }
 
@@ -156,8 +118,7 @@ class Bm25ManifestSpec extends AnyFunSuite {
     val docs = graft.util.Tables(spark, sf.get, "documents")
       .filter(col("doc_id") < 400)
     val dir = java.nio.file.Files.createTempDirectory("bm25_asof").toString
-    InvertedIndex.save(docs.filter(col("doc_id") % 5 =!= 0), dir,
-      protocol = CommitProtocol.Manifest)
+    InvertedIndex.save(docs.filter(col("doc_id") % 5 =!= 0), dir)
     val g1 = ManifestCommit.current(conf, dir).gen
     val before = scores(dir)
     InvertedIndex.appendDelta(docs.filter(col("doc_id") % 5 === 0), dir,

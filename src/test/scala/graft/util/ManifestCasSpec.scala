@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fact. [[ObjectStoreFs]] models the three store classes:
   * conditional-create (S3 with `If-None-Match`, HADOOP-19256) must go
   * through the createFile builder and surface a lost race at close();
-  * a store with NO atomicity story must be REFUSED loudly at protocol
-  * resolution time; and the operator escape hatch
+  * a store with NO atomicity story must be REFUSED loudly before a
+  * build lays any data; and the operator escape hatch
   * ([[ManifestCommit.AtomicCreateConfKey]]) must open it back up.
   * The race here is deliberately check-then-act-racy: the racer lands
   * in the exact create→close window a client-side exists check cannot
@@ -35,9 +35,10 @@ class ManifestCasSpec extends AnyFunSuite {
     assert(e.getMessage.contains(ManifestCommit.AtomicCreateConfKey),
       s"the refusal must point at the config key: ${e.getMessage}")
     assert(e.getMessage.contains(ManifestCommit.ConditionalCreateCapability))
-    // a BUILD must die at protocol resolution, before any data is laid
+    // a BUILD must die at its publishability check, before any data
+    // is laid
     val e2 = intercept[IllegalStateException] {
-      CommitProtocol.forBuild(conf, dir, CommitProtocol.Auto)
+      ManifestCommit.assertPublishable(conf, dir)
     }
     assert(e2.getMessage.contains(ManifestCommit.AtomicCreateConfKey))
   }
@@ -46,8 +47,7 @@ class ManifestCasSpec extends AnyFunSuite {
     val dir = s"unsafefs://${tmp("mc_hatch")}"
     val c = conf
     c.setBoolean(ManifestCommit.AtomicCreateConfKey, true)
-    assert(CommitProtocol.forBuild(c, dir, CommitProtocol.Auto) ==
-      CommitProtocol.Manifest)
+    ManifestCommit.assertPublishable(c, dir)
     val m = ManifestCommit.publish(c, dir,
       mm => ManifestCommit.addDir(mm, "t", "data/t/d-a", 1L))
     assert(m.gen == 1L)

@@ -320,34 +320,6 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(ManifestCommit.current(conf, dir).gen == g, "replays must not publish")
   }
 
-  test("vacuum never drops the last manifest referencing a grace-skipped legacy dir") {
-    val dir = java.nio.file.Files.createTempDirectory("mc_legacy").toString
-    // an adopted index: m1 references a legacy (non-data/) dir in place
-    rows(0, 10).write.parquet(s"$dir/legacy_t")
-    ManifestCommit.publish(conf, dir, m => ManifestCommit.setDirs(m, "t",
-      Seq(ManifestCommit.DirEntry("legacy_t", 10L))))
-    // a Major fold supersedes it with a data/ dir
-    val folded = ManifestCommit.newDataDir(dir, "t")
-    rows(0, 10).write.parquet(s"$dir/$folded")
-    ManifestCommit.publish(conf, dir, m => ManifestCommit.setDirs(m, "t",
-      Seq(ManifestCommit.DirEntry(folded, 10L))))
-    // vacuum inside the grace window: the young legacy dir is skipped —
-    // and m1, its ONLY record, must be retained (dropping it would
-    // orphan legacy_t forever: no future vacuum can see it)
-    ManifestCommit.vacuum(conf, dir, keepGens = 1) // default grace
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "legacy_t")))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "_manifests", "m1")),
-      "the last manifest referencing a skipped legacy dir must survive")
-    // past the grace window the next vacuum collects BOTH
-    ManifestCommit.vacuum(conf, dir, keepGens = 1, graceMs = 0L)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "legacy_t")),
-      "aged-out superseded legacy dir must be GC'd")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "_manifests", "m1")))
-    assert(readIds(dir) == (0L until 10L).toSet)
-  }
-
   test("empty index reads as empty; manifest round-trips its encoding") {
     val dir = java.nio.file.Files.createTempDirectory("mc_empty").toString
     assert(ManifestCommit.current(conf, dir) == ManifestCommit.Empty)

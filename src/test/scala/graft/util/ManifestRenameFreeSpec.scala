@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * "convenient rename" regression forever, and the create audit pins
   * the CAS: every `_manifests/m*` create must be overwrite=false.
   * Results are cross-checked against the same lifecycle on local disk
-  * — the store must be invisible to the answers.
+  * — the store must be invisible to the answers. Each lifecycle also
+  * points every entry point at a NEVER-BUILT sibling dir, which must
+  * fail loudly by name instead of reading as an empty index.
   */
 class ManifestRenameFreeSpec extends AnyFunSuite {
 
@@ -48,6 +50,50 @@ class ManifestRenameFreeSpec extends AnyFunSuite {
     }
   }
 
+  /** Every probe / append / compact entry point in `calls`, plus the
+    * streaming drain's batch-id gate, must throw on `dir` (a dir with
+    * no published index) with a message naming it.
+    */
+  private def assertRefusesNeverBuilt(dir: String)(calls: (() => Any)*): Unit =
+    (calls :+ (() => graft.streaming.DrainIds.pending(conf, dir, s"$dir-ckpt", 0L)))
+      .foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(dir), e.getMessage)
+      }
+
+  /** A MinHash dir holding only the params marker — a first build that
+    * crashed before its publish. Without the marker the meta check
+    * alone would refuse it, hiding the missing-index gate.
+    */
+  private def markerOnly(built: String, dir: String): String = {
+    val src = new org.apache.hadoop.fs.Path(built, "_graft_minhash_meta")
+    val dst = new org.apache.hadoop.fs.Path(dir, "_graft_minhash_meta")
+    org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(conf), src,
+      dst.getFileSystem(conf), dst, false, conf)
+    dir
+  }
+
+  private def assertMinHashRefuses(dir: String, docs: DataFrame): Unit =
+    assertRefusesNeverBuilt(dir)(
+      () => graft.dedup.Dedup.dedupAgainstMinHashIndex(docs, dir),
+      () => graft.dedup.Dedup.appendMinHashIndex(docs, dir),
+      () => graft.dedup.Dedup.probeAndAppendMinHashIndex(docs, dir, s"$dir-hits"),
+      () => graft.dedup.Dedup.compactMinHashIndex(spark, dir))
+
+  private def assertBm25Refuses(dir: String, docs: DataFrame): Unit =
+    assertRefusesNeverBuilt(dir)(
+      () => graft.text.InvertedIndex.probe(spark, dir, Seq("the")),
+      () => graft.text.InvertedIndex.appendDelta(docs, dir),
+      () => graft.text.InvertedIndex.compact(spark, dir))
+
+  private def assertIvfRefuses(dir: String, vecs: DataFrame): Unit =
+    assertRefusesNeverBuilt(dir)(
+      () => graft.vector.VectorOps.loadIvfIndex(spark, dir),
+      () => graft.vector.VectorOps.appendIvfIndex(vecs, dir),
+      () => graft.vector.VectorOps.compactIvfIndex(spark, dir),
+      () => graft.vector.PqOps.loadPqIndex(spark, dir),
+      () => graft.vector.PqOps.addToPqIndex(vecs, dir))
+
   test("minhash index lifecycle is rename-free on an object store") {
     assume(sf.isDefined)
     BanRenameFs.reset()
@@ -74,6 +120,8 @@ class ManifestRenameFreeSpec extends AnyFunSuite {
     ManifestCommit.vacuum(conf, ban, keepGens = 1, graceMs = 0L)
     assert(hits(ban) == hits(loc), "compact+vacuum changed probe results")
     assertClean()
+    assertMinHashRefuses(s"$ban-never", delta)
+    assertMinHashRefuses(markerOnly(ban, s"$ban-crashed"), delta)
   }
 
   test("bm25 index lifecycle is rename-free on an object store") {
@@ -102,6 +150,7 @@ class ManifestRenameFreeSpec extends AnyFunSuite {
     ManifestCommit.vacuum(conf, ban, keepGens = 1, graceMs = 0L)
     assert(topk(ban) == topk(loc), "compact+vacuum changed probe results")
     assertClean()
+    assertBm25Refuses(s"$ban-never", delta)
   }
 
   test("ivf index lifecycle is rename-free on an object store") {
@@ -131,5 +180,19 @@ class ManifestRenameFreeSpec extends AnyFunSuite {
     ManifestCommit.vacuum(conf, ban, keepGens = 1, graceMs = 0L)
     assert(topk(ban) == before, "compact+vacuum changed probe results")
     assertClean()
+    assertIvfRefuses(s"$ban-never", delta)
+  }
+
+  test("a never-built local dir is refused by every index entry point") {
+    assume(sf.isDefined)
+    val docs = Tables(spark, sf.get, "documents").filter(col("doc_id") < 30)
+    val vecs = Tables(spark, sf.get, "embeddings").filter(col("vec_id") < 30)
+    val built = locTmp("nb_mh_built")
+    graft.dedup.Dedup.saveMinHashIndex(docs, built)
+    val root = locTmp("nb_loc")
+    assertMinHashRefuses(s"$root/minhash", docs)
+    assertMinHashRefuses(markerOnly(built, s"$root/crashed"), docs)
+    assertBm25Refuses(s"$root/bm25", docs)
+    assertIvfRefuses(s"$root/ivf", vecs)
   }
 }

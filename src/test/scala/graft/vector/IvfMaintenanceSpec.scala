@@ -169,13 +169,11 @@ class IvfMaintenanceSpec extends AnyFunSuite {
   test("manifest append: a commuting retry across a racing REBUILD fails " +
       "loudly instead of landing rows coded under superseded centroids") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_rebuild_race").toString
-    VectorOps.saveIvfIndex(vecs(0, 80), dir, k = 4, iters = 2,
-      protocol = graft.util.CommitProtocol.Manifest)
+    VectorOps.saveIvfIndex(vecs(0, 80), dir, k = 4, iters = 2)
     val base = ManifestCommit.current(conf, dir)
     // the appender's batch was cell-assigned under base's centroids;
     // before its publish lands, a REBUILD retrains and replaces them
-    VectorOps.saveIvfIndex(vecs(0, 120), dir, k = 8, iters = 2,
-      protocol = graft.util.CommitProtocol.Manifest)
+    VectorOps.saveIvfIndex(vecs(0, 120), dir, k = 8, iters = 2)
     val batch = vecs(200, 10).withColumn("cell", lit(0L))
     val e = intercept[IllegalStateException] {
       IvfMaintenance.appendManifest(spark, dir, batch, None,

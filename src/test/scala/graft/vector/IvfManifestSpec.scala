@@ -4,14 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.util.{CommitProtocol, ManifestCommit, ManifestTiered}
+import graft.util.{ManifestCommit, ManifestTiered}
 
 /** The IVF index family on the versioned-manifest (object-store)
   * commit protocol, through the SAME public entry points (saveIvfIndex
   * / appendIvfIndex / compactIvfIndex / loadIvfIndex, plus the PQ
-  * flavor): probe results must be identical across protocols, tier
-  * states, and retries — the protocol is a deployment choice, never a
-  * semantics choice. ManifestCommitSpec holds the primitive-level
+  * flavor): probe results must be identical across tier states and
+  * retries. ManifestCommitSpec holds the primitive-level
   * guarantees; MinHashManifestSpec covers snapshot isolation and crash
   * orphans on the shared machinery.
   */
@@ -43,8 +42,7 @@ class IvfManifestSpec extends AnyFunSuite {
 
   test("manifest build + exactly-once append row-equal a same-centroid assignment of the full corpus") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_mani").toString
-    VectorOps.saveIvfIndex(vecs(0, 80), dir, k = 4, iters = 2,
-      protocol = CommitProtocol.Manifest)
+    VectorOps.saveIvfIndex(vecs(0, 80), dir, k = 4, iters = 2)
     assert(ManifestCommit.exists(conf, dir))
     VectorOps.appendIvfIndex(vecs(80, 20), dir, batchId = Some("b1"))
     // the foreachBatch-retry / re-run-CLI scenario: same batch again
@@ -66,8 +64,7 @@ class IvfManifestSpec extends AnyFunSuite {
 
   test("compaction folds the tail into a flat sorted run and is invisible to probes") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_mani_c").toString
-    VectorOps.saveIvfIndex(vecs(0, 160), dir, k = 4, iters = 2,
-      protocol = CommitProtocol.Manifest)
+    VectorOps.saveIvfIndex(vecs(0, 160), dir, k = 4, iters = 2)
     VectorOps.appendIvfIndex(vecs(160, 20), dir, batchId = Some("b1"))
     val before = probe(dir)
     assert(before.nonEmpty)
@@ -85,43 +82,9 @@ class IvfManifestSpec extends AnyFunSuite {
     assert(ManifestCommit.current(conf, dir).gen == m1.gen, "NoOp must not publish")
   }
 
-  test("zero-copy migration: a legacy rename IVF-PQ index adopts the manifest protocol, ADC probes unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_migrate").toString
-    // legacy layout with live tails + a committed batch token, and the
-    // SAME snapshot kept manifest-side as the probe truth (the scratch
-    // build is deterministic, so a second build reproduces it exactly)
-    graft.util.RenameFixtures.ivfIndex(spark, dir,
-      committed = Seq("b1")) { scratch =>
-      PqOps.savePqIndex(vecs(0, 160), scratch, k = 4, iters = 2)
-      PqOps.addToPqIndex(vecs(160, 20), scratch)
-    }
-    val truth = java.nio.file.Files.createTempDirectory("pq_migrate_t").toString
-    PqOps.savePqIndex(vecs(0, 160), truth, k = 4, iters = 2)
-    PqOps.addToPqIndex(vecs(160, 20), truth)
-    def adcOf(d: String) = PqOps.annPqIndexed(queries(5), PqOps.loadPqIndex(spark, d))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    def adc() = adcOf(dir)
-    val before = adcOf(truth)
-    assert(before.nonEmpty)
-    // pre-adoption the legacy index refuses probes with the fix named
-    val e = intercept[IllegalStateException] { adc() }
-    assert(e.getMessage.contains("index_migrate"), e.getMessage)
-    VectorOps.migrateIvfIndexToManifest(spark, dir)
-    assert(ManifestCommit.exists(conf, dir))
-    assert(adc() == before, "migration changed ADC probes")
-    assert(ManifestCommit.isBatchCommitted(conf, dir, "b1"))
-    // manifest-side add + compact over the adopted layout: both stores
-    // keep moving as a pair
-    PqOps.addToPqIndex(vecs(180, 20), dir, batchId = Some("b2"))
-    VectorOps.compactIvfIndex(spark, dir)
-    val idx = PqOps.loadPqIndex(spark, dir)
-    assert(idx.vectors.count() == 200 && idx.codes.count() == 200)
-  }
-
   test("PQ flavor: vectors and codes fold atomically in one publish; ADC probes survive compaction") {
     val dir = java.nio.file.Files.createTempDirectory("pq_mani").toString
-    PqOps.savePqIndex(vecs(0, 160), dir, k = 4, iters = 2,
-      protocol = CommitProtocol.Manifest)
+    PqOps.savePqIndex(vecs(0, 160), dir, k = 4, iters = 2)
     PqOps.addToPqIndex(vecs(160, 20), dir, batchId = Some("b1"))
     PqOps.addToPqIndex(vecs(160, 20), dir, batchId = Some("b1")) // retry no-ops
     val idx0 = PqOps.loadPqIndex(spark, dir)
@@ -143,8 +106,7 @@ class IvfManifestSpec extends AnyFunSuite {
 
   test("AS-OF loads probe a retained historical generation") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_asof").toString
-    VectorOps.saveIvfIndex(vecs(0, 80), dir, k = 4, iters = 2,
-      protocol = CommitProtocol.Manifest)
+    VectorOps.saveIvfIndex(vecs(0, 80), dir, k = 4, iters = 2)
     val g1 = ManifestCommit.current(conf, dir).gen
     val before = probe(dir)
     VectorOps.appendIvfIndex(vecs(80, 40), dir, batchId = Some("b1"))
