@@ -473,9 +473,9 @@ object JobRunner {
         }
       case "bm25_index_compact" =>
         // input = index dir from bm25_index_build. Folds the per-merge
-        // postings delta file sets back to one sorted file set per
-        // bucket (terms/stats already re-aggregate per merge); probe
-        // results identical, row-group term pruning restored.
+        // postings, df and stats tails into sorted runs or the base
+        // (df and stats re-summed); probe results identical, row-group
+        // term pruning restored.
         // --output_option vacuum_keep=K GCs superseded generations
         // inline (see JobCli.vacuumKeep).
         {
@@ -486,8 +486,8 @@ object JobRunner {
       case "bm25_index_merge" =>
         // input = DELTA documents parquet dir; --add_input = index dir
         // from bm25_index_build. Folds the delta in WITHOUT re-reading
-        // the indexed corpus: postings append, terms/stats re-aggregate
-        // and swap (text/InvertedIndex.appendDelta) — the per-crawl
+        // the indexed corpus: one tail dir each for postings, df and
+        // stats (text/InvertedIndex.appendDelta) — the per-crawl
         // index-maintenance path, bm25's counterpart of ann_index_update.
         // Batch id defaults to a digest of the input path + file
         // listing, so a re-run of the same command over unchanged

@@ -22,20 +22,24 @@ import org.apache.spark.sql.types.DoubleType
   *    terms' buckets, and the within-file term sort gives parquet
   *    row-group pruning inside each bucket.
   *  - `terms/bucket=B/`: (term, df) in the same bucketed layout.
-  *  - `stats/`: one row (n_docs, total_dl) — exact integer sums, so the
-  *    probe recomputes avgdl by one double division and scores match the
+  *  - `stats/`: (n_docs, total_dl) — exact integer sums, so the probe
+  *    recomputes avgdl by one double division and scores match the
   *    direct query bit for bit.
-  *  - `postings.l1` + `postings.tail`: the size-tiered maintenance
-  *    layout (graft.util.TieredIndex's policy over ManifestTiered) —
-  *    folds land in the flat tail in one manifest publish, [[compact]]
-  *    re-lays them into pruned bucket dirs on the tiered cadence.
+  *  - `<table>.l1` + `<table>.tail` for each of the three: the
+  *    size-tiered maintenance layout (graft.util.TieredIndex's policy
+  *    over ManifestTiered). A fold appends one flat tail dir per table
+  *    in one manifest publish and never rewrites what is there;
+  *    [[compact]] re-lays the tails into runs and bases on the tiered
+  *    cadence. df and stats are additive, so readers SUM them across
+  *    base ∪ runs ∪ tail: per probed term for df, over all rows for
+  *    stats.
   *
-  * A probe reads ONLY the probed buckets' files in the base and runs
+  * A probe lists and reads ONLY the probed buckets' dirs in the bases
   * (≤ |terms| of 64 directories each, asserted on the plan by
-  * Bm25IndexSpec) plus the compaction-bounded flat tail, never the
-  * corpus: query cost scales with the postings of the probed terms,
-  * not the collection — the inverted-file analogue of the IVF cell
-  * layout.
+  * Bm25IndexSpec) plus the row-filtered flat runs and compaction-bounded
+  * tails, never the corpus: query cost scales with the postings of the
+  * probed terms, not the collection — the inverted-file analogue of
+  * the IVF cell layout.
   */
 object InvertedIndex {
 
@@ -81,15 +85,24 @@ object InvertedIndex {
         .dropDuplicates("doc_id")
         .agg(coalesce(sum(col("dl")), lit(0L)).as("total_dl")))
 
+  /** Per-(term, bucket) document frequency of a postings frame. */
+  private def termsOf(postings: DataFrame): DataFrame =
+    postings.groupBy(col("term"), col("bucket")).agg(count(lit(1)).as("df"))
+      .select(col("term"), col("df"), col("bucket"))
+
+  /** The one (n_docs, total_dl) row summed over stats rows — every
+    * tier holds additive integer deltas, so the sum is exact.
+    */
+  private def summedStats(stats: DataFrame): DataFrame =
+    stats.agg(sum(col("n_docs")).as("n_docs"), sum(col("total_dl")).as("total_dl"))
+
   // ---- versioned-manifest (object-store) protocol arms ----
   //
-  // Tables: `postings` tiered (base partitioned by bucket; flat sorted
-  // L1 runs; flat tail), `terms` and `stats` replaced wholesale on
-  // every fold — the pair rides the SAME publish as the postings
-  // delta, so new-terms/old-stats can never co-exist (a single
-  // manifest file gives that atomicity outright). Probes resolve one
-  // snapshot — compaction and vacuum are invisible to them by
-  // construction.
+  // Tables: `postings`, `terms` and `stats` all tiered (base; flat L1
+  // runs; flat tail). A fold appends one tail dir to each in ONE
+  // publish, so a probe never sees a fold's postings without its df
+  // and stats rows. Probes resolve one snapshot — compaction and
+  // vacuum are invisible to them by construction.
 
   import graft.util.{ManifestCommit, ManifestTiered}
 
@@ -103,9 +116,7 @@ object InvertedIndex {
       val Seq(pd, td, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
         () => ManifestTiered.layDir(s, dir, "postings", postings,
           partitionBy = Seq("bucket"), sortKeys = Seq(col("term"), col("doc_id"))),
-        () => ManifestTiered.layDir(s, dir, "terms",
-          postings.groupBy(col("term"), col("bucket")).agg(count(lit(1)).as("df"))
-            .select(col("term"), col("df"), col("bucket")),
+        () => ManifestTiered.layDir(s, dir, "terms", termsOf(postings),
           partitionBy = Seq("bucket"), sortKeys = Seq(col("term"))),
         () => ManifestTiered.layDir(s, dir, "stats", statsOf(docs, postings),
           partitionBy = Nil, sortKeys = Nil)))
@@ -120,72 +131,37 @@ object InvertedIndex {
 
   private def appendDeltaManifest(deltaDocs: DataFrame, dir: String,
                                   batchId: Option[String]): Unit = {
-    // NOT a commuting update (terms/stats REPLACE aggregates derived
-    // from the snapshot read below), so a lost CAS retries the WHOLE
-    // fold against the fresh snapshot — the superseded lays become
-    // vacuum garbage, never wrong state
-    ManifestCommit.retryOnContention() {
-      appendDeltaManifestOnce(deltaDocs, dir, batchId)
-    }
-  }
-
-  private def appendDeltaManifestOnce(deltaDocs: DataFrame, dir: String,
-                                      batchId: Option[String]): Unit = {
     val s = deltaDocs.sparkSession
     val conf = s.sessionState.newHadoopConf()
     val m = ManifestCommit.current(conf, dir)
     // folding into a NEVER-BUILT dir would publish a real postings
-    // tail next to a ZERO-row stats table — every later probe would
-    // silently return empty top-k (the stats crossJoin yields nothing)
+    // tail with no base stats row — every later probe would score
+    // against the fold's documents alone
     if (m.gen == 0L)
       throw new IllegalStateException(
         s"$dir has no published index state — appendDelta folds into an " +
           s"EXISTING BM25 index; build one with InvertedIndex.save first " +
-          s"(a fold into nothing would commit an empty stats table and " +
-          s"every probe would silently return no rows).")
+          s"(a fold into nothing would commit stats without a base and " +
+          s"every probe would score against the fold alone).")
     if (batchId.exists(m.isCommitted)) return
     val postings = tokenizedPostings(deltaDocs).persist()
     try {
-      // postings: cheapest possible flat tail lay (compaction owns the
-      // re-sort); terms/stats: additive re-aggregates REPLACING their
-      // single-dir tables — vocabulary-sized and 1-row, orders of
-      // magnitude below postings
-      val deltaTerms = postings.groupBy(col("term"), col("bucket"))
-        .agg(count(lit(1)).as("df"))
-      val mergedTerms = ManifestCommit.readTable(s, dir, m, "terms", TermsSchema)
-        .select(col("term"), col("bucket"), col("df"))
-        .unionByName(deltaTerms)
-        .groupBy(col("term"), col("bucket")).agg(sum(col("df")).as("df"))
-        .select(col("term"), col("df"), col("bucket"))
-      val deltaStats = deltaDocs.select(col("doc_id"))
-        .agg(count(lit(1)).as("d_docs"))
-        .crossJoin(postings.select(col("doc_id"), col("dl"))
-          .dropDuplicates("doc_id")
-          .agg(coalesce(sum(col("dl")), lit(0L)).as("d_dl")))
-      // three independent lays off the persisted postings + snapshot
-      // reads — overlap their jobs from driver threads (§2.6); the
-      // terms/stats re-aggregates ride the postings tail's wall clock
+      // three flat tail lays off the persisted delta postings, overlapped
+      // from driver threads (§2.6); none reads the snapshot, so the
+      // publish commutes with any racing fold or compaction
       val Seq(pd, td, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
         () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("postings"),
           postings.select(col("term"), col("doc_id"), col("dl"), col("tf"), col("bucket")),
           partitionBy = Nil, sortKeys = Nil),
-        () => ManifestTiered.layDir(s, dir, "terms", mergedTerms,
-          partitionBy = Seq("bucket"), sortKeys = Seq(col("term"))),
-        () => ManifestTiered.layDir(s, dir, "stats",
-          ManifestCommit.readTable(s, dir, m, "stats", StatsSchema)
-            .crossJoin(deltaStats)
-            .select((col("n_docs") + col("d_docs")).as("n_docs"),
-              (col("total_dl") + col("d_dl")).as("total_dl")),
-          partitionBy = Nil, sortKeys = Nil)))
-      // ONE publish lands all three — atomically, with the batch id
-      ManifestCommit.publishAt(conf, dir, m, mm =>
-        ManifestCommit.setDirs(
-          ManifestCommit.setDirs(
-            ManifestCommit.addDir(mm, ManifestTiered.tailTable("postings"),
-              pd.dir, pd.rows),
-            "terms", Seq(td)),
-          "stats", Seq(sd)),
-        batchId); ()
+        () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("terms"),
+          termsOf(postings), partitionBy = Nil, sortKeys = Nil),
+        () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("stats"),
+          statsOf(deltaDocs, postings), partitionBy = Nil, sortKeys = Nil)))
+      ManifestCommit.publishCommuting(conf, dir, m, mm =>
+        Seq("postings" -> pd, "terms" -> td, "stats" -> sd).foldLeft(mm) {
+          case (acc, (t, e)) =>
+            ManifestCommit.addDir(acc, ManifestTiered.tailTable(t), e.dir, e.rows)
+        }, batchId); ()
     } finally postings.unpersist(blocking = false)
   }
 
@@ -195,13 +171,21 @@ object InvertedIndex {
         basePartitionBy = Seq("bucket"),
         baseSortKeys = Seq(col("term"), col("doc_id")),
         runSortKeys = Seq(col("bucket"), col("term"), col("doc_id")),
-        runRowsPerFile = 8L * 1000 * 1000)))
+        runRowsPerFile = 8L * 1000 * 1000),
+      ManifestTiered.FoldSpec("terms", TermsSchema,
+        basePartitionBy = Seq("bucket"),
+        baseSortKeys = Seq(col("term")),
+        runSortKeys = Seq(col("bucket"), col("term")),
+        runRowsPerFile = 8L * 1000 * 1000,
+        refold = _.groupBy(col("term"), col("bucket")).agg(sum(col("df")).as("df"))
+          .select(col("term"), col("df"), col("bucket"))),
+      // a global aggregate yields one row even over an empty tier (an
+      // index folded before stats were tiered): drop that null row
+      ManifestTiered.FoldSpec("stats", StatsSchema,
+        basePartitionBy = Nil, baseSortKeys = Nil, runSortKeys = Nil,
+        runRowsPerFile = 8L * 1000 * 1000,
+        refold = summedStats(_).filter(col("n_docs").isNotNull))))
 
-  /** BM25 top-k per probe term against the persisted index. The probe
-    * terms' bucket ids are computed by one bounded job over the literal
-    * term list (same xxhash64 the writer used — single-sourced), then
-    * pushed as a static partition filter.
-    */
   import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
   /** Explicit read schemas: an empty corpus writes no parquet parts
@@ -218,11 +202,16 @@ object InvertedIndex {
   private val StatsSchema = StructType(Seq(
     StructField("n_docs", LongType), StructField("total_dl", LongType)))
 
-  /** READ-ONLY: probes resolve ONE manifest snapshot for all three
+  /** BM25 top-k per probe term against the persisted index.
+    * READ-ONLY: probes resolve ONE manifest snapshot for all three
     * tables — consistent across any concurrent fold/compact/vacuum.
-    * Postings read base ∪ level-1 runs ∪ tail: the bucket IN-filter
-    * prunes the partitioned base and runs statically, and only the
-    * compaction-bounded flat tail is row-filtered.
+    * Each table reads base ∪ level-1 runs ∪ tail; df is summed per
+    * probed term and the stats rows are summed, so the scores are the
+    * ones a from-scratch build gives. The probe terms' bucket ids come
+    * from the writer's own bucket expression, folded over the literal
+    * term list on the driver (no Spark job); the bases are read from
+    * the probed `bucket=` dirs only, and the flat runs and tail are
+    * row-filtered on (bucket, term).
     *
     * `asOfGen`: score against a RETAINED HISTORICAL generation
     * (ManifestCommit.atGeneration) instead of the current snapshot.
@@ -236,16 +225,16 @@ object InvertedIndex {
       "InvertedIndex.probe")
     val m = asOfGen.map(g => ManifestCommit.atGeneration(conf, dir, g))
       .getOrElse(ManifestCommit.current(conf, dir))
+    // no distinct(): a Project over a LocalRelation folds into a local
+    // relation and collects on the driver, a distinct would shuffle
     val bucketIds = terms.toDF("term").select(bucketOf(col("term")).as("bucket"))
-      .distinct().as[Long].collect().toSeq
-    val postFilter =
-      col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*)
-    val post = ManifestTiered.read(s, dir, m, "postings",
-      PostingsSchema, Some(postFilter))
-    val df = ManifestCommit.readTable(s, dir, m, "terms", TermsSchema)
-      .filter(col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = ManifestCommit.readTable(s, dir, m, "stats", StatsSchema)
+      .as[Long].collect().toSeq.distinct
+    val probed = Some(bucketIds.map(b => s"bucket=$b"))
+    val inProbe = Some(col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*))
+    val post = ManifestTiered.read(s, dir, m, "postings", PostingsSchema, inProbe, probed)
+    val df = ManifestTiered.read(s, dir, m, "terms", TermsSchema, inProbe, probed)
+      .groupBy(col("term")).agg(sum(col("df")).as("df"))
+    val stats = summedStats(ManifestTiered.read(s, dir, m, "stats", StatsSchema))
       .select(col("n_docs"),
         // nullif: an empty corpus has n_docs = 0 and no postings — avgdl
         // is never consumed then, but ANSI mode would fail fast on 0/0
@@ -262,35 +251,32 @@ object InvertedIndex {
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
 
-  // ---- maintenance + size-tiered postings layout (manifest) ----
+  // ---- maintenance + size-tiered layout (manifest) ----
   //
   // The shared size-tiered layout/policy (graft.util.TieredIndex's
-  // plan over graft.util.ManifestTiered's tables): `postings` base is
-  // bucket-partitioned (pruned by a probe's bucket IN-filter),
-  // `postings.l1` runs are flat (bucket, term, doc_id)-sorted files
-  // (footer-stat pruned), `postings.tail` holds the fold deltas flat.
-  // Every fold also replaces the vocabulary-sized `terms` + 1-row
-  // `stats` pair in the SAME manifest publish, so a probe can never
-  // see new-terms/old-stats.
+  // plan over graft.util.ManifestTiered's tables), applied to all
+  // three tables: `postings` and `terms` bases are bucket-partitioned
+  // (a probe reads only its buckets' dirs), their `.l1` runs are flat
+  // (bucket, term[, doc_id])-sorted files (footer-stat pruned), and
+  // the `.tail`s hold the fold deltas flat. `stats` tiers hold
+  // additive (n_docs, total_dl) rows. Readers sum df and stats across
+  // tiers, so every tier state scores like a from-scratch build.
 
   /** Incremental maintenance: fold a DELTA corpus into an existing
     * index without re-reading the indexed corpus. doc_ids must be new
-    * (dedup/decontam are upstream's job). IO shape at scale:
+    * (dedup/decontam are upstream's job). APPEND-ONLY: the delta lands
+    * as one flat tail dir per table — its postings, its df per
+    * (term, bucket), and one (n_docs, total_dl) row — each a small
+    * unpartitioned write, never a 64-bucket-dir commit ([[compact]]
+    * owns the re-layout into pruned bucket dirs on the tiered
+    * cadence). Nothing already in the index is read or rewritten, and
+    * with a `batchId` a batch already committed in the resolved
+    * snapshot is a no-op.
     *
-    *  - postings: APPEND-ONLY — the delta lands as one flat tail dir
-    *    (one small unpartitioned write, never a 64-bucket-dir commit;
-    *    [[compact]] owns the re-layout into pruned bucket dirs on the
-    *    tiered cadence). The index's dominant bytes are never
-    *    rewritten, and with a `batchId` a batch already committed in
-    *    the resolved snapshot is a no-op.
-    *  - terms: df is additive, but the table must be REPLACED — base ∪
-    *    delta re-aggregated (vocabulary-sized, orders of magnitude
-    *    below postings).
-    *  - stats: one additive row, same replace.
-    *
-    * All three land in ONE manifest publish; a lost CAS retries the
-    * whole fold against the fresh snapshot (the update is NOT
-    * commuting — terms/stats derive from the snapshot read).
+    * All three land in ONE manifest publish. The update only adds
+    * dirs, so it commutes: a lost CAS re-resolves the newer snapshot
+    * and re-applies without re-laying (`ManifestCommit.publishCommuting`)
+    * — racing folds with different batch ids all land exactly once.
     */
   def appendDelta(deltaDocs: DataFrame, dir: String,
                   batchId: Option[String] = None): Unit = {
@@ -309,9 +295,11 @@ object InvertedIndex {
     * untouched); the base rewrites ONLY when the L1+tail mass reaches
     * MajorRatio × base, so the O(base) rewrite amortizes over O(base)
     * of appended bytes — the r12 single-level design rewrote the whole
-    * postings table every cycle. terms/stats are already one file set
-    * per fold and are not touched. One manifest publish per fold;
-    * probes resolve a snapshot, so compaction needs no scheduling.
+    * postings table every cycle. terms and stats fold the SAME action
+    * (df and the stats columns re-summed over the folded mass) in the
+    * same publish, so their tails empty together with the postings
+    * tail. One manifest publish per fold; probes resolve a snapshot,
+    * so compaction needs no scheduling.
     *
     * `vacuumKeep`: run [[ManifestCommit.vacuum]] inline after the
     * fold, retaining the newest K generations — the 24/7 deployment
@@ -327,15 +315,14 @@ object InvertedIndex {
     vacuumKeep.foreach(k => ManifestCommit.vacuum(conf, dir, keepGens = k))
   }
 
-  /** The (n_docs, total_dl) stats row — the CLI verbs' bounded return
-    * frame.
+  /** The (n_docs, total_dl) stats row, summed across tiers — the CLI
+    * verbs' bounded return frame.
     */
   def readStats(s: SparkSession, dir: String): DataFrame = {
-    ManifestCommit.requireIndex(
-      s.sessionState.newHadoopConf(), dir, "InvertedIndex.readStats")
-    ManifestCommit.readTable(s, dir,
-      ManifestCommit.current(s.sessionState.newHadoopConf(), dir),
-      "stats", StatsSchema)
+    val conf = s.sessionState.newHadoopConf()
+    ManifestCommit.requireIndex(conf, dir, "InvertedIndex.readStats")
+    summedStats(ManifestTiered.read(s, dir, ManifestCommit.current(conf, dir),
+      "stats", StatsSchema))
   }
 
   /** Per-tier postings mass + the size policy's pending decision — the
@@ -473,9 +460,8 @@ object InvertedIndex {
 
   /** The bm25_index_compact_topk lifecycle on the versioned-manifest
     * (object-store) commit protocol: 80% built, 20% folded via the
-    * manifest appendDelta (postings tail + terms/stats replace in ONE
-    * publish), the tail Minor-folded into
-    * a flat sorted run, then probed. Oracle = the SAME full-corpus
+    * manifest appendDelta (one tail dir per table in ONE publish), the
+    * tails Minor-folded into flat sorted runs, then probed. Oracle = the SAME full-corpus
     * BM25 SQL — the commit protocol must be invisible to retrieval,
     * hash-checked. Each invocation rewinds to the post-fold snapshot
     * by dropping the previous compaction's generations and vacuuming

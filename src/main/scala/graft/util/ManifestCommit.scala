@@ -464,9 +464,9 @@ object ManifestCommit {
     * dirs fully valid, so the writer re-resolves the new current
     * manifest and re-applies. Appends therefore no longer waste their
     * lay work when two writers race one index. NEVER use for
-    * folds/compactions: their updates REPLACE table lists derived
-    * from the snapshot they read, so re-applying over a newer base
-    * would silently drop a racer's concurrent append — those stay
+    * compactions or rebuilds: their updates REPLACE table lists
+    * derived from the snapshot they read, so re-applying over a newer
+    * base would silently drop a racer's concurrent append — those stay
     * fail-loudly single-writer.
     *
     * "Valid against any newer snapshot" is a claim about the LAID
@@ -509,13 +509,11 @@ object ManifestCommit {
   val ContentionRetries = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Bounded retry-with-backoff on [[ManifestContentionException]] —
-    * the ONE retry policy for contention-tolerant steps: commuting
-    * publishes ([[publishCommuting]]) and whole-step retries whose
-    * body re-reads a fresh snapshot and recomputes (the BM25 fold).
-    * Retries nothing else: the unsafe-store refusal and every other
-    * failure propagate on the first throw.
+    * the retry policy of [[publishCommuting]]. Retries nothing else:
+    * the unsafe-store refusal and every other failure propagate on the
+    * first throw.
     */
-  def retryOnContention[T](maxRetries: Int = 5)(body: => T): T = {
+  private def retryOnContention[T](maxRetries: Int)(body: => T): T = {
     var attempt = 0
     while (true) {
       try return body
@@ -695,15 +693,34 @@ object ManifestCommit {
     * each scan): partition discovery then runs per root, where a
     * single multi-root read of partitioned dirs would conflict across
     * roots.
+    *
+    * `partitions`: for partitioned dirs, read only these partition
+    * subdirs (e.g. `bucket=7`) of each dir, skipping the ones a dir
+    * lacks; the `basePath` option keeps the partition column. A probe
+    * then lists only the dirs it touches — a whole-dir read of a
+    * 64-bucket tree crosses Spark's parallel-discovery threshold and
+    * pays a listing job per scan.
     */
   def readTable(spark: SparkSession, indexDir: String, m: Manifest,
-                table: String, schema: StructType): DataFrame = {
+                table: String, schema: StructType,
+                partitions: Option[Seq[String]] = None): DataFrame = {
     val dirs = m.table(table).map(d => s"$indexDir/$d")
-    if (dirs.isEmpty)
+    val scans = partitions match {
+      case None => dirs.map(spark.read.schema(schema).parquet(_))
+      case Some(ps) =>
+        val f = fs(spark.sessionState.newHadoopConf(), indexDir)
+        dirs.flatMap { root =>
+          val present = ps.distinct.map(p => s"$root/$p")
+            .filter(p => f.exists(new Path(p)))
+          if (present.isEmpty) None
+          else Some(spark.read.schema(schema).option("basePath", root)
+            .parquet(present: _*))
+        }
+    }
+    if (scans.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else dirs.map(spark.read.schema(schema).parquet(_))
-      .reduce(_.unionByName(_))
+    else scans.reduce(_.unionByName(_))
   }
 
   /** Garbage-collect: delete data dirs referenced by NO manifest in

@@ -43,12 +43,14 @@ object ManifestTiered {
     * snapshot. The optional filter prunes the (partitioned) base
     * statically and the flat runs/tail via parquet footer stats —
     * callers must keep it to direct column predicates for the latter
-    * to engage.
+    * to engage. `partitions` limits the BASE to those partition subdirs
+    * ([[ManifestCommit.readTable]]); runs and tail are flat.
     */
   def read(spark: SparkSession, indexDir: String, m: Manifest, name: String,
-           schema: StructType, filter: Option[Column] = None): DataFrame = {
+           schema: StructType, filter: Option[Column] = None,
+           partitions: Option[Seq[String]] = None): DataFrame = {
     def f(df: DataFrame) = filter.map(df.filter).getOrElse(df)
-    f(ManifestCommit.readTable(spark, indexDir, m, name, schema))
+    f(ManifestCommit.readTable(spark, indexDir, m, name, schema, partitions))
       .unionByName(f(ManifestCommit.readTable(spark, indexDir, m, l1Table(name), schema)))
       .unionByName(f(ManifestCommit.readTable(spark, indexDir, m, tailTable(name), schema)))
   }

@@ -7,6 +7,17 @@ import org.apache.spark.sql.SparkSession
   * rather than the 200 default that over-shards small local runs).
   */
 object Sessions {
+
+  /** `spark.sql.codegen.cache.maxEntries` for every session built here:
+    * about four times the generated-class working set measured with an
+    * unbounded cache — a whole graftbench `index_maintain` run (set-up,
+    * warm-up, two batches with probes and compactions) compiles 203
+    * distinct classes, a whole `crawl_scan` run 62. Spark's default LRU
+    * of 100 is below the first, so every maintenance batch recompiled
+    * ~106 classes (~1.4–2.2 s of compile time per batch on 4 vCPU).
+    */
+  private val CodegenCacheEntries = 800
+
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
             appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -19,6 +30,9 @@ object Sessions {
       // iterative jobs (PageRank, connected components) checkpoint every
       // round; without this the files accumulate for the session's life
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      // generated-class cache: JVM-global and sized once, by the first
+      // session that generates code
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -6,11 +6,30 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.{ManifestCommit, ManifestTiered}
 
+/** Holds every fold that reaches it until `parties` distinct folds
+  * have: both racing folds then lay against the snapshot each resolved
+  * before laying, so their publishes contend for one generation.
+  */
+private object FoldGate {
+  private val arrived = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  @volatile private var parties = 0
+  def reset(n: Int): Unit = { arrived.clear(); parties = n }
+  def pass(fold: Int): Unit = {
+    arrived.add(fold)
+    val deadline = System.currentTimeMillis() + 30000L
+    while (arrived.size < parties && System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
+  }
+}
+
 /** The BM25 inverted index on the versioned-manifest (object-store)
   * commit protocol: build / delta fold / compact / probe through the
-  * public entry points, score-identical to a from-scratch build — and
-  * with the postings-tail + terms + stats triple landing in ONE
-  * manifest publish (cross-table atomicity without a shared marker).
+  * public entry points, score-identical to a from-scratch build — with
+  * a fold landing one flat tail dir per table (postings, terms, stats)
+  * in ONE manifest publish, readers summing df and stats across tiers,
+  * and probes listing only the probed bucket dirs. The fold, racing,
+  * compaction and probe-construction cases run on a small generated
+  * corpus, so they need no external test data.
   */
 class Bm25ManifestSpec extends AnyFunSuite {
 
@@ -27,6 +46,34 @@ class Bm25ManifestSpec extends AnyFunSuite {
       .find(d => new java.io.File(d).exists())
 
   private val terms = Seq("join", "vector", "filter", "dup")
+
+  /** `n` documents (doc_id 0 until n) over a 400-word vocabulary with
+    * skewed frequencies, the probe terms among the common words —
+    * enough vocabulary to fill all 64 term buckets. Deterministic.
+    */
+  private def corpus(n: Int): org.apache.spark.sql.DataFrame = {
+    val vocab = terms ++ (0 until 396).map(i => s"w$i")
+    val rng = new java.util.Random(20261018L)
+    val rows = (0 until n).map { id =>
+      val len = 5 + rng.nextInt(40)
+      val words = Seq.fill(len) {
+        vocab(math.min(vocab.size - 1, (math.pow(rng.nextDouble(), 3) * vocab.size).toInt))
+      }
+      (id.toLong, words.mkString(" "))
+    }
+    spark.createDataFrame(rows).toDF("doc_id", "text")
+  }
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def statsRow(dir: String): (Long, Long) = {
+    val rows = InvertedIndex.readStats(spark, dir).collect()
+    assert(rows.length == 1, s"readStats must return one summed row, got ${rows.length}")
+    (rows(0).getLong(0), rows(0).getLong(1))
+  }
+
+  private val tiered = Seq("postings", "terms", "stats")
 
   private def scores(dir: String): Set[(String, Long, Double, Int)] =
     InvertedIndex.probe(spark, dir, terms)
@@ -67,10 +114,8 @@ class Bm25ManifestSpec extends AnyFunSuite {
   }
 
   test("a fold into a never-built manifest dir fails loudly instead of committing an empty-stats index") {
-    assume(sf.isDefined)
-    val docs = graft.util.Tables(spark, sf.get, "documents")
-      .filter(col("doc_id") < 100)
-    val dir = java.nio.file.Files.createTempDirectory("bm25_nobuild").toString
+    val docs = corpus(100)
+    val dir = tmp("bm25_nobuild")
     // make the dir resolve as manifest-protocol without a build (what
     // a mistyped object-store path looks like)
     java.nio.file.Files.createDirectories(
@@ -83,34 +128,161 @@ class Bm25ManifestSpec extends AnyFunSuite {
       "the refused fold must publish nothing")
   }
 
-  test("a fold publish is all-or-nothing: terms/stats/postings move as one snapshot") {
-    assume(sf.isDefined)
-    val docs = graft.util.Tables(spark, sf.get, "documents")
-      .filter(col("doc_id") < 300)
-    val dir = java.nio.file.Files.createTempDirectory("bm25_mani_a").toString
+  test("a fold appends one tail dir per table in ONE publish and leaves every base untouched") {
+    val docs = corpus(300)
+    val dir = tmp("bm25_mani_a")
     InvertedIndex.save(docs.filter(col("doc_id") % 2 === 0), dir)
     val before = scores(dir)
     val m0 = ManifestCommit.current(conf, dir)
-    // crash between lay and publish: fresh dirs exist for all three
-    // tables, no manifest — probes must keep resolving the OLD terms +
-    // OLD stats + OLD postings (never a mix)
-    val orphanTerms = ManifestCommit.newDataDir(dir, "terms")
-    docs.limit(0)
-      .select(lit("x").as("term"), lit(999L).as("df"), lit(0L).as("bucket"))
+    // crash between lay and publish: fresh dirs exist, no manifest —
+    // probes must keep resolving the OLD snapshot (never a mix)
+    val orphanTerms = ManifestCommit.newDataDir(dir, ManifestTiered.tailTable("terms"))
+    spark.range(1)
+      .select(lit("join").as("term"), lit(999L).as("df"), lit(0L).as("bucket"))
       .write.parquet(s"$dir/$orphanTerms")
     assert(scores(dir) == before, "unpublished table dirs leaked into a probe")
     assert(ManifestCommit.current(conf, dir).gen == m0.gen)
-    // the real fold lands, replacing terms/stats and appending postings
-    // tail in ONE generation
     InvertedIndex.appendDelta(docs.filter(col("doc_id") % 2 === 1), dir,
       batchId = Some("fold-2"))
     val m1 = ManifestCommit.current(conf, dir)
     assert(m1.gen == m0.gen + 1, "the fold must be exactly one publish")
-    assert(m1.table("terms") != m0.table("terms") &&
-      m1.table("stats") != m0.table("stats"))
-    val scratch = java.nio.file.Files.createTempDirectory("bm25_mani_s").toString
+    tiered.foreach { t =>
+      val tail = ManifestTiered.tailTable(t)
+      assert(m1.table(tail).size == m0.table(tail).size + 1,
+        s"the fold must add exactly one $tail dir")
+      assert(m1.table(t) == m0.table(t), s"the fold rewrote the $t base")
+      assert(m1.table(ManifestTiered.l1Table(t)) == m0.table(ManifestTiered.l1Table(t)))
+    }
+    assert(m1.rows(ManifestTiered.tailTable("stats")) == 1L)
+    val scratch = tmp("bm25_mani_s")
     InvertedIndex.save(docs, scratch)
     assert(scores(dir) == scores(scratch))
+    assert(statsRow(dir) == statsRow(scratch))
+  }
+
+  test("Minor and Major compaction empty the terms/stats tails; every tier state probes like a from-scratch build") {
+    val docs = corpus(450)
+    val dir = tmp("bm25_tiers")
+    def upTo(n: Int) = docs.filter(col("doc_id") < n)
+    def scratch(n: Int) = { val d = tmp("bm25_tiers_s"); InvertedIndex.save(upTo(n), d); d }
+    def sameAs(want: String, state: String): Unit = {
+      assert(scores(dir) == scores(want), s"probe differs from a from-scratch build $state")
+      assert(statsRow(dir) == statsRow(want), s"readStats differs $state")
+    }
+    InvertedIndex.save(upTo(200), dir)
+    InvertedIndex.appendDelta(docs.filter(col("doc_id") >= 200 && col("doc_id") < 240), dir)
+    val s240 = scratch(240)
+    sameAs(s240, "after a fold")
+    assert(InvertedIndex.compactionTiers(spark, dir)._1 == "Minor")
+    val m0 = ManifestCommit.current(conf, dir)
+    InvertedIndex.compact(spark, dir)
+    val m1 = ManifestCommit.current(conf, dir)
+    tiered.foreach { t =>
+      assert(m1.table(ManifestTiered.tailTable(t)).isEmpty, s"Minor left $t tail dirs")
+      assert(m1.table(ManifestTiered.l1Table(t)).size ==
+        m0.table(ManifestTiered.l1Table(t)).size + 1, s"Minor must add one $t run")
+      assert(m1.table(t) == m0.table(t), s"Minor rewrote the $t base")
+    }
+    sameAs(s240, "after a Minor compaction")
+    // runs + tail now outweigh the base: the next cycle is a Major
+    InvertedIndex.appendDelta(docs.filter(col("doc_id") >= 240), dir)
+    val s450 = scratch(450)
+    sameAs(s450, "with a run and a tail")
+    assert(InvertedIndex.compactionTiers(spark, dir)._1 == "Major")
+    InvertedIndex.compact(spark, dir)
+    val m2 = ManifestCommit.current(conf, dir)
+    tiered.foreach { t =>
+      assert(m2.table(ManifestTiered.tailTable(t)).isEmpty, s"Major left $t tail dirs")
+      assert(m2.table(ManifestTiered.l1Table(t)).isEmpty, s"Major left $t runs")
+      assert(m2.table(t).size == 1 && m2.table(t) != m1.table(t), s"Major must replace the $t base")
+    }
+    assert(m2.rows("stats") == 1L, "a Major folds stats into one row")
+    sameAs(s450, "after a Major compaction")
+  }
+
+  test("racing folds with different batch ids both land and score like a from-scratch build") {
+    val docs = corpus(300)
+    val dir = tmp("bm25_race")
+    InvertedIndex.save(docs.filter(col("doc_id") < 200), dir)
+    val g0 = ManifestCommit.current(conf, dir).gen
+    // each fold's tokenize pass waits at the gate for the other fold,
+    // so both have resolved generation g0 before either publishes
+    val gated = udf((text: String, fold: Int) => { FoldGate.pass(fold); text })
+    def fold(i: Int, lo: Int, hi: Int): Unit =
+      InvertedIndex.appendDelta(
+        docs.filter(col("doc_id") >= lo && col("doc_id") < hi).coalesce(1)
+          .withColumn("text", gated(col("text"), lit(i))),
+        dir, batchId = Some(s"race-$i"))
+    FoldGate.reset(2)
+    val retries0 = ManifestCommit.ContentionRetries.get()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val racers = Seq(1 -> (200, 250), 2 -> (250, 300)).map { case (i, (lo, hi)) =>
+      val t = new Thread(() =>
+        try fold(i, lo, hi) catch { case e: Throwable => errors.add(e); () })
+      t.start()
+      t
+    }
+    racers.foreach(_.join(120000L))
+    assert(racers.forall(!_.isAlive), "a racing fold did not finish")
+    assert(errors.isEmpty, s"a racing fold failed: ${errors.peek()}")
+    val m = ManifestCommit.current(conf, dir)
+    assert(m.gen == g0 + 2, "both folds must publish, one generation each")
+    assert(ManifestCommit.isBatchCommitted(conf, dir, "race-1") &&
+      ManifestCommit.isBatchCommitted(conf, dir, "race-2"))
+    assert(ManifestCommit.ContentionRetries.get() > retries0,
+      "the folds resolved one snapshot, so one publish must have retried")
+    tiered.foreach(t => assert(m.table(ManifestTiered.tailTable(t)).size == 2))
+    val scratch = tmp("bm25_race_s")
+    InvertedIndex.save(docs, scratch)
+    assert(scores(dir) == scores(scratch))
+    assert(statsRow(dir) == statsRow(scratch))
+  }
+
+  test("building a probe starts no Spark job and lists only the probed bucket dirs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = tmp("bm25_probe_jobs")
+    InvertedIndex.save(corpus(300), dir)
+    val probeTerms = Seq("join", "dup")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    val group = s"bm25-probe-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    sc.addSparkListener(listener)
+    val probe =
+      try {
+        sc.setJobGroup(group, "probe construction")
+        val p = try InvertedIndex.probe(spark, dir, probeTerms) finally sc.clearJobGroup()
+        // listener events arrive in order: once this job's start is
+        // seen, every job construction started has been seen too
+        sc.setJobGroup(sentinel, "sentinel")
+        try spark.range(1).count() finally sc.clearJobGroup()
+        val deadline = System.currentTimeMillis() + 30000L
+        while (!groups.contains(sentinel) && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+        assert(groups.contains(sentinel), "the listener never saw the sentinel job")
+        p
+      } finally sc.removeSparkListener(listener)
+    assert(!groups.contains(group), "building the probe started a Spark job")
+    val m = ManifestCommit.current(conf, dir)
+    val buckets = probeTerms.map(t => spark.range(1)
+      .select(pmod(xxhash64(lit(t)), lit(InvertedIndex.NumBuckets.toLong)))
+      .head().getLong(0)).toSet
+    val roots = probe.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toUri.getPath)
+    }.flatten
+    Seq("postings", "terms").foreach { t =>
+      val base = new java.io.File(dir, m.table(t).head).getAbsolutePath
+      val underBase = roots.filter(_.startsWith(base))
+      assert(underBase.nonEmpty, s"no $t base scan in the probe plan")
+      assert(underBase.toSet == buckets.map(b => s"$base/bucket=$b"),
+        s"the $t base scan must read only the probed bucket dirs, got $underBase")
+    }
   }
 
   test("AS-OF probes score against a retained historical generation") {
