@@ -128,7 +128,9 @@ class Bm25ManifestSpec extends AnyFunSuite {
       "the refused fold must publish nothing")
   }
 
-  test("a fold appends one tail dir per table in ONE publish and leaves every base untouched") {
+  // a fold appends one tail dir per table in ONE publish and leaves
+  // every base untouched
+  test("a fold publish is all-or-nothing: terms/stats/postings move as one snapshot") {
     val docs = corpus(300)
     val dir = tmp("bm25_mani_a")
     InvertedIndex.save(docs.filter(col("doc_id") % 2 === 0), dir)
