@@ -1,6 +1,81 @@
 package graft
+
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+
 object Bench {
+
+  /** Runs per query: `SPARK_GRAFT_BENCH_RUNS`, default 3. At n=1,
+    * sub-second queries swing ±40% run-to-run locally and a regression
+    * can't be told from noise; the median of N is a steady-state number.
+    * The graded total is the sum of the sweep's medians.
+    */
+  private[graft] def runsPerQuery: Int =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
+
+  private val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
+
+  /** Per-query session-state barrier: a query must not inherit another
+    * query's leaked state. r6's 4-10× neighbor pollution traced to the
+    * old HITS implementation's per-round DECIMAL(38,0) materializations —
+    * with that fixed, an A/B at local[32]/sf0.1 showed every recorded
+    * median within 1.5× of its standalone steady-state cost. The barrier
+    * that remains is the CHEAP reset set: leaked cache entries, persistent
+    * RDDs, and the memory-sink temp views completed stream queries leave
+    * behind (each holds its full result for the session otherwise). A
+    * forced System.gc() per query was tried and REJECTED: it made the
+    * persisted-index probe path 8× slower (soft-reference/code-cache
+    * churn) — worse than the residue it was meant to clear.
+    */
+  private[graft] def barrier(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.catalog.listTables().collect().filter(_.isTemporary)
+      .foreach(t => spark.catalog.dropTempView(t.name))
+  }
+
+  /** Times one query at the bench cadence: `runs` runs, then `reset`
+    * (the [[barrier]] unless a caller substitutes its own), then the
+    * median run time. A run that throws ends the query: the result is
+    * the exception, never its fail-fast time, and the cause is printed
+    * to stderr. The reset runs either way.
+    */
+  private[graft] def timeQuery(spark: SparkSession, name: String, runs: Int,
+                               reset: SparkSession => Unit = barrier)(
+                               query: => Any): Either[Throwable, Double] = {
+    val gc0 = gcMs
+    val outcome =
+      try {
+        val times = Seq.fill(runs) {
+          val t0 = System.nanoTime()
+          query
+          (System.nanoTime() - t0) / 1e9
+        }.sorted
+        Right(times(times.size / 2))
+      } catch { case e: Throwable => Left(e) }
+    reset(spark)
+    outcome match {
+      case Left(e) => System.err.println(s"[bench] $name failed: $e")
+      case Right(med) if debug =>
+        val rt = Runtime.getRuntime
+        val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1 << 20)
+        val storeMb = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1 << 20)
+        val ccMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+          .filter(_.getName.startsWith("CodeHeap")).map(_.getUsage.getUsed).sum / (1 << 20)
+        System.err.println(
+          f"[benchdbg] $name%-28s med=$med%7.2fs gc=+${gcMs - gc0}%5dms heap=${heapMb}%5dMB store=${storeMb}%4dMB codecache=${ccMb}%4dMB rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
+      case _ =>
+    }
+    outcome
+  }
+
+  private def gcMs: Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -42,35 +117,7 @@ object Bench {
         .outputMode("complete").start()
       q.processAllAvailable(); q.stop()
     } catch { case _: Throwable => }
-    // median of N runs per query (default 3): at n=1, sub-second queries
-    // swing ±40% run-to-run locally and a regression can't be told from
-    // noise; the median is a steady-state number. Total = sum of medians.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // per-query session-state barrier (r6→r7): r6's 4-10× neighbor
-    // pollution traced to the old HITS implementation's per-round
-    // DECIMAL(38,0) materializations — with that fixed, an A/B at
-    // local[32]/sf0.1 shows every recorded median within 1.5× of its
-    // IterAB standalone cost. The barrier that remains is the CHEAP
-    // reset set: leaked cache entries, persistent RDDs, and the
-    // memory-sink temp views completed stream queries leave behind
-    // (each holds its full result for the session otherwise). A forced
-    // System.gc() per query was tried and REJECTED: it made the
-    // persisted-index probe path 8× slower (soft-reference/code-cache
-    // churn) — worse than the residue it was meant to clear.
-    // SPARK_GRAFT_BENCH_BARRIER=0 disables (for A/B-ing the barrier).
-    val useBarrier = !sys.env.get("SPARK_GRAFT_BENCH_BARRIER").contains("0")
-    val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
-    import scala.jdk.CollectionConverters._
-    def gcMs: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def barrier(): Unit = {
-      // a query must not inherit another query's leaked state:
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.listTables().collect().filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-    }
+    val runs = runsPerQuery
     val wall0 = System.nanoTime()
     // sorted name order: Map iteration order is hash-based, so adding a
     // query used to reshuffle every query's position — round-over-round
@@ -80,37 +127,18 @@ object Bench {
     // latency: an AnalysisException returns in ~60ms, and folding that
     // into the total under-reports the round by the query's real cost
     // while round-over-round totals silently compare different query sets
-    val raw = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val gc0 = gcMs
-      var failed = false
-      val times = Seq.fill(runs) {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => failed = true }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      if (useBarrier) barrier()
-      else spark.sharedState.cacheManager.clearCache()
-      if (debug) {
-        val rt = Runtime.getRuntime
-        val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1 << 20)
-        val storeMb = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1 << 20)
-        val ccMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-          .asScala.filter(_.getName.startsWith("CodeHeap"))
-          .map(_.getUsage.getUsed).sum / (1 << 20)
-        System.err.println(
-          f"[benchdbg] $name%-28s med=${times(times.size / 2)}%7.2fs gc=+${gcMs - gc0}%5dms heap=${heapMb}%5dMB store=${storeMb}%4dMB codecache=${ccMb}%4dMB rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
-      }
-      (name, times(times.size / 2), failed)
+    val sweep = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> timeQuery(spark, name, runs)(fn(spark, sfDir).count())
     }
-    val failedNames = raw.collect { case (n, _, true) => n }
-    val results = raw.collect { case (n, t, false) => n -> t }
+    val results = sweep.collect { case (n, Right(t)) => n -> t }
+    val sweepFailed = sweep.collect { case (n, Left(_)) => n }
     // isolated steady-state re-measurement for the environment-sensitive
     // queries (iterative graph jobs: many short stages + checkpoint I/O —
     // their graded medians have swung 4-6× round-over-round on identical
     // binaries). Re-run each AFTER the full sweep with the barrier
-    // applied, mirroring tools/IterAB: if the graded median disagrees
-    // with its own steady number in the SAME JSON, the swing is
-    // self-evidently environmental, not a plan regression.
+    // applied: if the graded median disagrees with its own steady number
+    // in the SAME JSON, the swing is self-evidently environmental, not a
+    // plan regression.
     // the stateful stream drains join the graph trio: their state-store
     // setup/maintenance timing drifts across a long contiguous sweep
     // (r9: stream_join 3.1 s early-sweep vs 7.6 s late-sweep, same
@@ -129,25 +157,13 @@ object Bench {
       "stream_join", "stream_windows") ++
       results.filter(_._2 > 1.0).sortBy(-_._2).take(30).map(_._1))
       .distinct.sorted
-      .filter(SparkEntry.queries.contains).filterNot(failedNames.contains)
-    val steady = steadySet.map { name =>
-      val fn = SparkEntry.queries(name)
-      val times = Seq.fill(runs) {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      barrier()
-      if (debug) {
-        val rt = Runtime.getRuntime
-        val ccMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-          .asScala.filter(_.getName.startsWith("CodeHeap"))
-          .map(_.getUsage.getUsed).sum / (1 << 20)
-        System.err.println(
-          f"[benchdbg-steady] $name%-28s med=${times(times.size / 2)}%7.2fs heap=${(rt.totalMemory() - rt.freeMemory()) / (1 << 20)}%5dMB codecache=${ccMb}%4dMB rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
-      }
-      name -> times(times.size / 2)
+      .filter(SparkEntry.queries.contains).filterNot(sweepFailed.contains)
+    val steadyRuns = steadySet.map { name =>
+      name -> timeQuery(spark, name, runs)(SparkEntry.queries(name)(spark, sfDir).count())
     }
+    // a query that throws only in the steady pass has no steady number
+    val steady = steadyRuns.collect { case (n, Right(t)) => n -> t }
+    val failedNames = sweepFailed ++ steadyRuns.collect { case (n, Left(_)) => n }
     val wall = (System.nanoTime() - wall0) / 1e9
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -155,7 +171,8 @@ object Bench {
     val steadyJson = steady.map { case (k, v) => "\"" + k + "\":" + "%.2f".format(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"steady_medians":$steadyJson,"sf":"$sfDir","runs":$runs,"wall_sec":${math.rint(wall * 1000) / 1000}}""")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"steady_medians":$steadyJson,"sf":"$sfDir","runs":$runs,"wall_sec":${math.rint(wall * 1000) / 1000}}"""
+    println(full)
     // The harness that collects this output keeps only the TAIL of it
     // (r5: the full-precision line above grew past the window as the
     // registry passed ~70 queries, and the leading {"metric":"total",...}
@@ -207,8 +224,7 @@ object Bench {
     try {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SELF.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"steady_medians":$steadyJson,"sf":"$sfDir","runs":$runs,"wall_sec":${math.rint(wall * 1000) / 1000}}""" +
-          "\n" + compact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        (full + "\n" + compact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => }
     // stop() BEFORE the compact line: Spark's stop/shutdown logging all
     // lands above it, so the guaranteed-parseable line is the LAST thing

@@ -150,7 +150,7 @@ object Dedup {
     * that materializes a column ~10× the text it came from (a
     * non-starter at 100 TB, where it means spilling ~1 PB to executor
     * disks) and measured 2× SLOWER locally than the recompute
-    * (tools/DedupAB: 0.8 s linear vs 1.5 s persisted vs 2 s
+    * (0.8 s linear vs 1.5 s persisted vs 2 s
     * persist-candidates-and-semi-join) — three cheap map scans beat one
     * materialization on both axes.
     */
@@ -868,7 +868,7 @@ object Dedup {
     * Sizing: every PROBE opens one parquet file per non-empty
     * (band, bmod) base dir — a fixed per-file reader-init constant
     * (measured ~2.5 ms/file: a one-task scan of the 256-file r16 base
-    * took ~0.7 s against ~0.18 s at 64 files, tools/ProbeProf r17) —
+    * took ~0.7 s against ~0.18 s at 64 files, r17) —
     * and COMPACTION rewrites the same count (~12 ms commit cost per
     * dir per write, row count irrelevant). Appends never pay it: they
     * land in the flat tail (below). 4 (=64 dirs with 16 bands) is the
@@ -1154,8 +1154,8 @@ object Dedup {
   /** (doc_id, band, bucket, sig, bmod) for a batch — the rows both the
     * probe and the append consume; computed ONCE per maintenance step.
     */
-  /** Dev-tools hook (ProbeProf) — the probe's signature pass at the
-    * index defaults, for sub-stage timing only.
+  /** The probe's signature pass at the index defaults. Its only caller
+    * is MinHashManifestSpec.
     */
   private[graft] def bandedSignaturesDev(docs: DataFrame): DataFrame =
     bandedSignatures(docs, 5, 64, 4)

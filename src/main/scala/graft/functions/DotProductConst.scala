@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the hyperplane-projection primitive of LSH signatures. The weights
   * ship as one broadcast-referenced double[] (no per-row array literal),
   * and codegen emits a primitive loop. Replaces a zip_with+aggregate HOF
-  * that benchmarked ~35× slower (see tools.CosBench for the method).
+  * that benchmarked ~35× slower.
   */
 case class DotProductConst(child: Expression, weights: Array[Double])
     extends UnaryExpression {

@@ -59,8 +59,8 @@ object HostRank {
     *    join; re-laying it HASH(s) at prep time moves that to ONE
     *    prep exchange shared by the whole graph family (the rank
     *    table still shuffles each round, but it is |nodes| rows
-    *    against the edge table's |edges|). tools/GraphRound evidences
-    *    both regimes.
+    *    against the edge table's |edges|). The per-round executed plan
+    *    shows both regimes.
     *
     * The regime test compares the cache's materialized byte size (the
     * same statistic the planner's broadcast decision reads off the

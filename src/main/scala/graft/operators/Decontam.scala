@@ -41,9 +41,6 @@ object Decontam {
     th.filter(size(col("th")) >= w)
       .select(col("doc_id"), ShingleHashes.longWindowHashes(col("th"), w).as("grams"))
 
-  private def gramHashes(docs: DataFrame, w: Int): DataFrame =
-    gramsOfTh(tokenHashes(docs), w)
-
   /** Per-training-doc overlap against the eval set: (doc_id, n_grams,
     * n_matched, overlap_frac, contaminated). `docs`/`evalDocs` both need
     * (doc_id, text). Counts are over DISTINCT grams, so a gram repeated

@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.operators.{AsOfJoinOps, Relational}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,14 +35,7 @@ object AsofScale {
     val n = args.headOption.map(_.toLong).getOrElse(20000000L)
     val users = args.lift(1).map(_.toLong).getOrElse(200000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-asof-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "graft-asof-scale")
     val m = new ScalePipeline.StageMetrics
     spark.sparkContext.addSparkListener(m)
 

@@ -1,25 +1,29 @@
 package graft.tools
 
+import graft.Bench
 import graft.util.{Sessions, Tables}
-import org.apache.spark.sql.functions._
 
-/** A/B timing for the iterative queries' materialization strategy
-  * (dev tool): runs graph_pagerank and dedup_clusters twice each.
+/** Steady-state per-query timer (dev tool), at the bench cadence: each
+  * named query runs `SPARK_GRAFT_BENCH_RUNS` times (default 3), then the
+  * bench barrier, then the median is printed — the same
+  * [[graft.Bench.timeQuery]] the graded sweep and its steady pass use.
+  *
+  *   runMain graft.tools.IterAB <sfDir> <query ...>
+  *
+  * With no query named it times graph_pagerank and dedup_clusters.
   */
 object IterAB {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "iter-ab")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    def time(label: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      println(f"[ab] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
     // warm
     Tables(spark, dir, "orders").count(); Tables(spark, dir, "documents").count()
     val names = if (args.length > 1) args.drop(1).toSeq
                 else Seq("graph_pagerank", "dedup_clusters")
-    for (i <- 1 to 3; n <- names)
-      time(s"$n-$i")(graft.SparkEntry.queries(n)(spark, dir).count())
+    val runs = Bench.runsPerQuery
+    for (n <- names)
+      Bench.timeQuery(spark, n, runs)(graft.SparkEntry.queries(n)(spark, dir).count())
+        .foreach(med => println(f"[ab] $n: median of $runs $med%.2f s"))
     spark.stop()
   }
 }

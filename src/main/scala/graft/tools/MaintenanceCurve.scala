@@ -1,9 +1,6 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicLong, LongAdder}
-
 import graft.util.{Sessions, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,21 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object MaintenanceCurve {
 
-  final class Metrics extends SparkListener {
-    val peakTaskMem = new AtomicLong(0L)
-    val shuffleWrite = new LongAdder
-    val inputBytes = new LongAdder
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val tm = e.taskMetrics
-      if (tm != null) {
-        peakTaskMem.updateAndGet(p => math.max(p, tm.peakExecutionMemory))
-        shuffleWrite.add(tm.shuffleWriteMetrics.bytesWritten)
-        inputBytes.add(tm.inputMetrics.bytesRead)
-      }
-    }
-    def reset(): Unit = { peakTaskMem.set(0); shuffleWrite.reset(); inputBytes.reset() }
-  }
-
   /** One index family's curve hooks. `probeSig` must be a bounded
     * deterministic signature of a held-out probe's RESULT ROWS (not
     * just a count), so a compaction that reorders/loses/doubles rows
@@ -72,8 +54,7 @@ object MaintenanceCurve {
     val nShards = rest.lift(1).map(_.toInt).getOrElse(12)
     val compactEvery = rest.lift(2).map(_.toInt).getOrElse(4)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"), "mnt-curve")
-    spark.sparkContext.setLogLevel("WARN")
-    val m = new Metrics
+    val m = new ScalePipeline.StageMetrics
     spark.sparkContext.addSparkListener(m)
 
     val idKey = if (mode == "ivf") "vec_id" else "doc_id"

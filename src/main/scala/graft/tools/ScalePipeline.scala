@@ -3,8 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import graft.jobs.{JobCli, JobRunner}
+import graft.util.Sessions
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end scale demonstration: generate a multi-file WARC corpus
@@ -45,14 +45,7 @@ object ScalePipeline {
     val docsPerFile = args.lift(1).map(_.toInt).getOrElse(3000)
     val root = args.lift(2).getOrElse("/tmp/graft_scale")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "graft-scale-pipeline")
     val m = new StageMetrics
     spark.sparkContext.addSparkListener(m)
 
@@ -215,7 +208,7 @@ object ScalePipeline {
 
     // ---- stage 6b: PCA over the full embedding corpus — ONE
     //      mapPartitions moment pass (16 KB accumulator per partition,
-    //      tools.PcaAB: 14× over the explode form at 1 M vectors),
+    //      14× over the explode form at 1 M vectors),
     //      driver-side 64×64 Jacobi, one projection map stage ----
     val pcaDir = s"$root/pca"
     stage("pca") {

@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.operators.Curation
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,13 +44,7 @@ object SkewHarness {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(5000000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-skew-harness")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "graft-skew-harness")
     val m = new ScalePipeline.StageMetrics
     spark.sparkContext.addSparkListener(m)
 

@@ -48,7 +48,7 @@ object Checkpoints {
     * `persist` pays — and is the default. On a cluster whose
     * checkpoint dir is remote storage (HDFS/S3), raise
     * `spark.graft.checkpointInterval` to 2-4 to trade recovery time
-    * for a network round-trip per round (tools/IterAB to measure).
+    * for a network round-trip per round (measure it at steady state).
     */
   final class IterationCheckpointer(interval: Int = 1) {
     require(interval >= 1)
@@ -79,7 +79,7 @@ object Checkpoints {
     *    survives; memory blocks are the cheapest read for every
     *    consumer (a reliable checkpoint measured ~2× on the ngram
     *    pair-table sites at sf0.1 — file write + per-consumer file
-    *    read vs memory blocks, tools/IterAB round 17).
+    *    read vs memory blocks, steady state, round 17).
     *  - CLUSTER master: [[reliable]] — an executor loss costs a
     *    re-read of the checkpoint files instead of failing every
     *    consuming action (the 100 TB availability story; blocks of a
@@ -111,7 +111,7 @@ object Checkpoints {
     // ITERATION rounds reads the previous round's files + cached graph
     // and measured FASTER than a persist-bracketed write locally
     // (persist's columnar encode + per-round cache churn cost more
-    // than the cheap recompute — IterAB round 17: dedup_clusters
+    // than the cheap recompute — steady state, round 17: dedup_clusters
     // 2.8→4.5 s, graph_hits 3.1→4.6 s with the bracket). One-shot
     // expensive pipelines use [[reliableOnce]] instead.
     df.checkpoint()

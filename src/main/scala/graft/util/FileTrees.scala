@@ -42,57 +42,4 @@ object FileTrees {
 
   def copyTree(src: String, dst: String): Unit =
     copyTree(java.nio.file.Paths.get(src), java.nio.file.Paths.get(dst))
-
-  /** [[copyTree]] when `src` exists; a tier dir that never received a
-    * batch (an empty corpus's tail) simply isn't there — not an error.
-    */
-  def copyTreeIfExists(src: String, dst: String): Unit =
-    if (Files.isDirectory(java.nio.file.Paths.get(src))) copyTree(src, dst)
-
-  /** Replace `dir/name` with `dir/${name}_new` via rename-aside:
-    * live → `${name}_old`, `_new` → live, old deleted LAST — a crash at
-    * any step leaves either the old or the new directory intact under a
-    * recoverable name, never a half-deleted live dir. A missing live dir
-    * is fine (first swap of that name). Callers arbitrate WHEN to swap
-    * with their own commit markers; this is only the crash-ordered
-    * rename pair (shared by the BM25 terms/stats/postings fold and the
-    * MinHash base/tail compaction).
-    */
-  def swapLive(dir: Path, name: String): Unit = {
-    val live = dir.resolve(name)
-    val aside = dir.resolve(s"${name}_old")
-    rmTree(aside)
-    if (Files.exists(live)) { Files.move(live, aside); () }
-    Files.move(dir.resolve(s"${name}_new"), live)
-    rmTree(aside)
-  }
-
-  /** Move every parquet part-file under `staging`'s partition dirs into
-    * the same relative partition dirs under `live`, then drop `staging`.
-    * Handles arbitrarily nested `k=v` partition layouts. Idempotent to
-    * re-drive after a crash: a part-file is either still staged or
-    * already live (same-FS rename), so a retry moves exactly the
-    * remainder — the promote half of the staged-append commit protocol.
-    */
-  def promoteStaged(staging: Path, live: Path): Unit = {
-    if (!Files.isDirectory(staging)) return
-    def walk(src: Path, dst: Path): Unit = {
-      val st = Files.list(src)
-      val entries =
-        try { import scala.jdk.CollectionConverters._
-          st.iterator().asScala.toVector
-        } finally st.close()
-      entries.foreach { p =>
-        val name = p.getFileName.toString
-        if (Files.isDirectory(p) && name.contains("="))
-          walk(p, dst.resolve(name))
-        else if (name.endsWith(".parquet")) {
-          Files.createDirectories(dst)
-          Files.move(p, dst.resolve(name)); ()
-        } // _SUCCESS etc stay behind and die with the staging dir
-      }
-    }
-    walk(staging, live)
-    rmTree(staging)
-  }
 }

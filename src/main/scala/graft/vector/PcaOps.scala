@@ -44,7 +44,7 @@ object PcaOps {
     * accumulators. The obvious explode→groupBy formulation fans every
     * vector into 2 080 generated rows (2 000× row amplification through
     * codegen before the partial agg collapses it); measured 6× slower
-    * at 200 k vectors and 14× at 1 M (tools.PcaAB — 6.45 s vs 0.45 s),
+    * at 200 k vectors and 14× at 1 M (6.45 s vs 0.45 s),
     * the gap widening with corpus size because the explode pays
     * per-generated-row machinery where the kernel pays one
     * multiply-add — the PqKernels lesson. Exactness is

@@ -337,7 +337,7 @@ object VectorOps {
     * cell→array<double>), mutually consistent (assignments are argmax
     * against the returned centroids).
     *
-    * Measured neutral at sf0.1 (IterAB steady-state 1.98 → 2.01 s,
+    * Measured neutral at sf0.1 (steady-state 1.98 → 2.01 s,
     * noise band): at 10k vectors the per-round fixed overhead dominates,
     * so the benefit is the scan-complexity change, not a local number —
     * recall floors unchanged (AnnRecallSpec: IVF ≥ 50/100).

@@ -7,7 +7,6 @@ package graft.warc
 object Predicates {
 
   def isResponse(r: WarcRecord): Boolean = r.recType == "response"
-  def isWarcinfo(r: WarcRecord): Boolean = r.recType == "warcinfo"
   def isMetadata(r: WarcRecord): Boolean = r.recType == "metadata"
   def isConversion(r: WarcRecord): Boolean = r.recType == "conversion"
 
