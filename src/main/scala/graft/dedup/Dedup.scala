@@ -28,7 +28,7 @@ object Dedup {
     * behavior-neutral on the test corpora) while bounding a degenerate
     * bucket's pair join at ~32k pairs instead of quadratic.
     */
-  private val SimHashMaxBucket = 256
+  private[graft] val SimHashMaxBucket = 256
 
   /** (doc_id, shingles: array<long>) — word w-shingles hashed to i64
     * (tokens hashed elementwise, then native windows over the hash
@@ -834,13 +834,15 @@ object Dedup {
 
   /** Persisted MinHash index for INCREMENTAL dedup — the realistic
     * 100 TB operating mode: crawl N+1 probes the signatures of crawls
-    * 1..N without re-reading their text. The index stores one row per
-    * (doc, band) with the full signature, partitioned by band so the
-    * probe join reads co-located band files; at 64 perms that is
-    * ~0.5 KB per document regardless of document size — the whole point
-    * of indexing. Candidate verification estimates Jaccard from
-    * signature agreement (the standard unbiased MinHash estimator);
-    * the original shingle sets are deliberately NOT retained.
+    * 1..N without re-reading their text. The index stores one
+    * (doc_id, bucket) row per (doc, band), partitioned by band so the
+    * probe join reads co-located band files, and each document's
+    * signature ONCE in `sigs`; at 64 perms that is ~0.8 KB per document
+    * on disk regardless of document size (measured on a 1,000-document
+    * index: bands 0.25 MB, sigs 0.52 MB) — the whole point of indexing.
+    * Candidate verification estimates Jaccard from signature agreement
+    * (the standard unbiased MinHash estimator); the original shingle
+    * sets are deliberately NOT retained.
     */
   /** Hash family the signature/banding kernels use. Bumped whenever the
     * kernel changes in a way that invalidates persisted signatures (r10
@@ -885,20 +887,29 @@ object Dedup {
   private def indexMetaPath(indexDir: String) =
     new org.apache.hadoop.fs.Path(s"$indexDir/_graft_minhash_meta")
 
-  /** On-disk layout of `bands/`: (doc_id, bucket, sig) data columns under
-    * band= / bmod= partition dirs. Explicit so empty indexes read as empty.
+  /** On-disk layout of `bands/`: (doc_id, bucket) data columns under
+    * band= / bmod= partition dirs — no signature: a probe reads band rows
+    * to find candidates, and `sigs` only for the candidates it verifies.
+    * Explicit so empty indexes read as empty.
     */
   private[graft] val BandsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id",
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("bucket",
       org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("sig",
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)),
     org.apache.spark.sql.types.StructField("band",
       org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("bmod",
       org.apache.spark.sql.types.IntegerType)))
+
+  /** `sigs/`: one (doc_id, sig) row per indexed document, flat files
+    * sorted by doc_id in the base and in every run.
+    */
+  private[graft] val SigsSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("sig",
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
 
   /** `widths/` sidecar: per-bucket width + min-id anchor, maintained
     * INCREMENTALLY — the build writes one row per bucket, every append
@@ -929,9 +940,14 @@ object Dedup {
     org.apache.spark.sql.types.StructField("est_jaccard",
       org.apache.spark.sql.types.DoubleType)))
 
+  /** Table layout line of the meta marker: an index whose band rows
+    * still carry signatures (no such line) is refused, not read.
+    */
+  private val MinHashLayout = "layout=bands+sigs\n"
+
   private def minHashMeta(shingleW: Int, perms: Int, rowsPerBand: Int): String =
     s"hash_family=$MinHashHashFamily\nshingle_w=$shingleW\nperms=$perms\n" +
-      s"rows_per_band=$rowsPerBand\nbucket_mods=$MinHashBucketMods\n"
+      s"rows_per_band=$rowsPerBand\nbucket_mods=$MinHashBucketMods\n" + MinHashLayout
 
   // ---- size-tiered LSM layout + maintenance commit protocol ----
   //
@@ -941,8 +957,9 @@ object Dedup {
   // statically; `bands.l1` / `widths.l1` hold LEVEL-1 runs as flat
   // (band, bmod, bucket)-sorted files pruned by parquet footer stats
   // (one run per minor compaction); `bands.tail` / `widths.tail` are
-  // the level-0 TAIL where appends land as a handful of FLAT dirs. A
-  // micro-batch append therefore costs two small unpartitioned writes
+  // the level-0 TAIL where appends land as a handful of FLAT dirs.
+  // `sigs` tiers the same way with flat doc_id-sorted base and runs. A
+  // micro-batch append therefore costs three small unpartitioned writes
   // + ONE manifest publish, never a 100+-partition-dir commit; probes
   // resolve one manifest snapshot and read pruned base + pruned runs
   // + the (compaction-bounded) tail. This is the Delta/Iceberg-style
@@ -968,8 +985,8 @@ object Dedup {
     finally out.close()
   }
 
-  /** The widths sidecar's delta rows for a banded batch — shared by
-    * every lay site (build, append, compaction re-fold).
+  /** The widths sidecar's delta rows for a batch's band rows — shared
+    * by the build and append lay sites.
     */
   private def widthsOf(banded: DataFrame): DataFrame =
     banded.groupBy(col("band"), col("bmod"), col("bucket"))
@@ -998,42 +1015,49 @@ object Dedup {
     // always find the params file (between the two writes a first
     // build has no manifest yet, so probes fail with "no index")
     writeIndexMeta(spark, indexDir, shingleW, perms, rowsPerBand)
-    val banded = bandedSignatures(docs, shingleW, perms, rowsPerBand).persist()
+    val sigs = signatures(docs, shingleW, perms).persist()
     try {
+      val banded = bandsOf(sigs, perms, rowsPerBand)
       val bd = ManifestTiered.layDir(spark, indexDir, "bands",
-        banded.select(col("doc_id"), col("bucket"), col("sig"), col("band"), col("bmod")),
-        partitionBy = Seq("band", "bmod"),
+        banded, partitionBy = Seq("band", "bmod"),
         sortKeys = Seq(col("bucket"), col("doc_id")))
       val wd = ManifestTiered.layDir(spark, indexDir, "widths",
         widthsOf(banded), partitionBy = Seq("band", "bmod"),
         sortKeys = Seq(col("bucket")))
+      // every document has exactly one band row per band
+      val sd = ManifestTiered.layDir(spark, indexDir, "sigs", sigs,
+        partitionBy = Nil, sortKeys = Seq(col("doc_id")),
+        sizeHintRows = bd.rows / (perms / rowsPerBand),
+        rowsPerFile = SigsRowsPerRunFile)
       // a REBUILD replaces every table and resets the committed-batch
       // state: a new logical index must not inherit tokens that would
       // silently no-op a new crawl reusing a batch id (the manifest
       // generation stays monotone — the stale-writer guard needs it)
       ManifestCommit.publish(conf, indexDir, m => m.copy(
-        tables = Map("bands" -> Seq(bd), "widths" -> Seq(wd)),
+        tables = Map("bands" -> Seq(bd), "widths" -> Seq(wd), "sigs" -> Seq(sd)),
         committed = Map.empty, writers = Map.empty, floor = 0L)); ()
-    } finally { banded.unpersist(blocking = false); () }
+    } finally { sigs.unpersist(blocking = false); () }
   }
 
-  private def appendMinHashManifest(banded0: DataFrame, indexDir: String,
+  private def appendMinHashManifest(sigs0: DataFrame, indexDir: String,
+                                    perms: Int, rowsPerBand: Int,
                                     batchId: Option[String],
                                     expectMeta: String): Unit = {
-    val conf = banded0.sparkSession.sessionState.newHadoopConf()
+    val conf = sigs0.sparkSession.sessionState.newHadoopConf()
     val m = ManifestCommit.current(conf, indexDir)
     if (batchId.exists(m.isCommitted)) return
-    val banded = banded0.persist()
-    try appendAtManifest(banded, indexDir, m, batchId, commuting = true,
-      expectMeta)
-    finally { banded.unpersist(blocking = false); () }
+    val sigs = sigs0.persist()
+    try appendAtManifest(sigs, bandsOf(sigs, perms, rowsPerBand), indexDir,
+      m, batchId, commuting = true, expectMeta)
+    finally { sigs.unpersist(blocking = false); () }
   }
 
   /** Lay the batch's tail dirs and publish against the caller's
     * resolved snapshot. Cheapest possible lay: flat unsorted tail dirs
     * (the append's cost follows the batch; compaction owns the
-    * re-sort), both tables landing in ONE publish — atomically, with
-    * the batch id.
+    * re-sort), all three tables landing in ONE publish — atomically,
+    * with the batch id. `bands` derives from `sigs` (persisted by the
+    * caller).
     */
   /** `commuting = true` (pure appends, no paired probe): a lost CAS
     * retries against the fresh snapshot without re-laying — two
@@ -1059,26 +1083,28 @@ object Dedup {
     * the loser fails loudly (our commuting retry then re-runs this
     * check through the invariant).
     */
-  private[dedup] def appendAtManifest(banded: DataFrame, indexDir: String,
+  private[dedup] def appendAtManifest(sigs: DataFrame, bands: DataFrame,
+                                      indexDir: String,
                                       m: ManifestCommit.Manifest,
                                       batchId: Option[String],
                                       commuting: Boolean,
                                       expectMeta: String): Unit = {
-    val spark = banded.sparkSession
+    val spark = sigs.sparkSession
     val conf = spark.sessionState.newHadoopConf()
-    // the two tail lays are independent reads of the persisted batch —
+    // the three tail lays are independent reads of the persisted batch —
     // overlap their write jobs from driver threads (§2.6); the widths
-    // lay rides the bands lay's wall-clock
-    val Seq(bd, wd) = graft.util.DriverPar.inParallel(spark.sparkContext)(Seq(
+    // and sigs lays ride the bands lay's wall-clock
+    val laid = graft.util.DriverPar.inParallel(spark.sparkContext)(Seq(
       () => ManifestTiered.layDir(spark, indexDir, "bands.tail",
-        banded.select(col("doc_id"), col("bucket"), col("sig"), col("band"), col("bmod")),
-        partitionBy = Nil, sortKeys = Nil),
+        bands, partitionBy = Nil, sortKeys = Nil),
       () => ManifestTiered.layDir(spark, indexDir, "widths.tail",
-        widthsOf(banded), partitionBy = Nil, sortKeys = Nil)))
+        widthsOf(bands), partitionBy = Nil, sortKeys = Nil),
+      () => ManifestTiered.layDir(spark, indexDir, "sigs.tail",
+        sigs, partitionBy = Nil, sortKeys = Nil)))
     val update = (mm: ManifestCommit.Manifest) =>
-      ManifestCommit.addDir(
-        ManifestCommit.addDir(mm, "bands.tail", bd.dir, bd.rows),
-        "widths.tail", wd.dir, wd.rows)
+      Seq("bands.tail", "widths.tail", "sigs.tail").zip(laid).foldLeft(mm) {
+        case (acc, (t, e)) => ManifestCommit.addDir(acc, t, e.dir, e.rows)
+      }
     def metaUnchanged(): Unit = {
       val now = readIndexMetaText(spark, indexDir)
       if (now != expectMeta) throw new IllegalStateException(
@@ -1102,15 +1128,18 @@ object Dedup {
     val conf = spark.sessionState.newHadoopConf()
     val meta = readIndexMetaText(spark, indexDir)
     if (!meta.contains(s"hash_family=$MinHashHashFamily\n") ||
-        !meta.contains(s"bucket_mods=$MinHashBucketMods\n"))
+        !meta.contains(s"bucket_mods=$MinHashBucketMods\n") ||
+        !meta.contains(MinHashLayout))
       throw new IllegalStateException(
         s"MinHash index at $indexDir has an incompatible layout —\n$meta\n" +
-          s"compacting expects hash_family=$MinHashHashFamily and " +
-          s"bucket_mods=$MinHashBucketMods; rebuild with saveMinHashIndex.")
+          s"compacting expects hash_family=$MinHashHashFamily, " +
+          s"bucket_mods=$MinHashBucketMods and $MinHashLayout" +
+          s"rebuild with saveMinHashIndex.")
     // shared manifest fold driver: bands (dominant) decides the tier
     // action; the widths sidecar re-folds (sum bw / min aid within the
     // folded mass — readers re-fold across tiers, so probe results are
-    // identical at every tier state) and lands in the SAME publish
+    // identical at every tier state) and sigs folds as-is, all landing
+    // in the SAME publish
     ManifestTiered.compactTables(spark, indexDir, Seq(
       ManifestTiered.FoldSpec("bands", BandsSchema,
         basePartitionBy = Seq("band", "bmod"),
@@ -1125,7 +1154,12 @@ object Dedup {
         refold = w => w
           .groupBy(col("band"), col("bmod"), col("bucket"))
           .agg(sum(col("bw")).as("bw"), min(col("aid")).as("aid"))
-          .select(col("bucket"), col("bw"), col("aid"), col("band"), col("bmod")))))
+          .select(col("bucket"), col("bw"), col("aid"), col("band"), col("bmod"))),
+      ManifestTiered.FoldSpec("sigs", SigsSchema,
+        basePartitionBy = Nil,
+        baseSortKeys = Seq(col("doc_id")),
+        runSortKeys = Seq(col("doc_id")),
+        runRowsPerFile = SigsRowsPerRunFile)))
   }
 
   /** The params meta marker's text; a missing marker throws with
@@ -1145,40 +1179,38 @@ object Dedup {
     finally in.close()
   }
 
-  /** ~550 B/row (64-long signature): ~1 M rows ≈ a few hundred MB per
-    * run file. Widths rows are 3 longs + 2 ints.
+  /** Run-file sizes, ~128 MB each: a sig-free band row is 2 longs +
+    * 2 ints, ~15 B on disk (0.25 MB for 16,000 rows); a widths row is
+    * 3 longs + 2 ints; a sigs row (64 longs) is ~520 B on disk.
     */
-  private val BandsRowsPerRunFile = 1L * 1000 * 1000
+  private val BandsRowsPerRunFile = 8L * 1000 * 1000
   private val WidthsRowsPerRunFile = 8L * 1000 * 1000
+  private val SigsRowsPerRunFile = 250L * 1000
 
-  /** (doc_id, band, bucket, sig, bmod) for a batch — the rows both the
-    * probe and the append consume; computed ONCE per maintenance step.
+  /** A batch's signatures and the band rows derived from them, at the
+    * index defaults (the signatures locally checkpointed). Its only
+    * callers are the MinHash specs.
     */
-  /** The probe's signature pass at the index defaults. Its only caller
-    * is MinHashManifestSpec.
-    */
-  private[graft] def bandedSignaturesDev(docs: DataFrame): DataFrame =
-    bandedSignatures(docs, 5, 64, 4)
-
-  private def bandedSignatures(docs: DataFrame, shingleW: Int, perms: Int,
-                               rowsPerBand: Int): DataFrame = {
-    val sig = minHashSignature(wordShingles(docs, shingleW), perms)
-    // the band explode CARRIES the signature column instead of
-    // re-attaching it with a doc_id self-join: the old
-    // `bands(sig).join(sig, "doc_id")` planned a sort-merge self-join —
-    // two exchanges, two sorts, and the whole tokenize→shingle→OPH
-    // expression computed TWICE (once per join side) — on every
-    // signature pass (index build, append, probe, and once per
-    // micro-batch in the streaming drain). A generator in the same
-    // select is a single narrow map pass: zero exchanges, signatures
-    // computed once; row set and values are identical (the join merely
-    // re-attached each doc's own sig to its 16 band rows).
-    sig.select(col("doc_id"), col("sig"),
-        posexplode(graft.functions.FnvHashes.fnvBandBuckets(
-          col("sig"), perms, rowsPerBand)).as(Seq("band", "bucket")))
-      .withColumn("bmod",
-        pmod(col("bucket"), lit(MinHashBucketMods.toLong)).cast("int"))
+  private[graft] def bandedSignaturesDev(docs: DataFrame): (DataFrame, DataFrame) = {
+    val sigs = signatures(docs, 5, 64).localCheckpoint()
+    (sigs, bandsOf(sigs, 64, 4))
   }
+
+  /** (doc_id, sig): one row per document — what a maintenance step
+    * persists or checkpoints, computed ONCE (tokenize → shingle → OPH is
+    * the dominant per-batch CPU).
+    */
+  private def signatures(docs: DataFrame, shingleW: Int, perms: Int): DataFrame =
+    minHashSignature(wordShingles(docs, shingleW), perms)
+
+  /** (doc_id, bucket, band, bmod) band rows of a (materialized)
+    * signature frame — a narrow explode, cheap to re-derive per
+    * consumer; the signature itself stays in its one row per document.
+    */
+  private def bandsOf(sigs: DataFrame, perms: Int, rowsPerBand: Int): DataFrame =
+    bands(sigs, perms, rowsPerBand)
+      .select(col("doc_id"), col("bucket"), col("band"),
+        pmod(col("bucket"), lit(MinHashBucketMods.toLong)).cast("int").as("bmod"))
 
   private def validateIndexMeta(spark: SparkSession, indexDir: String,
                                 shingleW: Int, perms: Int, rowsPerBand: Int,
@@ -1199,8 +1231,8 @@ object Dedup {
   /** Fold a NEW batch's signatures into an existing MinHash index —
     * the cross-crawl maintenance arm (MinHash's counterpart of the IVF
     * `ann_index_update` and the BM25 delta fold): crawl N+1's
-    * signatures land as one flat tail dir, so the index grows by
-    * exactly the batch's ~0.5 KB/doc and the dominant bytes are never
+    * band rows and signatures land as flat tail dirs, so the index grows
+    * by exactly the batch's ~0.8 KB/doc and the dominant bytes are never
     * rewritten; the widths sidecar gets matching delta rows in the
     * same manifest publish. The marker is validated FIRST — appending
     * signatures from a different hash family/banding would poison
@@ -1218,9 +1250,8 @@ object Dedup {
     graft.util.ManifestCommit.requireIndex(
       newDocs.sparkSession.sessionState.newHadoopConf(), indexDir,
       "appendMinHashIndex")
-    appendMinHashManifest(
-      bandedSignatures(newDocs, shingleW, perms, rowsPerBand),
-      indexDir, batchId,
+    appendMinHashManifest(signatures(newDocs, shingleW, perms),
+      indexDir, perms, rowsPerBand, batchId,
       expectMeta = minHashMeta(shingleW, perms, rowsPerBand))
   }
 
@@ -1260,16 +1291,16 @@ object Dedup {
     val conf = spark.sessionState.newHadoopConf()
     graft.util.ManifestCommit.requireIndex(conf, indexDir,
       "dedupAgainstMinHashIndex")
-    val banded =
-      bandedSignatures(newDocs, shingleW, perms, rowsPerBand).localCheckpoint()
+    val sigs = signatures(newDocs, shingleW, perms).localCheckpoint()
     // readers resolve ONE manifest snapshot — consistent across any
     // concurrent append/compact/vacuum, no healing needed (a crashed
     // manifest writer leaves only invisible garbage)
     val m = asOfGen
       .map(g => graft.util.ManifestCommit.atGeneration(conf, indexDir, g))
       .getOrElse(graft.util.ManifestCommit.current(conf, indexDir))
-    probeWithBands(spark, banded, manifestReader(spark, indexDir, m),
-      perms, threshold, nBands = perms / rowsPerBand)
+    probeWithBands(spark, sigs, bandsOf(sigs, perms, rowsPerBand),
+      manifestReader(spark, indexDir, m), perms, threshold,
+      nBands = perms / rowsPerBand)
   }
 
   /** The probe-side index reader: base ∪ level-1 runs ∪ tail of one
@@ -1281,9 +1312,9 @@ object Dedup {
       : (String, org.apache.spark.sql.types.StructType, Option[Column]) => DataFrame =
     (t, sch, f) => graft.util.ManifestTiered.read(spark, indexDir, m, t, sch, f)
 
-  /** The probe join itself, over precomputed (doc_id, band, bucket, sig,
-    * bmod) batch rows. Meta validation / recovery are the caller's
-    * responsibility.
+  /** The probe join itself, over a batch's precomputed (doc_id, sig)
+    * rows and the (doc_id, bucket, band, bmod) rows derived from them.
+    * Meta validation / recovery are the caller's responsibility.
     *
     * Scale shape: the batch's DISTINCT (band, bmod) set — bounded by
     * nBands × MinHashBucketMods (≤64 at the defaults), a bounded
@@ -1295,7 +1326,10 @@ object Dedup {
     * SHUFFLED. Over-cap anchors fold from the widths sidecar's
     * touched, colliding rows (sum bw, min aid per bucket) instead of
     * a full-index aggregate: per-batch probe cost follows the BATCH
-    * and its collisions, not the accumulated index.
+    * and its collisions, not the accumulated index. Only then are
+    * signatures attached — the index's for the candidate ids alone —
+    * so the band scan and the candidate join carry ids, never 64-long
+    * arrays.
     */
   /** Over this many (band, bucket) batch key ROWS the probe skips the
     * broadcast semi-join and falls back to the shuffled candidate
@@ -1309,7 +1343,8 @@ object Dedup {
     */
   private val MaxProbeBroadcastKeys = 16L * 1000 * 1000
 
-  private def probeWithBands(spark: SparkSession, bandedBatch: DataFrame,
+  private def probeWithBands(spark: SparkSession, batchSigs: DataFrame,
+                             bandedBatch: DataFrame,
                              readIdx: (String, org.apache.spark.sql.types.StructType,
                                Option[Column]) => DataFrame,
                              perms: Int,
@@ -1381,8 +1416,7 @@ object Dedup {
       semiKeys.map(k => df.join(k, Seq("band", "bucket"), "left_semi")).getOrElse(df)
     val idx0 = collidable(
       readIdx("bands", BandsSchema, partFilter))
-      .select(col("band"), col("bucket"),
-        col("doc_id").as("idx_id"), col("sig").as("idx_sig"))
+      .select(col("band"), col("bucket"), col("doc_id").as("idx_id"))
     // Degenerate-bucket cap on the INDEX side (the probe-join analogue
     // of bucketCapSplit): a bucket holding a mass of near-identical
     // docs — thousands of boilerplate twins accumulated across crawls —
@@ -1412,11 +1446,20 @@ object Dedup {
     val idx = idx0.join(overCap, Seq("band", "bucket"), "left")
       .filter(col("aid").isNull || col("idx_id") === col("aid"))
       .drop("aid")
-    val bandedN = bandedBatch
-      .select(col("doc_id").as("new_id"), col("band"), col("bucket"),
-        col("sig").as("new_sig"))
-    bandedN.join(idx, Seq("band", "bucket"))
+    val cand = bandedBatch
+      .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
+      .join(idx, Seq("band", "bucket"))
+      .select(col("new_id"), col("idx_id"))
       .dropDuplicates("new_id", "idx_id")
+    // verification reads signatures for the candidates only: the
+    // candidate frame (two longs per pair) is the broadcast build side
+    // of the join with the sigs scan, so index signatures are never
+    // shuffled (same size gate as the key broadcast above)
+    readIdx("sigs", SigsSchema, None)
+      .select(col("doc_id").as("idx_id"), col("sig").as("idx_sig"))
+      .join(if (semiKeys.isDefined) broadcast(cand) else cand, "idx_id")
+      .join(batchSigs.select(col("doc_id").as("new_id"), col("sig").as("new_sig")),
+        "new_id")
       .withColumn("est_jaccard",
         expr(s"size(filter(zip_with(new_sig, idx_sig, (x, y) -> x = y), v -> v))" +
           s" / CAST($perms AS DOUBLE)"))
@@ -1463,9 +1506,10 @@ object Dedup {
       s"adhoc-${java.util.UUID.randomUUID().toString.take(12)}")
     val m = ManifestCommit.current(conf, indexDir)
     if (!batchId.exists(m.isCommitted)) {
-      val banded = bandedSignatures(newDocs, shingleW, perms, rowsPerBand).persist()
+      val sigs = signatures(newDocs, shingleW, perms).persist()
+      val banded = bandsOf(sigs, perms, rowsPerBand)
       try {
-        val hits = probeWithBands(spark, banded,
+        val hits = probeWithBands(spark, sigs, banded,
           manifestReader(spark, indexDir, m), perms, threshold,
           nBands = perms / rowsPerBand)
         val bid = hitsBid
@@ -1476,7 +1520,7 @@ object Dedup {
         // partition, but an ADHOC (generated-id) retry would write a
         // SECOND partition and double-count the log — drop this
         // attempt's hits before rethrowing
-        try appendAtManifest(banded, indexDir, m, batchId,
+        try appendAtManifest(sigs, banded, indexDir, m, batchId,
           commuting = false,
           expectMeta = minHashMeta(shingleW, perms, rowsPerBand))
         catch {
@@ -1485,7 +1529,7 @@ object Dedup {
             p.getFileSystem(conf).delete(p, true)
             throw e
         }
-      } finally { banded.unpersist(blocking = false); () }
+      } finally { sigs.unpersist(blocking = false); () }
     }
   }
 
@@ -1503,11 +1547,11 @@ object Dedup {
     *
     * At every tier the widths sidecar folds alongside its bands rows
     * (sum bw / min aid per bucket WITHIN the folded mass; readers
-    * re-fold across tiers), so probe results are identical across every
-    * level state — all tables land in ONE manifest publish, and probes
-    * resolve one snapshot, so compaction needs no scheduling against
-    * probes at all. Committed-batch state and the meta marker are
-    * untouched.
+    * re-fold across tiers) and the sigs rows fold as-is, so probe
+    * results are identical across every level state — all tables land
+    * in ONE manifest publish, and probes resolve one snapshot, so
+    * compaction needs no scheduling against probes at all.
+    * Committed-batch state and the meta marker are untouched.
     */
   /** `vacuumKeep`: run [[graft.util.ManifestCommit.vacuum]] inline
     * after the fold, retaining the newest K generations — the 24/7
@@ -1547,7 +1591,7 @@ object Dedup {
     (action, sizes)
   }
 
-  /** Probe-visible signature mass (base ∪ runs ∪ tail) read off the
+  /** Probe-visible band-row mass (base ∪ runs ∪ tail) read off the
     * manifest's exact per-dir row counts — zero Spark jobs where the
     * old `ManifestTiered.read(...).count()` re-scanned every tier's
     * parquet footers; falls back to a real count only for a v1
@@ -1883,7 +1927,7 @@ object Dedup {
         (s"$rt/work", g)
       }
       val probe = docs.filter(pmod(col("doc_id"), lit(4L)) === 3L)
-      // ONE banded-signature pass serves both snapshot probes — the
+      // ONE signature pass serves both snapshot probes — the
       // probe crawl's tokenize→shingle→OPH is the dominant per-probe
       // cost and is snapshot-independent (the public asOfGen path
       // recomputes it per call; same probeWithBands underneath).
@@ -1892,12 +1936,13 @@ object Dedup {
       // fail both on a cluster executor loss (util/Checkpoints
       // rationale; local masters keep the cheaper memory blocks)
       validateIndexMeta(s, work, 5, 64, 4, "probing")
-      val banded = graft.util.Checkpoints.ReliableOps(
-        bandedSignatures(probe, 5, 64, 4)).stableCheckpoint()
+      val sigs = graft.util.Checkpoints.ReliableOps(
+        signatures(probe, 5, 64)).stableCheckpoint()
+      val banded = bandsOf(sigs, 64, 4)
       val mOld = ManifestCommit.atGeneration(conf, work, buildGen)
       val mCur = ManifestCommit.current(conf, work)
       def counts(m: ManifestCommit.Manifest): (Long, Long) = {
-        val r = probeWithBands(s, banded, manifestReader(s, work, m),
+        val r = probeWithBands(s, sigs, banded, manifestReader(s, work, m),
             perms = 64, threshold = 0.5, nBands = 16)
           .agg(count(lit(1)).as("n_hits"),
             countDistinct(col("new_id")).as("n_dup_docs"))

@@ -650,7 +650,7 @@ object StreamQueries {
     * far, then APPENDS its own signatures (the dedup_index_probe →
     * dedup_index_update cadence, inside foreachBatch). Scale shape:
     * per batch, one keyed (band, bucket) join against the
-    * band-partitioned index plus one append of ~0.5 KB/doc — the index
+    * band-partitioned index plus one append of ~0.8 KB/doc — the index
     * is never rebuilt, the corpus never re-read. The oracle replays
     * the whole thing statically (Dedup.minhashStreamProbeOracle):
     * append-all makes the drained hit set order-free GIVEN the crawl

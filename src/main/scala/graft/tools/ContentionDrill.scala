@@ -117,7 +117,11 @@ object ContentionDrill {
     val visible = ManifestTiered.read(spark, idx, m, "bands",
       graft.dedup.Dedup.BandsSchema).count()
     require(visible == 16L * nDocs,
-      s"signature rows $visible != ${16L * nDocs} — a batch was lost or doubled")
+      s"band rows $visible != ${16L * nDocs} — a batch was lost or doubled")
+    val sigRows = ManifestTiered.read(spark, idx, m, "sigs",
+      graft.dedup.Dedup.SigsSchema).count()
+    require(sigRows == nDocs,
+      s"signature rows $sigRows != $nDocs — a batch was lost or doubled")
     // content equality vs a SERIAL truth build over the same corpus:
     // the held-out probe (every 4*nShards-th doc, shifted ids) must
     // return the identical hit set

@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.{Await, ExecutionContext, Future, blocking}
 import scala.concurrent.duration.{Duration, FiniteDuration}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** Run INDEPENDENT Spark-action-bearing thunks from separate driver
   * threads (guide §2.6 idle-capacity overlap): Spark schedules the
   * jobs concurrently, so the tail of one back-fills executors the
@@ -20,8 +22,9 @@ import scala.concurrent.duration.{Duration, FiniteDuration}
   * the global pool adds a thread for it instead of starving the
   * unrelated futures that share its cores-sized pool. Each worker tags
   * its jobs with a unique job tag; on timeout every tag is cancelled
-  * before the `TimeoutException` is rethrown, so no running job
-  * outlives its caller.
+  * before the `TimeoutException` is rethrown, and a listener that
+  * lives until the last thunk returns cancels each job a thunk starts
+  * after that — so no job of a timed-out call runs to completion.
   */
 object DriverPar {
 
@@ -54,6 +57,17 @@ object DriverPar {
     try Await.result(Future.sequence(running), timeout)
     catch {
       case e: java.util.concurrent.TimeoutException =>
+        // registered BEFORE the tag cancel: a job submitted in between
+        // is either still active for the cancel or seen starting here
+        val stopper = new SparkListener {
+          override def onJobStart(js: SparkListenerJobStart): Unit =
+            if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+                .exists(_.split(",").exists(tags.contains)))
+              sc.cancelJob(js.jobId, "DriverPar call timed out")
+        }
+        sc.addSparkListener(stopper)
+        Future.sequence(running.map(_.transform(scala.util.Success(_))))
+          .foreach(_ => sc.removeSparkListener(stopper))
         tags.foreach(sc.cancelJobsWithTag)
         throw e
     }

@@ -717,9 +717,12 @@ object ManifestCommit {
             .parquet(present: _*))
         }
     }
+    // an empty table is a LOCAL empty relation, which the optimizer
+    // prunes: each union branch over an empty tier would otherwise
+    // still plan (and run) its own broadcast of a probe's join keys
     if (scans.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     else scans.reduce(_.unionByName(_))
   }
 

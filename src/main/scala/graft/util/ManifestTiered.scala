@@ -128,7 +128,8 @@ object ManifestTiered {
     * `refold` re-aggregates the folded mass (the widths sidecar's
     * sum/min — identity for plain tables); run files are flat-sorted
     * on `runSortKeys`, a Major's base partition-dir tree sorts within
-    * partitions on `baseSortKeys`.
+    * partitions on `baseSortKeys` (with no `basePartitionBy`, the base
+    * is flat files range-sorted on `baseSortKeys`, sized like a run).
     */
   final case class FoldSpec(name: String, schema: StructType,
                             basePartitionBy: Seq[String],
@@ -151,22 +152,27 @@ object ManifestTiered {
     val szs = sizes(spark, indexDir, m, specs.head.name, specs.head.schema)
     val action = TieredIndex.plan(szs)
     if (action == TieredIndex.NoOp) return
+    // each table's run files are sized by ITS OWN folded rows: a
+    // sidecar a fraction of the dominant table's size must not be laid
+    // into as many files as the dominant table
     def fold(spec: FoldSpec): ManifestCommit.DirEntry = {
+      val own = sizes(spark, indexDir, m, spec.name, spec.schema)
       val (rows0, mass) = action match {
         case TieredIndex.Minor(_) =>
-          (readTail(spark, indexDir, m, spec.name, spec.schema), szs.tail)
+          (readTail(spark, indexDir, m, spec.name, spec.schema), own.tail)
         case TieredIndex.MergeRuns =>
           (readAboveBase(spark, indexDir, m, spec.name, spec.schema),
-            szs.l1 + szs.tail)
+            own.l1 + own.tail)
         case _ =>
           (read(spark, indexDir, m, spec.name, spec.schema),
-            szs.base + szs.l1 + szs.tail)
+            own.base + own.l1 + own.tail)
       }
       val rows = spec.refold(rows0)
       action match {
         case TieredIndex.Major =>
           layDir(spark, indexDir, spec.name, rows,
-            partitionBy = spec.basePartitionBy, sortKeys = spec.baseSortKeys)
+            partitionBy = spec.basePartitionBy, sortKeys = spec.baseSortKeys,
+            sizeHintRows = mass, rowsPerFile = spec.runRowsPerFile)
         case _ =>
           layDir(spark, indexDir, l1Table(spec.name), rows,
             partitionBy = Nil, sortKeys = spec.runSortKeys,

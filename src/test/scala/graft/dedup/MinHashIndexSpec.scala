@@ -141,6 +141,7 @@ class MinHashIndexSpec extends AnyFunSuite {
   }
 
   test("probe prunes to the batch's touched (band, bmod) partitions and scans bands ONCE") {
+    // bands is read without signatures; sigs is read once, for verification
     assume(sf.isDefined)
     import org.apache.spark.sql.execution.FileSourceScanExec
     val corpus = graft.util.Tables(spark, sf.get, "documents")
@@ -159,6 +160,12 @@ class MinHashIndexSpec extends AnyFunSuite {
     // second scan entirely
     val bandsScans = scansOf("/bands/")
     assert(bandsScans.size == 1, s"bands must be scanned exactly once, got ${bandsScans.size}")
+    bandsScans.foreach { f =>
+      assert(!f.requiredSchema.fieldNames.contains("sig"),
+        s"bands scan must not read signatures: ${f.requiredSchema}")
+    }
+    val sigsScans = scansOf("/sigs/")
+    assert(sigsScans.size == 1, s"sigs must be scanned exactly once, got ${sigsScans.size}")
     // both index-side scans carry a static partition filter from the
     // batch's bounded touched set — the probe reads only the partitions
     // the batch can collide with, never the whole persisted index

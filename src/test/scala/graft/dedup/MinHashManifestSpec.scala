@@ -177,7 +177,6 @@ class MinHashManifestSpec extends AnyFunSuite {
     val orphan = ManifestCommit.newDataDir(dir, "bands.tail")
     graft.util.Tables(spark, sf.get, "documents").limit(0)
       .select(col("doc_id"), col("doc_id").as("bucket"),
-        array(col("doc_id")).as("sig"),
         lit(0).as("band"), lit(0).as("bmod"))
       .write.parquet(s"$dir/$orphan")
     assert(hitSet(Dedup.dedupAgainstMinHashIndex(probe, dir)) == before,
@@ -234,8 +233,8 @@ class MinHashManifestSpec extends AnyFunSuite {
     // publish, a racing rebuild rewrites the meta marker (its first
     // step — the rebuild's own manifest may not even have landed yet,
     // so the publish CAS alone would see NO contention)
-    val banded = Dedup.bandedSignaturesDev(
-      corpus.filter(col("doc_id") % 2 === 1)).localCheckpoint()
+    val (sigs, banded) = Dedup.bandedSignaturesDev(
+      corpus.filter(col("doc_id") % 2 === 1))
     val metaPath = java.nio.file.Paths.get(dir, "_graft_minhash_meta")
     val origMeta = new String(java.nio.file.Files.readAllBytes(metaPath), "UTF-8")
     // rewrite through the Hadoop FS, exactly as a real rebuild's
@@ -246,7 +245,7 @@ class MinHashManifestSpec extends AnyFunSuite {
       .getBytes("UTF-8"))
     finally out.close()
     val e = intercept[IllegalStateException] {
-      Dedup.appendAtManifest(banded, dir, m0, Some("t1"),
+      Dedup.appendAtManifest(sigs, banded, dir, m0, Some("t1"),
         commuting = true, expectMeta = origMeta)
     }
     assert(e.getMessage.contains("changed the MinHash params"), e.getMessage)

@@ -51,4 +51,29 @@ class DriverParSpec extends AnyFunSuite {
     while (active.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(active.isEmpty, s"jobs still running after the timeout: ${active.map(_.jobId).toSeq}")
   }
+
+  test("a job a thunk starts after the timeout is cancelled, not run to completion") {
+    val sc = spark.sparkContext
+    // a one-task job that runs `ms` or until it is killed
+    def slow(ms: Long): Long = sc.parallelize(1 to 1, 1).map { x =>
+      val end = System.currentTimeMillis() + ms
+      while (!TaskContext.get().isInterrupted() && System.currentTimeMillis() < end)
+        Thread.sleep(20)
+      x.toLong
+    }.count()
+    val second = scala.concurrent.Promise[scala.util.Try[Long]]()
+    intercept[java.util.concurrent.TimeoutException] {
+      DriverPar.inParallel(sc, 2.seconds)(Seq(
+        () => {
+          // the first job is still running when the call times out
+          try slow(4000) catch { case _: org.apache.spark.SparkException => 0L }
+          second.success(scala.util.Try(slow(15000)))
+          0L
+        },
+        () => 0L))
+    }
+    val outcome = scala.concurrent.Await.result(second.future, 60.seconds)
+    assert(outcome.isFailure,
+      s"a job started after the timeout ran to completion: $outcome")
+  }
 }
