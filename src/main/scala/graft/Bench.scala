@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -24,19 +25,27 @@ object Bench {
     * with that fixed, an A/B at local[32]/sf0.1 showed every recorded
     * median within 1.5× of its standalone steady-state cost. The barrier
     * that remains is the CHEAP reset set: leaked cache entries, persistent
-    * RDDs, and the memory-sink temp views completed stream queries leave
-    * behind (each holds its full result for the session otherwise). A
-    * forced System.gc() per query was tried and REJECTED: it made the
-    * persisted-index probe path 8× slower (soft-reference/code-cache
-    * churn) — worse than the residue it was meant to clear.
+    * RDDs (the [[unpersistable]] ones), and the memory-sink temp views
+    * completed stream queries leave behind (each holds its full result
+    * for the session otherwise). A forced System.gc() per query was
+    * tried and REJECTED: it made the persisted-index probe path 8×
+    * slower (soft-reference/code-cache churn) — worse than the residue
+    * it was meant to clear.
     */
   private[graft] def barrier(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
+    unpersistable(spark.sparkContext.getPersistentRDDs.values)
       .foreach(_.unpersist(blocking = false))
     spark.catalog.listTables().collect().filter(_.isTemporary)
       .foreach(t => spark.catalog.dropTempView(t.name))
   }
+
+  /** The persistent RDDs the [[barrier]] may unpersist: all but the
+    * checkpointed ones. A locally checkpointed RDD's lineage is
+    * truncated, so once unpersisted it could never be recomputed.
+    */
+  private[graft] def unpersistable(rdds: Iterable[RDD[_]]): Iterable[RDD[_]] =
+    rdds.filterNot(_.isCheckpointed)
 
   /** Times one query at the bench cadence: `runs` runs, then `reset`
     * (the [[barrier]] unless a caller substitutes its own), then the

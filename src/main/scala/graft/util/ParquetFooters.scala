@@ -49,4 +49,18 @@ object ParquetFooters {
     }
     Some(total)
   }
+
+  /** The Spark schema a parquet file's footer records under
+    * `org.apache.spark.sql.parquet.row.metadata` (written by every Spark
+    * parquet write), or None when the key is absent or unparsable.
+    */
+  def sparkSchema(conf: Configuration, file: org.apache.hadoop.fs.FileStatus)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val kv = try r.getFooter.getFileMetaData.getKeyValueMetaData finally r.close()
+    Option(kv.get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(js => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(js)).toOption)
+      .collect { case st: org.apache.spark.sql.types.StructType => st }
+  }
 }

@@ -44,4 +44,15 @@ class BenchTimingSpec extends AnyFunSuite {
     val med = out.toOption.get
     assert(med >= 0.1 && med < 0.3, s"median $med s")
   }
+
+  test("the barrier unpersists every persistent RDD but the checkpointed ones") {
+    // the selection only: the real barrier would unpersist the RDDs of
+    // suites running beside this one in the shared context
+    val plain = spark.sparkContext.parallelize(1 to 8, 2).persist()
+    val local = spark.sparkContext.parallelize(1 to 8, 2).map(_ + 1).localCheckpoint()
+    assert(local.count() == 8)
+    assert(local.isCheckpointed)
+    try assert(Bench.unpersistable(Seq(plain, local)).toSeq == Seq(plain))
+    finally plain.unpersist()
+  }
 }

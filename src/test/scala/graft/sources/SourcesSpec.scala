@@ -56,6 +56,50 @@ class SourcesSpec extends AnyFunSuite {
     assert(out.collect().map(_.getString(0)).toSeq == Seq("u1"))
   }
 
+  /** A ccindex over the fixture archive, as CCIndexWarcJob.buildIndex lays it. */
+  lazy val builtIndex: String = {
+    val root = java.nio.file.Files.createTempDirectory("ccidx").toString
+    graft.jobs.CCIndexWarcJob.buildIndex(spark, Seq(warcPath), s"$root/indexed", s"$root/ccindex")
+    s"$root/ccindex"
+  }
+
+  private val coordSql =
+    "SELECT url, warc_filename, warc_record_offset, warc_record_length FROM %s " +
+      "WHERE warc_type = 'response' AND crawl = 'CRAWL-LOCAL'"
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.mkString("|")).toSet
+
+  test("S4 index SQL without a schema starts no job before its action") {
+    val view = "ccindex_nojob"
+    val want = spark.read.parquet(builtIndex)
+    val (out, jobs) = graft.util.JobGroups.startsJobs(spark) {
+      CoordinateSource.fromIndexQuery(spark, builtIndex, coordSql.format(view), view)
+    }
+    assert(!jobs, "fromIndexQuery started a Spark job before the query's action")
+    assert(spark.table(view).schema == want.schema) // nullability included
+    want.createOrReplaceTempView(s"${view}_inferred")
+    val got = rowsOf(out)
+    assert(got.nonEmpty)
+    assert(got == rowsOf(spark.sql(coordSql.format(s"${view}_inferred"))))
+  }
+
+  test("S4 index SQL over crawl= partition dirs falls back to inference") {
+    val view = "ccindex_parts"
+    val flat = spark.read.parquet(builtIndex)
+    val root = java.nio.file.Files.createTempDirectory("ccidx_parts").toString + "/idx"
+    flat.union(flat.withColumn("crawl", org.apache.spark.sql.functions.lit("CRAWL-OTHER")))
+      .write.partitionBy("crawl").parquet(root)
+    val out = CoordinateSource.fromIndexQuery(spark, root, coordSql.format(view), view)
+    val schema = spark.table(view).schema
+    assert(schema == spark.read.parquet(root).schema)
+    assert(schema.fieldNames.last == "crawl", "crawl must come back as the partition column")
+    flat.createOrReplaceTempView(s"${view}_flat")
+    val got = rowsOf(out)
+    assert(got.nonEmpty)
+    assert(got == rowsOf(spark.sql(coordSql.format(s"${view}_flat"))))
+  }
+
   test("S8/P15 whole-file fetch + md5 (external binary or JVM fallback)") {
     val manifest = java.nio.file.Files.createTempFile("m", ".txt")
     java.nio.file.Files.writeString(manifest, warcPath + "\n")

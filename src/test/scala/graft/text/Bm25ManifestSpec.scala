@@ -241,35 +241,13 @@ class Bm25ManifestSpec extends AnyFunSuite {
   }
 
   test("building a probe starts no Spark job and lists only the probed bucket dirs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = tmp("bm25_probe_jobs")
     InvertedIndex.save(corpus(300), dir)
     val probeTerms = Seq("join", "dup")
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
+    val (probe, jobs) = graft.util.JobGroups.startsJobs(spark) {
+      InvertedIndex.probe(spark, dir, probeTerms)
     }
-    val group = s"bm25-probe-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    sc.addSparkListener(listener)
-    val probe =
-      try {
-        sc.setJobGroup(group, "probe construction")
-        val p = try InvertedIndex.probe(spark, dir, probeTerms) finally sc.clearJobGroup()
-        // listener events arrive in order: once this job's start is
-        // seen, every job construction started has been seen too
-        sc.setJobGroup(sentinel, "sentinel")
-        try spark.range(1).count() finally sc.clearJobGroup()
-        val deadline = System.currentTimeMillis() + 30000L
-        while (!groups.contains(sentinel) && System.currentTimeMillis() < deadline)
-          Thread.sleep(20)
-        assert(groups.contains(sentinel), "the listener never saw the sentinel job")
-        p
-      } finally sc.removeSparkListener(listener)
-    assert(!groups.contains(group), "building the probe started a Spark job")
+    assert(!jobs, "building the probe started a Spark job")
     val m = ManifestCommit.current(conf, dir)
     val buckets = probeTerms.map(t => spark.range(1)
       .select(pmod(xxhash64(lit(t)), lit(InvertedIndex.NumBuckets.toLong)))
