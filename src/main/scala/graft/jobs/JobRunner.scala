@@ -248,19 +248,15 @@ object JobRunner {
     if (fsys.exists(root)) {
       // qualified root so relativize matches the listing's URIs
       val rootUri = fsys.makeQualified(root).toUri
-      val it = fsys.listFiles(root, /*recursive=*/ true)
-      val entries = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val st = it.next()
+      graft.util.ParquetFooters.listRecursive(fsys, root).map { st =>
         // the path RELATIVE to the input root, not the basename: a
         // part file moved between partition subdirs, or same-named
         // same-sized files in swapped subdirs, must change the digest
         // — basenames alone let a genuinely changed staging input
         // silently no-op as an already-committed batch
         val rel = rootUri.relativize(st.getPath.toUri).toString
-        entries += s"$rel|${st.getLen}|${st.getModificationTime}"
-      }
-      entries.sorted.foreach(feed)
+        s"$rel|${st.getLen}|${st.getModificationTime}"
+      }.toVector.sorted.foreach(feed)
     }
     "add-" + md.digest().take(8).map(b => f"$b%02x").mkString
   }

@@ -21,18 +21,20 @@ import org.apache.spark.sql.types.DoubleType
   *    O(1) while still letting a probe statically prune to the probed
   *    terms' buckets, and the within-file term sort gives parquet
   *    row-group pruning inside each bucket.
-  *  - `terms/bucket=B/`: (term, df) in the same bucketed layout.
   *  - `stats/`: (n_docs, total_dl) — exact integer sums, so the probe
   *    recomputes avgdl by one double division and scores match the
   *    direct query bit for bit.
-  *  - `<table>.l1` + `<table>.tail` for each of the three: the
-  *    size-tiered maintenance layout (graft.util.TieredIndex's policy
-  *    over ManifestTiered). A fold appends one flat tail dir per table
-  *    in one manifest publish and never rewrites what is there;
+  *  - `<table>.l1` + `<table>.tail` for both: the size-tiered
+  *    maintenance layout (graft.util.TieredIndex's policy over
+  *    ManifestTiered). A fold appends one flat tail dir per table in
+  *    one manifest publish and never rewrites what is there;
   *    [[compact]] re-lays the tails into runs and bases on the tiered
-  *    cadence. df and stats are additive, so readers SUM them across
-  *    base ∪ runs ∪ tail: per probed term for df, over all rows for
-  *    stats.
+  *    cadence. Stats are additive, so readers SUM them across
+  *    base ∪ runs ∪ tail.
+  *
+  * There is no df table: a term's df is the number of its postings
+  * rows across the tiers, and a probe reads every one of them anyway,
+  * so it counts df in the window that ranks them.
   *
   * A probe lists and reads ONLY the probed buckets' dirs in the bases
   * (≤ |terms| of 64 directories each, asserted on the plan by
@@ -48,10 +50,10 @@ object InvertedIndex {
   private def bucketOf(termCol: org.apache.spark.sql.Column) =
     pmod(xxhash64(termCol), lit(NumBuckets.toLong))
 
-  /** One tokenize pass → postings + per-term df + corpus stats. The
-    * postings frame is persisted for the build: its three consumers
-    * (postings write, terms aggregate, total_dl stat) would otherwise
-    * each re-tokenize and re-explode the full corpus from scratch.
+  /** One tokenize pass → postings + corpus stats. The postings frame
+    * is persisted for the build: its two consumers (postings write,
+    * total_dl stat) would otherwise each re-tokenize and re-explode the
+    * full corpus from scratch.
     * Persisting postings — not `d`, whose token arrays are ~10× the
     * text — costs one compact (term, doc_id, dl, tf) materialization
     * and pays the corpus scan exactly once per build.
@@ -75,20 +77,13 @@ object InvertedIndex {
 
   /** Corpus stats without re-tokenizing: n_docs from the base table's
     * id column (zero-token docs have no postings row but DO count
-    * toward n_docs/avgdl); total_dl from one (doc_id, dl) row per
-    * posted doc — a dl > 0 doc always has ≥1 posting, a dl = 0 doc
-    * adds 0.
+    * toward n_docs/avgdl); total_dl = sum(tf) over the postings, since
+    * a doc's tf values sum to its dl (a dl = 0 doc adds 0) — a global
+    * sum, no per-doc dedupe shuffle.
     */
   private def statsOf(docs: DataFrame, postings: DataFrame): DataFrame =
     docs.select(col("doc_id")).agg(count(lit(1)).as("n_docs"))
-      .crossJoin(postings.select(col("doc_id"), col("dl"))
-        .dropDuplicates("doc_id")
-        .agg(coalesce(sum(col("dl")), lit(0L)).as("total_dl")))
-
-  /** Per-(term, bucket) document frequency of a postings frame. */
-  private def termsOf(postings: DataFrame): DataFrame =
-    postings.groupBy(col("term"), col("bucket")).agg(count(lit(1)).as("df"))
-      .select(col("term"), col("df"), col("bucket"))
+      .crossJoin(postings.agg(coalesce(sum(col("tf")), lit(0L)).as("total_dl")))
 
   /** The one (n_docs, total_dl) row summed over stats rows — every
     * tier holds additive integer deltas, so the sum is exact.
@@ -98,11 +93,12 @@ object InvertedIndex {
 
   // ---- versioned-manifest (object-store) protocol arms ----
   //
-  // Tables: `postings`, `terms` and `stats` all tiered (base; flat L1
-  // runs; flat tail). A fold appends one tail dir to each in ONE
-  // publish, so a probe never sees a fold's postings without its df
-  // and stats rows. Probes resolve one snapshot — compaction and
-  // vacuum are invisible to them by construction.
+  // Tables: `postings` and `stats`, both tiered (base; flat L1 runs;
+  // flat tail). A fold appends one tail dir to each in ONE publish, so
+  // a probe never sees a fold's postings without its stats row. Probes
+  // resolve one snapshot — compaction and vacuum are invisible to them
+  // by construction. An index laid before df was counted at probe time
+  // still names `terms*` tables; nothing reads or folds them.
 
   import graft.util.{ManifestCommit, ManifestTiered}
 
@@ -111,20 +107,17 @@ object InvertedIndex {
     val conf = s.sessionState.newHadoopConf()
     val postings = tokenizedPostings(docs).persist()
     try {
-      // three independent lays off the persisted postings — overlap
+      // two independent lays off the persisted postings — overlap
       // their jobs from driver threads (§2.6, one publish below)
-      val Seq(pd, td, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
+      val Seq(pd, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
         () => ManifestTiered.layDir(s, dir, "postings", postings,
           partitionBy = Seq("bucket"), sortKeys = Seq(col("term"), col("doc_id"))),
-        () => ManifestTiered.layDir(s, dir, "terms", termsOf(postings),
-          partitionBy = Seq("bucket"), sortKeys = Seq(col("term"))),
         () => ManifestTiered.layDir(s, dir, "stats", statsOf(docs, postings),
           partitionBy = Nil, sortKeys = Nil)))
       // a REBUILD replaces every table and resets the committed-batch
       // state (a new logical index must not inherit tokens)
       ManifestCommit.publish(conf, dir, m => m.copy(
-        tables = Map("postings" -> Seq(pd), "terms" -> Seq(td),
-          "stats" -> Seq(sd)),
+        tables = Map("postings" -> Seq(pd), "stats" -> Seq(sd)),
         committed = Map.empty, writers = Map.empty, floor = 0L)); ()
     } finally postings.unpersist(blocking = false)
   }
@@ -146,19 +139,17 @@ object InvertedIndex {
     if (batchId.exists(m.isCommitted)) return
     val postings = tokenizedPostings(deltaDocs).persist()
     try {
-      // three flat tail lays off the persisted delta postings, overlapped
-      // from driver threads (§2.6); none reads the snapshot, so the
+      // two flat tail lays off the persisted delta postings, overlapped
+      // from driver threads (§2.6); neither reads the snapshot, so the
       // publish commutes with any racing fold or compaction
-      val Seq(pd, td, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
+      val Seq(pd, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
         () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("postings"),
           postings.select(col("term"), col("doc_id"), col("dl"), col("tf"), col("bucket")),
           partitionBy = Nil, sortKeys = Nil),
-        () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("terms"),
-          termsOf(postings), partitionBy = Nil, sortKeys = Nil),
         () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("stats"),
           statsOf(deltaDocs, postings), partitionBy = Nil, sortKeys = Nil)))
       ManifestCommit.publishCommuting(conf, dir, m, mm =>
-        Seq("postings" -> pd, "terms" -> td, "stats" -> sd).foldLeft(mm) {
+        Seq("postings" -> pd, "stats" -> sd).foldLeft(mm) {
           case (acc, (t, e)) =>
             ManifestCommit.addDir(acc, ManifestTiered.tailTable(t), e.dir, e.rows)
         }, batchId); ()
@@ -172,13 +163,6 @@ object InvertedIndex {
         baseSortKeys = Seq(col("term"), col("doc_id")),
         runSortKeys = Seq(col("bucket"), col("term"), col("doc_id")),
         runRowsPerFile = 8L * 1000 * 1000),
-      ManifestTiered.FoldSpec("terms", TermsSchema,
-        basePartitionBy = Seq("bucket"),
-        baseSortKeys = Seq(col("term")),
-        runSortKeys = Seq(col("bucket"), col("term")),
-        runRowsPerFile = 8L * 1000 * 1000,
-        refold = _.groupBy(col("term"), col("bucket")).agg(sum(col("df")).as("df"))
-          .select(col("term"), col("df"), col("bucket"))),
       // a global aggregate yields one row even over an empty tier (an
       // index folded before stats were tiered): drop that null row
       ManifestTiered.FoldSpec("stats", StatsSchema,
@@ -196,22 +180,21 @@ object InvertedIndex {
     StructField("term", StringType), StructField("doc_id", LongType),
     StructField("dl", IntegerType), StructField("tf", LongType),
     StructField("bucket", LongType)))
-  private val TermsSchema = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType),
-    StructField("bucket", LongType)))
   private val StatsSchema = StructType(Seq(
     StructField("n_docs", LongType), StructField("total_dl", LongType)))
 
   /** BM25 top-k per probe term against the persisted index.
-    * READ-ONLY: probes resolve ONE manifest snapshot for all three
-    * tables — consistent across any concurrent fold/compact/vacuum.
-    * Each table reads base ∪ level-1 runs ∪ tail; df is summed per
-    * probed term and the stats rows are summed, so the scores are the
-    * ones a from-scratch build gives. The probe terms' bucket ids come
-    * from the writer's own bucket expression, folded over the literal
-    * term list on the driver (no Spark job); the bases are read from
-    * the probed `bucket=` dirs only, and the flat runs and tail are
-    * row-filtered on (bucket, term).
+    * READ-ONLY: probes resolve ONE manifest snapshot for both tables —
+    * consistent across any concurrent fold/compact/vacuum. Each table
+    * reads base ∪ level-1 runs ∪ tail. df is counted from the probed
+    * postings rows themselves (a window over term, the same partitioning
+    * the top-k window uses, so one exchange serves both) and the stats
+    * rows are summed, so the scores are the ones a from-scratch build
+    * gives. The probe terms' bucket ids come from the writer's own
+    * bucket expression, folded over the literal term list on the
+    * driver (no Spark job); the base is read from the probed `bucket=`
+    * dirs only, and the flat runs and tail are row-filtered on
+    * (bucket, term).
     *
     * `asOfGen`: score against a RETAINED HISTORICAL generation
     * (ManifestCommit.atGeneration) instead of the current snapshot.
@@ -232,15 +215,14 @@ object InvertedIndex {
     val probed = Some(bucketIds.map(b => s"bucket=$b"))
     val inProbe = Some(col("bucket").isin(bucketIds: _*) && col("term").isin(terms: _*))
     val post = ManifestTiered.read(s, dir, m, "postings", PostingsSchema, inProbe, probed)
-    val df = ManifestTiered.read(s, dir, m, "terms", TermsSchema, inProbe, probed)
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
     val stats = summedStats(ManifestTiered.read(s, dir, m, "stats", StatsSchema))
       .select(col("n_docs"),
         // nullif: an empty corpus has n_docs = 0 and no postings — avgdl
         // is never consumed then, but ANSI mode would fail fast on 0/0
         (col("total_dl").cast(DoubleType) /
           nullif(col("n_docs"), lit(0L))).as("avgdl"))
-    val scored = post.join(broadcast(df), Seq("term")).crossJoin(broadcast(stats))
+    val scored = post.crossJoin(broadcast(stats))
       .select(col("term"), col("doc_id"),
         round(
           log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
@@ -254,26 +236,27 @@ object InvertedIndex {
   // ---- maintenance + size-tiered layout (manifest) ----
   //
   // The shared size-tiered layout/policy (graft.util.TieredIndex's
-  // plan over graft.util.ManifestTiered's tables), applied to all
-  // three tables: `postings` and `terms` bases are bucket-partitioned
-  // (a probe reads only its buckets' dirs), their `.l1` runs are flat
-  // (bucket, term[, doc_id])-sorted files (footer-stat pruned), and
-  // the `.tail`s hold the fold deltas flat. `stats` tiers hold
-  // additive (n_docs, total_dl) rows. Readers sum df and stats across
-  // tiers, so every tier state scores like a from-scratch build.
+  // plan over graft.util.ManifestTiered's tables), applied to both
+  // tables: the `postings` base is bucket-partitioned (a probe reads
+  // only its buckets' dirs), its `.l1` runs are flat
+  // (bucket, term, doc_id)-sorted files (footer-stat pruned), and the
+  // `.tail`s hold the fold deltas flat. `stats` tiers hold additive
+  // (n_docs, total_dl) rows. A probe counts df over the postings of
+  // every tier and sums stats, so every tier state scores like a
+  // from-scratch build.
 
   /** Incremental maintenance: fold a DELTA corpus into an existing
     * index without re-reading the indexed corpus. doc_ids must be new
     * (dedup/decontam are upstream's job). APPEND-ONLY: the delta lands
-    * as one flat tail dir per table — its postings, its df per
-    * (term, bucket), and one (n_docs, total_dl) row — each a small
-    * unpartitioned write, never a 64-bucket-dir commit ([[compact]]
-    * owns the re-layout into pruned bucket dirs on the tiered
-    * cadence). Nothing already in the index is read or rewritten, and
-    * with a `batchId` a batch already committed in the resolved
-    * snapshot is a no-op.
+    * as one flat tail dir per table — its postings and one
+    * (n_docs, total_dl) row — each a small unpartitioned write, never
+    * a 64-bucket-dir commit ([[compact]] owns the re-layout into
+    * pruned bucket dirs on the tiered cadence). There is no df delta:
+    * a probe counts df from the postings it reads. Nothing already in
+    * the index is read or rewritten, and with a `batchId` a batch
+    * already committed in the resolved snapshot is a no-op.
     *
-    * All three land in ONE manifest publish. The update only adds
+    * Both land in ONE manifest publish. The update only adds
     * dirs, so it commutes: a lost CAS re-resolves the newer snapshot
     * and re-applies without re-laying (`ManifestCommit.publishCommuting`)
     * — racing folds with different batch ids all land exactly once.
@@ -295,10 +278,11 @@ object InvertedIndex {
     * untouched); the base rewrites ONLY when the L1+tail mass reaches
     * MajorRatio × base, so the O(base) rewrite amortizes over O(base)
     * of appended bytes — the r12 single-level design rewrote the whole
-    * postings table every cycle. terms and stats fold the SAME action
-    * (df and the stats columns re-summed over the folded mass) in the
-    * same publish, so their tails empty together with the postings
-    * tail. One manifest publish per fold; probes resolve a snapshot,
+    * postings table every cycle. stats folds the SAME action (its
+    * columns re-summed over the folded mass) in the same publish, so
+    * its tail empties together with the postings tail; there is no df
+    * table to fold, since a probe counts df from the postings it reads.
+    * One manifest publish per fold; probes resolve a snapshot,
     * so compaction needs no scheduling.
     *
     * `vacuumKeep`: run [[ManifestCommit.vacuum]] inline after the
@@ -397,14 +381,24 @@ object InvertedIndex {
     * the corpus, the remaining 20% folded in via [[appendDelta]], then
     * probed. Oracle = the SAME full-corpus BM25 SQL as bm25_index_topk:
     * incremental maintenance must be indistinguishable from a
-    * from-scratch build, hash-checked — df sums, appended postings,
-    * and additive stats all have to land exactly.
+    * from-scratch build, hash-checked — appended postings (and with
+    * them df) and additive stats all have to land exactly.
     */
   val bm25IndexMergeTopk: QueryDef = QueryDef(
     "bm25_index_merge_topk",
     (s, dir) => probe(s, sessionMergedIndex(s, dir),
       Seq("join", "vector", "filter", "dup")),
     bm25IndexTopk.oracle)
+
+  /** The registered probe's bounded top-k (≤ 4 terms × 10 rows),
+    * collected while the caller holds the index lock and returned as a
+    * local frame: a lazy probe handed out of the lock would read dirs
+    * that the next invocation's rewind may vacuum.
+    */
+  private def collectedProbe(s: SparkSession, idx: String): DataFrame = {
+    val top = probe(s, idx, Seq("join", "vector", "filter", "dup"))
+    s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+  }
 
   /** Build-once per (application, sf dir): an 80/20 build+fold index
     * plus the post-fold generation — the snapshot each invocation
@@ -413,7 +407,7 @@ object InvertedIndex {
   private val foldedIdx =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
-  private def sessionFoldedIndex(s: SparkSession, dir: String): (String, Long) =
+  private[text] def sessionFoldedIndex(s: SparkSession, dir: String): (String, Long) =
     graft.util.Caches.fill(foldedIdx, s.sparkContext.applicationId + ":folded:" + dir,
       (v: (String, Long)) => graft.util.FileTrees.rmTree(v._1)) {
       val d = java.nio.file.Files.createTempDirectory("graft_bm25_folded").toString
@@ -446,7 +440,7 @@ object InvertedIndex {
         // keep=2 retains the pre-fold snapshot the next invocation
         // rewinds to; the vacuum pass itself runs for real every cycle
         compact(s, idx, vacuumKeep = Some(2))
-        probe(s, idx, Seq("join", "vector", "filter", "dup"))
+        collectedProbe(s, idx)
       }
     },
     bm25IndexTopk.oracle)
@@ -485,7 +479,7 @@ object InvertedIndex {
       graft.util.WorkLocks.sync(idx) {
         ManifestTiered.benchRewind(conf, idx, seedGen)
         compact(s, idx)
-        probe(s, idx, Seq("join", "vector", "filter", "dup"))
+        collectedProbe(s, idx)
       }
     },
     bm25IndexTopk.oracle)

@@ -30,17 +30,12 @@ object ParquetFooters {
     */
   def rowCount(conf: Configuration, dir: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    val files = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-    while (it.hasNext) {
-      val f = it.next()
+    // only data files count: committers drop _SUCCESS and dot-files
+    val files = listRecursive(p.getFileSystem(conf), p).filter { f =>
       val name = f.getPath.getName
-      // only data files count: committers drop _SUCCESS and dot-files
-      if (!name.startsWith("_") && !name.startsWith(".") && f.getLen > 0)
-        files += f
-      if (files.length > MaxDriverFiles) return None
-    }
+      !name.startsWith("_") && !name.startsWith(".") && f.getLen > 0
+    }.take(MaxDriverFiles + 1).toVector
+    if (files.length > MaxDriverFiles) return None
     var total = 0L
     files.foreach { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
@@ -49,6 +44,17 @@ object ParquetFooters {
     }
     Some(total)
   }
+
+  /** Every file under `root`, depth first, lazily, by recursive
+    * `listStatus`. Not `listFiles(recursive)`: that builds a
+    * `LocatedFileStatus` per file, and on the local filesystem each one
+    * loads its permissions by forking `ls -ld`.
+    */
+  def listRecursive(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path)
+      : Iterator[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(root).iterator.flatMap { st =>
+      if (st.isDirectory) listRecursive(fs, st.getPath) else Iterator.single(st)
+    }
 
   /** The Spark schema a parquet file's footer records under
     * `org.apache.spark.sql.parquet.row.metadata` (written by every Spark

@@ -77,12 +77,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // same 1-row stats crossJoin, probing the incrementally-maintained
     // index (append-merged postings — identical probe plan)
     "bm25_index_merge_topk",
-    // same 1-row stats crossJoin, probing after the postings compaction
-    // fold (identical probe plan over the re-laid bucket files)
-    "bm25_index_compact_topk",
-    // same 1-row stats crossJoin, on the versioned-manifest commit
-    // protocol (snapshot-resolved dirs; identical probe plan)
-    "bm25_index_manifest_topk",
     // 1-row vocabulary aggregate onto the bigram stream (as in
     // quality_lm_score) plus the ≤|langs|-row tercile-cutoff table
     "quality_ppl_buckets",

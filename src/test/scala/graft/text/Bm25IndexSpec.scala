@@ -150,6 +150,19 @@ class Bm25IndexSpec extends AnyFunSuite {
     assert(topk == InvertedIndex.probe(spark, scratch, terms).collect().map(_.toSeq).toSet)
   }
 
+  test("a registered compact probe returns rows that outlive the next invocation's vacuum") {
+    val q = graft.SparkEntry.queries("bm25_index_compact_topk")
+    val held = q(spark, sf)
+    val second = q(spark, sf).collect().toSet
+    val (idx, _) = InvertedIndex.sessionFoldedIndex(spark, sf)
+    // drops the first invocation's compaction dirs: the rewind dropped
+    // its generation, and no grace window shields them any more
+    graft.util.WorkLocks.sync(idx) {
+      ManifestCommit.vacuum(conf, idx, keepGens = 2, graceMs = 0L)
+    }
+    assert(held.collect().toSet == second && second.nonEmpty)
+  }
+
   test("appendDelta is exactly-once under a batch id, even after later folds") {
     import org.apache.spark.sql.functions._
     val docs = graft.util.Tables(spark, sf, "documents")

@@ -25,13 +25,14 @@ private object FoldGate {
 /** The BM25 inverted index on the versioned-manifest (object-store)
   * commit protocol: build / delta fold / compact / probe through the
   * public entry points, score-identical to a from-scratch build — with
-  * a fold landing one flat tail dir per table (postings, terms, stats)
-  * in ONE manifest publish, readers summing df and stats across tiers,
-  * and probes listing only the probed bucket dirs. The fold, racing,
-  * compaction and probe-construction cases run on a small generated
-  * corpus, so they need no external test data.
+  * a fold landing one flat tail dir per table (postings, stats) in ONE
+  * manifest publish, probes counting df over the postings of every tier
+  * and summing stats, and probes listing only the probed bucket dirs.
+  * The fold, racing, compaction and probe-construction cases run on a
+  * small generated corpus, so they need no external test data.
   */
-class Bm25ManifestSpec extends AnyFunSuite {
+class Bm25ManifestSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4, 2]")
@@ -73,7 +74,18 @@ class Bm25ManifestSpec extends AnyFunSuite {
     (rows(0).getLong(0), rows(0).getLong(1))
   }
 
-  private val tiered = Seq("postings", "terms", "stats")
+  private val tiered = Seq("postings", "stats")
+
+  private def bucketOf(term: String): Long =
+    spark.range(1).select(pmod(xxhash64(lit(term)), lit(InvertedIndex.NumBuckets.toLong)))
+      .head().getLong(0)
+
+  /** Every parquet scan root of a probe's physical plan. */
+  private def scanRoots(probe: org.apache.spark.sql.DataFrame): Seq[String] =
+    probe.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toUri.getPath)
+    }.flatten
 
   private def scores(dir: String): Set[(String, Long, Double, Int)] =
     InvertedIndex.probe(spark, dir, terms)
@@ -137,11 +149,13 @@ class Bm25ManifestSpec extends AnyFunSuite {
     val before = scores(dir)
     val m0 = ManifestCommit.current(conf, dir)
     // crash between lay and publish: fresh dirs exist, no manifest —
-    // probes must keep resolving the OLD snapshot (never a mix)
-    val orphanTerms = ManifestCommit.newDataDir(dir, ManifestTiered.tailTable("terms"))
+    // probes must keep resolving the OLD snapshot (never a mix). A
+    // leaked posting would move both tf and df of `join`.
+    val orphanPostings = ManifestCommit.newDataDir(dir, ManifestTiered.tailTable("postings"))
     spark.range(1)
-      .select(lit("join").as("term"), lit(999L).as("df"), lit(0L).as("bucket"))
-      .write.parquet(s"$dir/$orphanTerms")
+      .select(lit("join").as("term"), lit(100000L).as("doc_id"), lit(50).as("dl"),
+        lit(50L).as("tf"), lit(bucketOf("join")).as("bucket"))
+      .write.parquet(s"$dir/$orphanPostings")
     assert(scores(dir) == before, "unpublished table dirs leaked into a probe")
     assert(ManifestCommit.current(conf, dir).gen == m0.gen)
     InvertedIndex.appendDelta(docs.filter(col("doc_id") % 2 === 1), dir,
@@ -249,20 +263,61 @@ class Bm25ManifestSpec extends AnyFunSuite {
     }
     assert(!jobs, "building the probe started a Spark job")
     val m = ManifestCommit.current(conf, dir)
-    val buckets = probeTerms.map(t => spark.range(1)
-      .select(pmod(xxhash64(lit(t)), lit(InvertedIndex.NumBuckets.toLong)))
-      .head().getLong(0)).toSet
-    val roots = probe.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.relation.location.rootPaths.map(_.toUri.getPath)
-    }.flatten
-    Seq("postings", "terms").foreach { t =>
-      val base = new java.io.File(dir, m.table(t).head).getAbsolutePath
-      val underBase = roots.filter(_.startsWith(base))
-      assert(underBase.nonEmpty, s"no $t base scan in the probe plan")
-      assert(underBase.toSet == buckets.map(b => s"$base/bucket=$b"),
-        s"the $t base scan must read only the probed bucket dirs, got $underBase")
+    val buckets = probeTerms.map(bucketOf).toSet
+    val roots = scanRoots(probe)
+    val base = new java.io.File(dir, m.table("postings").head).getAbsolutePath
+    val underBase = roots.filter(_.startsWith(base))
+    assert(underBase.nonEmpty, "no postings base scan in the probe plan")
+    assert(underBase.toSet == buckets.map(b => s"$base/bucket=$b"),
+      s"the postings base scan must read only the probed bucket dirs, got $underBase")
+  }
+
+  test("a build and a fold publish no terms table, and a probe scans no terms dir") {
+    val docs = corpus(300)
+    val dir = tmp("bm25_noterms")
+    InvertedIndex.save(docs.filter(col("doc_id") < 200), dir)
+    InvertedIndex.appendDelta(docs.filter(col("doc_id") >= 200), dir, batchId = Some("f1"))
+    val m = ManifestCommit.current(conf, dir)
+    assert(!m.tables.keys.exists(_.startsWith("terms")),
+      s"a df table was published: ${m.tables.keys.toSeq.sorted}")
+    assert(!new java.io.File(dir, "data/terms").exists() &&
+      !new java.io.File(dir, "data/terms.tail").exists(), "a df table was laid")
+    val probe = InvertedIndex.probe(spark, dir, terms)
+    val roots = scanRoots(probe)
+    assert(roots.exists(_.contains("/data/postings")) &&
+      roots.forall(r => r.contains("/data/postings") || r.contains("/data/stats")),
+      s"the probe must scan only postings and stats dirs, got $roots")
+    // df and the top-k share the one postings exchange (on term)
+    assert(probe.collect().nonEmpty)
+    val termShuffles = collect(probe.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] => e
     }
+    assert(termShuffles.size == 1,
+      s"the probe must shuffle postings once, got ${termShuffles.size}:\n${probe.queryExecution.executedPlan}")
+  }
+
+  test("an index that still names a terms table probes like a from-scratch build") {
+    val docs = corpus(300)
+    val dir = tmp("bm25_oldterms")
+    InvertedIndex.save(docs.filter(col("doc_id") < 200), dir)
+    // the df tail an older build would have published, with a wrong df:
+    // a reader that still summed it would mis-score every `join` row
+    val stale = ManifestCommit.newDataDir(dir, ManifestTiered.tailTable("terms"))
+    spark.range(1)
+      .select(lit("join").as("term"), lit(999L).as("df"), lit(bucketOf("join")).as("bucket"))
+      .write.parquet(s"$dir/$stale")
+    ManifestCommit.publish(conf, dir, m =>
+      ManifestCommit.addDir(m, ManifestTiered.tailTable("terms"), stale, 1L))
+    InvertedIndex.appendDelta(docs.filter(col("doc_id") >= 200), dir, batchId = Some("f1"))
+    val scratch = tmp("bm25_oldterms_s")
+    InvertedIndex.save(docs, scratch)
+    assert(scores(dir) == scores(scratch), "a stale terms table changed the scores")
+    InvertedIndex.compact(spark, dir)
+    assert(scores(dir) == scores(scratch), "compaction over a stale terms table changed the scores")
+    assert(ManifestCommit.current(conf, dir).table(ManifestTiered.tailTable("terms")) == Seq(stale),
+      "folds and compactions must leave the stale terms entry as it is")
   }
 
   test("AS-OF probes score against a retained historical generation") {
