@@ -82,29 +82,48 @@ object Bench {
     outcome
   }
 
+  /** The queries the steady pass re-times: a fixed list, so two runs
+    * report steady medians for the same keys (a sweep-time cut lets
+    * noise pick the set). Listed: the iterative graph jobs and the
+    * stateful stream drains, whose medians drift across a long
+    * contiguous sweep (`stream_join` measured 3.1 s early against 7.6 s
+    * late on one binary), and the 30 queries slowest in the sf0.1 sweep
+    * of BENCH_SELF.json, where a contended box manufactures phantom
+    * round-over-round regressions. 32 names keep the compact line
+    * inside its budget.
+    */
+  private[graft] val SteadyQueries: Seq[String] = Seq(
+    "ann_bq_topk", "ann_ivfadc_topk", "ann_ivfpq_topk", "ann_opq_topk", "ann_pq_topk",
+    "dedup_clusters", "dedup_clusters_exact", "dedup_index_compact",
+    "dedup_index_manifest", "dedup_index_timetravel", "dedup_ngram_jaccard",
+    "dedup_simhash", "graph_hits", "graph_pagerank", "graph_pagerank_personalized",
+    "graph_pagerank_weighted", "image_dedup_clusters", "o9_grouped_topk",
+    "q21_sole_late_supplier", "quality_ppl_buckets", "source_overlap",
+    "stream_ann_index_maintenance", "stream_asof_enrich", "stream_curate",
+    "stream_dedup", "stream_dedup_index_maintenance", "stream_funnel", "stream_join",
+    "stream_left_join", "stream_static_enrich", "stream_warc_ingest", "stream_windows")
+
+  /** The steady set of one sweep: [[SteadyQueries]] less the queries
+    * the sweep saw fail. The sweep's timings play no part.
+    */
+  private[graft] def steadyOf(sweep: Seq[(String, Either[Throwable, Double])]): Seq[String] = {
+    val passed = sweep.collect { case (n, Right(_)) => n }.toSet
+    SteadyQueries.filter(passed)
+  }
+
   private def gcMs: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // reclaim per-iteration checkpoints (PageRank / CC run 3× each here)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+    val spark = graft.util.Sessions.local(appName = "graft-bench", conf = Map(
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // the streaming queries run back-to-back 3× each; a stopped query's
       // state store providers (full join/dedup state in memory) unload
       // only on the maintenance tick — at the 60s default, 9 consecutive
       // stateful lifecycles stack their state and the tail queries pay
       // the memory pressure
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "5s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "5s"))
     // warm the JVM/codegen/IO paths so the first timed query isn't
     // charged for session bring-up (~5-10s of JIT on a cold JVM)
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -141,32 +160,12 @@ object Bench {
     }
     val results = sweep.collect { case (n, Right(t)) => n -> t }
     val sweepFailed = sweep.collect { case (n, Left(_)) => n }
-    // isolated steady-state re-measurement for the environment-sensitive
-    // queries (iterative graph jobs: many short stages + checkpoint I/O —
-    // their graded medians have swung 4-6× round-over-round on identical
-    // binaries). Re-run each AFTER the full sweep with the barrier
-    // applied: if the graded median disagrees with its own steady number
-    // in the SAME JSON, the swing is self-evidently environmental, not a
-    // plan regression.
-    // the stateful stream drains join the graph trio: their state-store
-    // setup/maintenance timing drifts across a long contiguous sweep
-    // (r9: stream_join 3.1 s early-sweep vs 7.6 s late-sweep, same
-    // binary), and the steady number is the defensible one.
-    // PLUS every query whose sweep median crossed 1 s: the expensive
-    // tail is where a contended box manufactures phantom round-over-
-    // round regressions (r13's driver run read +15% sweep-wide on
-    // untouched queries), and a steady number in the SAME artifact is
-    // what proves a swing environmental vs real
-    // capped at the 30 slowest >1s queries (r17): on a contended box the
-    // whole registry can cross 1 s and an unbounded steady set both bloats
-    // the compact line below past its budget AND adds 50+ extra re-runs of
-    // wall time exactly when the box is already slow. Slowest-first keeps
-    // the queries whose steady number matters most.
-    val steadySet = (Seq("graph_pagerank", "graph_hits", "dedup_simhash",
-      "stream_join", "stream_windows") ++
-      results.filter(_._2 > 1.0).sortBy(-_._2).take(30).map(_._1))
-      .distinct.sorted
-      .filter(SparkEntry.queries.contains).filterNot(sweepFailed.contains)
+    // isolated steady-state re-measurement of a fixed set (see
+    // [[SteadyQueries]]), each re-run AFTER the full sweep with the
+    // barrier applied: a graded median that disagrees with its own
+    // steady number in the SAME JSON shows an environmental swing, not a
+    // plan regression
+    val steadySet = steadyOf(sweep)
     val steadyRuns = steadySet.map { name =>
       name -> timeQuery(spark, name, runs)(SparkEntry.queries(name)(spark, sfDir).count())
     }

@@ -4,7 +4,9 @@ import graft.QueryDef
 import graft.functions.GraftFunctions._
 import graft.util.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Near-duplicate detection for a training-data pipeline: MinHash+LSH,
   * SimHash, and n-gram Jaccard — all built from Catalyst expressions
@@ -914,11 +916,12 @@ object Dedup {
   /** `widths/` sidecar: per-bucket width + min-id anchor, maintained
     * INCREMENTALLY — the build writes one row per bucket, every append
     * adds a delta row per touched bucket, and readers fold
-    * (sum bw, min aid) over the TOUCHED partitions only. This is what
-    * lets the probe's degenerate-bucket cap run without the per-probe
-    * full-index groupBy the r11 design carried: over-cap detection costs
-    * O(touched buckets), not O(index), and compaction re-folds the
-    * deltas back to one row per bucket.
+    * (sum bw, min aid) over the TOUCHED partitions only, so a probe
+    * that does not read the colliding band rows itself (the shuffled
+    * probe of a wide batch) detects over-cap buckets in O(touched
+    * buckets), not with a whole-index aggregate. It always equals the
+    * fold of the band rows it summarizes: both lay and compact in one
+    * publish. Compaction re-folds the deltas back to one row per bucket.
     */
   private[graft] val WidthsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("bucket",
@@ -1083,24 +1086,26 @@ object Dedup {
     * the loser fails loudly (our commuting retry then re-runs this
     * check through the invariant).
     */
+  /** `alongside`: writes that must finish before the publish (a probe's
+    * hits) and run beside the lays.
+    */
   private[dedup] def appendAtManifest(sigs: DataFrame, bands: DataFrame,
                                       indexDir: String,
                                       m: ManifestCommit.Manifest,
                                       batchId: Option[String],
                                       commuting: Boolean,
-                                      expectMeta: String): Unit = {
+                                      expectMeta: String,
+                                      alongside: Seq[() => Unit] = Nil): Unit = {
     val spark = sigs.sparkSession
     val conf = spark.sessionState.newHadoopConf()
     // the three tail lays are independent reads of the persisted batch —
     // overlap their write jobs from driver threads (§2.6); the widths
     // and sigs lays ride the bands lay's wall-clock
+    def lay(table: String, rows: DataFrame) = () =>
+      Some(ManifestTiered.layDir(spark, indexDir, table, rows, partitionBy = Nil, sortKeys = Nil))
     val laid = graft.util.DriverPar.inParallel(spark.sparkContext)(Seq(
-      () => ManifestTiered.layDir(spark, indexDir, "bands.tail",
-        bands, partitionBy = Nil, sortKeys = Nil),
-      () => ManifestTiered.layDir(spark, indexDir, "widths.tail",
-        widthsOf(bands), partitionBy = Nil, sortKeys = Nil),
-      () => ManifestTiered.layDir(spark, indexDir, "sigs.tail",
-        sigs, partitionBy = Nil, sortKeys = Nil)))
+      lay("bands.tail", bands), lay("widths.tail", widthsOf(bands)), lay("sigs.tail", sigs)) ++
+      alongside.map(write => () => { write(); None })).flatten
     val update = (mm: ManifestCommit.Manifest) =>
       Seq("bands.tail", "widths.tail", "sigs.tail").zip(laid).foldLeft(mm) {
         case (acc, (t, e)) => ManifestCommit.addDir(acc, t, e.dir, e.rows)
@@ -1255,31 +1260,26 @@ object Dedup {
       expectMeta = minHashMeta(shingleW, perms, rowsPerBand))
   }
 
-  /** New-batch dedup probe against a saved index: candidates = band-bucket
-    * collisions (keyed join over the PRUNED partitions the batch touches,
-    * never a scan of the whole index), verified by the signature-agreement
-    * estimator. Returns (new_id, idx_id, est_jaccard) for pairs estimated
-    * ≥ `threshold`.
+  /** New-batch dedup probe against a saved index: candidates are
+    * band-bucket collisions with the index rows of the partitions the
+    * batch touches, verified by the signature-agreement estimator
+    * ([[probeWithBands]]). Returns (new_id, idx_id, est_jaccard) for
+    * pairs estimated ≥ `threshold`. The candidates are gathered when
+    * this is called; the returned frame reads their signatures lazily.
     *
-    * READ-ONLY: the probe resolves ONE manifest snapshot, so dirs a
-    * concurrent append or compaction has laid but not yet published
-    * are invisible to it, and bands and widths always come from the
-    * same tier state.
+    * READ-ONLY: the probe resolves ONE manifest snapshot — or, with
+    * `asOfGen`, a retained historical generation
+    * ([[graft.util.ManifestCommit.atGeneration]]) — so dirs a
+    * concurrent append or compaction has laid but not published are
+    * invisible to it, and every table comes from the same tier state.
     *
-    * The batch's signatures — the dominant per-batch CPU (tokenize →
-    * shingle → 64-bin OPH) — are computed ONCE via an eager
-    * localCheckpoint: both the touched-partition collect and the lazily
-    * returned candidate-join plan read the materialized blocks (a
-    * persist can't scope across the lazy result, and an unscoped one
-    * would leak a CacheManager entry per call in a 24/7 probing
-    * service; checkpoint blocks are reclaimed by the ContextCleaner
-    * when the result frame is garbage-collected). Cluster caveat: an
-    * executor loss invalidates a local checkpoint and fails the
-    * consuming job, which simply re-runs the read-only probe.
-    */
-  /** `asOfGen`: probe a RETAINED HISTORICAL generation instead of the
-    * current snapshot (ManifestCommit.atGeneration — audit reruns,
-    * A/B-ing a crawl's contribution).
+    * The batch's signatures are computed once, into an eager
+    * localCheckpoint that both the candidate collects and the lazy
+    * result read: a persist cannot be scoped across the lazy result,
+    * and checkpoint blocks are reclaimed by the ContextCleaner when the
+    * result frame is collected. An executor loss invalidates the
+    * checkpoint and fails the consuming job; the read-only probe is
+    * simply re-run.
     */
   def dedupAgainstMinHashIndex(newDocs: DataFrame, indexDir: String,
                                shingleW: Int = 5, perms: Int = 64,
@@ -1307,143 +1307,196 @@ object Dedup {
     * resolved snapshot behind a (table, schema, filter) shape, so
     * [[probeWithBands]] is snapshot-blind.
     */
-  private def manifestReader(spark: SparkSession, indexDir: String,
+  private[dedup] def manifestReader(spark: SparkSession, indexDir: String,
                              m: graft.util.ManifestCommit.Manifest)
       : (String, org.apache.spark.sql.types.StructType, Option[Column]) => DataFrame =
     (t, sch, f) => graft.util.ManifestTiered.read(spark, indexDir, m, t, sch, f)
 
-  /** The probe join itself, over a batch's precomputed (doc_id, sig)
-    * rows and the (doc_id, bucket, band, bmod) rows derived from them.
-    * Meta validation / recovery are the caller's responsibility.
-    *
-    * Scale shape: the batch's DISTINCT (band, bmod) set — bounded by
-    * nBands × MinHashBucketMods (≤64 at the defaults), a bounded
-    * driver collect — pushes as a static partition filter on BOTH the
-    * bands read and the widths read, so the probe scans only the index
-    * partitions the batch can collide with; a broadcast SEMI-join on
-    * the batch's (band, bucket) keys then drops non-colliding index
-    * rows inside the scan stage, so the scanned mass is never
-    * SHUFFLED. Over-cap anchors fold from the widths sidecar's
-    * touched, colliding rows (sum bw, min aid per bucket) instead of
-    * a full-index aggregate: per-batch probe cost follows the BATCH
-    * and its collisions, not the accumulated index. Only then are
-    * signatures attached — the index's for the candidate ids alone —
-    * so the band scan and the candidate join carry ids, never 64-long
-    * arrays.
-    */
-  /** Over this many (band, bucket) batch key ROWS the probe skips the
-    * broadcast semi-join and falls back to the shuffled candidate
-    * join: 16 M rows × two longs ≈ 256 MB broadcast payload — the
-    * ceiling a real executor fleet absorbs comfortably; a batch this
-    * wide (≥1 M docs in ONE maintenance step) is no longer a
-    * micro-batch and can afford the index-side shuffle it pays
-    * instead. Counted over the RAW (un-deduped) key frame — exactly
-    * what gets broadcast (the build-side dedup happens inside the
-    * HashedRelation).
+  /** Over this many batch band rows (each a (band, bucket) collision
+    * key of one document) the probe takes the shuffled path instead of
+    * collecting the keys and the candidates to the driver: 16 M keys ≈
+    * 256 MB of primitive arrays, the ceiling a driver and a broadcast
+    * absorb comfortably. A batch that wide (≥ 1 M documents in one
+    * maintenance step) can afford the index-side shuffle it pays
+    * instead.
     */
   private val MaxProbeBroadcastKeys = 16L * 1000 * 1000
 
-  private def probeWithBands(spark: SparkSession, batchSigs: DataFrame,
+  /** The probe itself, over a batch's precomputed (doc_id, sig) rows
+    * and the (doc_id, bucket, band, bmod) rows derived from them; both
+    * are persisted or checkpointed by the caller. Returns
+    * (new_id, idx_id, est_jaccard) for pairs estimated ≥ `threshold`.
+    * Meta validation is the caller's.
+    *
+    * A batch of at most `maxBroadcastKeys` band rows runs three
+    * collects and returns a lazy verification plan, so its cost follows
+    * the batch and its candidates, not the index depth or tier count:
+    *  1. one job counts the band rows (materializing the batch);
+    *  2. one job gathers the collision keys. They ship to tasks as ONE
+    *     broadcast that every `bands` tier filters against inside its
+    *     scan, and the batch's (band, bmod) set ([[bandFilter]]) prunes
+    *     the partitioned base statically and the flat tiers by footer
+    *     stats;
+    *  3. one job collects the colliding band rows, counted per bucket
+    *     ([[bucketRows]]). A bucket over [[SimHashMaxBucket]] rows pairs
+    *     only through its min-id anchor, the index-side analogue of
+    *     [[bucketCapSplit]], so a bucket of thousands of boilerplate
+    *     twins yields one witness, not |new| × |bucket| pairs; the
+    *     driver pairs the rest with the batch documents sharing their
+    *     key. (A twin in a bucket gone wide on a shared prefix is then
+    *     found through its other bands' under-cap buckets: a miss needs
+    *     every shared band over the cap and the anchor dissimilar.)
+    *     These are the counts and anchors the `widths` sidecar holds,
+    *     taken from the rows the probe reads anyway, so this path reads
+    *     no `widths` file.
+    * The returned plan reads `sigs` only for the candidate ids, through
+    * an [[inIds]] predicate: row-group and page skipping over the
+    * doc_id-sorted files, and no generated class per batch.
+    *
+    * A wider batch plans the same rules as one shuffled query: the
+    * batch's keys join the index rows, the over-cap anchors fold from
+    * the `widths` sidecar (no whole-index aggregate), and `sigs` is
+    * read whole.
+    */
+  private[dedup] def probeWithBands(spark: SparkSession, batchSigs: DataFrame,
+                                    bandedBatch: DataFrame,
+                                    readIdx: (String, org.apache.spark.sql.types.StructType,
+                                      Option[Column]) => DataFrame,
+                                    perms: Int,
+                                    threshold: Double,
+                                    nBands: Int,
+                                    maxBroadcastKeys: Long = MaxProbeBroadcastKeys)
+      : DataFrame = {
+    val nKeys = bandedBatch.queryExecution.toRdd.count()
+    if (nKeys == 0L) emptyHits(spark)
+    else if (nKeys > maxBroadcastKeys)
+      shuffledProbe(batchSigs, bandedBatch, readIdx, perms, threshold, nBands)
+    else collectedProbe(spark, batchSigs, bandedBatch, readIdx, perms, threshold, nBands)
+  }
+
+  private def emptyHits(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ProbeHitSchema)
+
+  /** The static (band, bmod) filter for a batch touching `touched`
+    * (band × [[MinHashBucketMods]] + bmod) pairs: the pair expression
+    * prunes the partitioned base's dirs exactly, and the direct
+    * band/bmod `isin` conjuncts are what parquet pushes to the flat
+    * runs' and tail's footer stats. A batch touching every pair gets
+    * none: it would prune nothing, and its literals would make each
+    * batch's plan a new generated class.
+    */
+  private def bandFilter(touched: Seq[Long], nBands: Int): Option[Column] =
+    if (touched.size >= nBands.toLong * MinHashBucketMods) None
+    else Some(
+      col("band").isin(touched.map(p => (p / MinHashBucketMods).toInt).distinct: _*) &&
+        col("bmod").isin(touched.map(p => (p % MinHashBucketMods).toInt).distinct: _*) &&
+        (col("band").cast("long") * MinHashBucketMods + col("bmod")).isin(touched: _*))
+
+  private def collectedProbe(spark: SparkSession, batchSigs: DataFrame,
                              bandedBatch: DataFrame,
                              readIdx: (String, org.apache.spark.sql.types.StructType,
                                Option[Column]) => DataFrame,
-                             perms: Int,
-                             threshold: Double,
-                             nBands: Int): DataFrame = {
-    // ONE bounded job serves both driver artifacts: the touched
-    // (band, bmod) partition set (≤ nBands × MinHashBucketMods values)
-    // and the distinct collision-key count that gates the broadcast
-    // semi-join below — two separate jobs were pure scheduling floor
-    // on the per-probe constant
-    val batchStats = bandedBatch.agg(
-      collect_set(col("band").cast("long") * MinHashBucketMods + col("bmod"))
-        .as("pks"),
-      // a plain row count, NOT countDistinct(band, bucket): the gate
-      // below sizes the BROADCAST PAYLOAD, which is the un-deduped key
-      // frame — and countDistinct planned an Expand + distinct
-      // aggregation inside this job, a per-probe constant the drain
-      // pays per micro-batch
-      count(lit(1)).as("nk")).collect()(0)
-    val touched = batchStats.getSeq[Long](0)
-    val nKeys = batchStats.getLong(1)
-    if (touched.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ProbeHitSchema)
-    // exact pair pruning PLUS the per-column envelopes: the pair
-    // expression prunes the partitioned base's dirs precisely, but
-    // parquet can only push DIRECT column predicates to row-group
-    // stats — the band/bmod isin conjuncts are what let the flat
-    // (band, bmod, bucket)-sorted level-1 runs and tail skip row
-    // groups instead of being scanned whole per probe.
-    // FULL-COVERAGE batches (every (band, bmod) pair touched — any
-    // maintenance-scale batch hits all nBands × MinHashBucketMods pairs)
-    // skip the filter outright: it prunes nothing, its literals
-    // are evaluated against every index row, and — the expensive part
-    // — the literal set varies per batch, so every micro-batch probe
-    // planned a UNIQUE stage and paid a fresh whole-stage-codegen
-    // compile where a literal-free plan hits the codegen cache across
-    // the whole drain
-    val partFilter =
-      if (touched.size >= nBands.toLong * MinHashBucketMods) None
-      else Some(
-        col("band").isin(touched.map(p => (p / MinHashBucketMods).toInt).distinct: _*) &&
-          col("bmod").isin(touched.map(p => (p % MinHashBucketMods).toInt).distinct: _*) &&
-          (col("band").cast("long") * MinHashBucketMods + col("bmod")).isin(touched: _*))
-    // The batch's distinct collision keys, broadcast-SEMI-joined
-    // against both index-side reads BEFORE any exchange: index rows
-    // whose (band, bucket) no batch row carries can never produce a
-    // candidate, so they are dropped inside the scan stage and the
-    // index's mass is scanned (partition-pruned files) but never
-    // SHUFFLED. Without this the candidate join planned as a
-    // sort-merge (the checkpointed batch carries no size stats, so no
-    // auto-broadcast) and shuffled the whole touched index per probe —
-    // measured 8.9 GB of shuffle for a ~700-doc probe against a
-    // 9.6 M-row index, growing linearly with index depth; with it the
-    // probe's shuffle follows the BATCH and its collisions. The keys
-    // frame is |batch| × nBands two-long rows, its count folded into
-    // the batch-stats job above, and broadcast only under
-    // [[MaxProbeBroadcastKeys]]. Deliberately NOT .distinct()'d: the
-    // broadcast HashedRelation dedups keys as it builds, so a semi
-    // join against duplicate build keys is row-identical — while the
-    // distinct added a full shuffle of the key frame to every probe
-    // (another fixed per-micro-batch cost in the streaming drain), and
-    // near-dup-free batches (the normal case) barely shrink under it
-    val keysDf = bandedBatch.select(col("band"), col("bucket"))
-    val semiKeys =
-      if (nKeys <= MaxProbeBroadcastKeys) Some(broadcast(keysDf))
-      else None
-    def collidable(df: DataFrame): DataFrame =
-      semiKeys.map(k => df.join(k, Seq("band", "bucket"), "left_semi")).getOrElse(df)
-    val idx0 = collidable(
-      readIdx("bands", BandsSchema, partFilter))
-      .select(col("band"), col("bucket"), col("doc_id").as("idx_id"))
-    // Degenerate-bucket cap on the INDEX side (the probe-join analogue
-    // of bucketCapSplit): a bucket holding a mass of near-identical
-    // docs — thousands of boilerplate twins accumulated across crawls —
-    // would make this join emit |new∩bucket| × |idx∩bucket| pairs, the
-    // quadratic blow-up the batch self-join solves with the min-id
-    // star. Each over-cap index bucket keeps ONLY its min-id row
-    // as the collision witness: a new doc landing in a degenerate
-    // bucket still gets a candidate pair (vs the anchor) which still
-    // passes signature verification whenever the bucket is degenerate
-    // for the usual reason — a mass of near-identical members. Benign
-    // 64-bit-hash collisions stay far under the cap (measured ≤179 at
-    // sf0.1; same constant as SimHashMaxBucket's reasoning). Recall
-    // caveat (same one bucketCapSplit's star accepts): if a bucket
-    // goes wide on a shared PREFIX while bodies differ, a twin hiding
-    // in it is found only via its OTHER bands' under-cap buckets —
-    // a miss needs every shared band over-cap AND the anchor
-    // dissimilar, the multi-band redundancy LSH already relies on.
-    // widths rows for NON-colliding buckets can't gate any candidate —
-    // the same semi-join turns the sidecar fold from O(touched widths)
-    // into O(batch collisions) before its aggregation shuffles
-    val overCap = collidable(
-      readIdx("widths", WidthsSchema, partFilter))
+                             perms: Int, threshold: Double, nBands: Int): DataFrame = {
+    val sc = spark.sparkContext
+    val parts = bandedBatch.select(col("band"), col("bmod"), col("bucket"), col("doc_id"))
+      .mapPartitions { rows =>
+        val (b, m) = (Array.newBuilder[Int], Array.newBuilder[Int])
+        val (k, d) = (Array.newBuilder[Long], Array.newBuilder[Long])
+        rows.foreach { r => b += r.getInt(0); m += r.getInt(1); k += r.getLong(2); d += r.getLong(3) }
+        Iterator((b.result(), m.result(), k.result(), d.result()))
+      }(KeyColumnsEncoder).collect()
+    val bands = parts.flatMap(_._1)
+    val bmods = parts.flatMap(_._2)
+    val buckets = parts.flatMap(_._3)
+    val docs = parts.flatMap(_._4)
+    // per band: bucket → the batch documents carrying it
+    val keys = (0 until nBands).map { band =>
+      val at = bands.indices.filter(bands(_) == band)
+      LongMultiMap(at.map(buckets).toArray, at.map(docs).toArray)
+    }.toArray
+    val touched = bands.indices.map(i => bands(i).toLong * MinHashBucketMods + bmods(i)).distinct
+    val partFilter = bandFilter(touched, nBands)
+    val shipped = sc.broadcast(keys)
+    val collides = udf((band: Int, bucket: Long) => shipped.value(band).contains(bucket))
+    val pairs = readIdx("bands", BandsSchema, partFilter)
+      .filter(collides(col("band"), col("bucket")))
+      .select(col("band"), col("bucket"), col("doc_id"))
+      .mapPartitions(bucketRows)(BucketRowsEncoder).collect()
+      .groupBy(r => (r._1, r._2)).toSeq
+      .flatMap { case ((band, bucket), perPart) =>
+        val ids =
+          if (perPart.map(_._3.toLong).sum > SimHashMaxBucket) Seq(perPart.map(_._4).min)
+          else perPart.flatMap(_._5).toSeq
+        for (idx <- ids; doc <- keys(band).get(bucket)) yield doc -> idx
+      }
+      .distinct.toArray
+    shipped.unpersist(blocking = false)
+    if (pairs.isEmpty) return emptyHits(spark)
+    val byIdx = sc.broadcast(LongMultiMap(pairs.map(_._2), pairs.map(_._1)))
+    val newIdsOf = udf((id: Long) => byIdx.value.get(id))
+    verified(
+      readIdx("sigs", SigsSchema, Some(inIds("doc_id", pairs.map(_._2))))
+        .select(col("doc_id").as("idx_id"), col("sig").as("idx_sig"),
+          explode(newIdsOf(col("doc_id"))).as("new_id")),
+      batchSigs.filter(inIds("doc_id", pairs.map(_._1))), perms, threshold)
+  }
+
+  // encoders of the two driver collects, derived once (each derivation
+  // reflects over the type: milliseconds per probe otherwise)
+  private lazy val KeyColumnsEncoder =
+    org.apache.spark.sql.Encoders.product[(Array[Int], Array[Int], Array[Long], Array[Long])]
+  private lazy val BucketRowsEncoder =
+    org.apache.spark.sql.Encoders.product[(Int, Long, Int, Long, Array[Long])]
+
+  /** One partition's colliding band rows (band, bucket, doc_id) as one
+    * (band, bucket, rows, min id, ids) row per bucket, the ids dropped
+    * once the bucket passes [[SimHashMaxBucket]] here: it is then over
+    * the cap in the index too, where only its min-id anchor may pair
+    * (the index-wide min is some partition's min). A bucket of
+    * thousands of boilerplate twins thus ships one witness, not
+    * |bucket| ids.
+    */
+  private def bucketRows(rows: Iterator[org.apache.spark.sql.Row])
+      : Iterator[(Int, Long, Int, Long, Array[Long])] = {
+    final class Bucket { var n = 0; var min = Long.MaxValue; val ids = Array.newBuilder[Long] }
+    val buckets = scala.collection.mutable.HashMap.empty[(Int, Long), Bucket]
+    rows.foreach { r =>
+      val b = buckets.getOrElseUpdate((r.getInt(0), r.getLong(1)), new Bucket)
+      val id = r.getLong(2)
+      b.n += 1
+      b.min = math.min(b.min, id)
+      if (b.n <= SimHashMaxBucket) b.ids += id
+    }
+    buckets.iterator.map { case ((band, bucket), b) =>
+      (band, bucket, b.n, b.min, if (b.n > SimHashMaxBucket) Array.empty[Long] else b.ids.result())
+    }
+  }
+
+  /** `c IN ids` as an `InSet` at any set size: parquet pushes it as an
+    * `in` filter (row-group and page skipping on sorted files), and code
+    * generation keeps the set as a reference object, not inlined
+    * literals.
+    */
+  private def inIds(c: String, ids: Array[Long]): Column =
+    Bridge.column(InSet(Bridge.expression(col(c)), ids.toSet[Any]))
+
+  private def shuffledProbe(batchSigs: DataFrame, bandedBatch: DataFrame,
+                            readIdx: (String, org.apache.spark.sql.types.StructType,
+                              Option[Column]) => DataFrame,
+                            perms: Int, threshold: Double, nBands: Int): DataFrame = {
+    val touched = bandedBatch
+      .agg(collect_set(col("band").cast("long") * MinHashBucketMods + col("bmod")))
+      .collect()(0).getSeq[Long](0)
+    val partFilter = bandFilter(touched, nBands)
+    val overCap = readIdx("widths", WidthsSchema, partFilter)
       .groupBy(col("band"), col("bucket"))
       .agg(sum(col("bw")).as("bw"), min(col("aid")).as("aid"))
       .filter(col("bw") > SimHashMaxBucket)
       .select(col("band"), col("bucket"), col("aid"))
-    val idx = idx0.join(overCap, Seq("band", "bucket"), "left")
+    val idx = readIdx("bands", BandsSchema, partFilter)
+      .select(col("band"), col("bucket"), col("doc_id").as("idx_id"))
+      .join(overCap, Seq("band", "bucket"), "left")
       .filter(col("aid").isNull || col("idx_id") === col("aid"))
       .drop("aid")
     val cand = bandedBatch
@@ -1451,42 +1504,82 @@ object Dedup {
       .join(idx, Seq("band", "bucket"))
       .select(col("new_id"), col("idx_id"))
       .dropDuplicates("new_id", "idx_id")
-    // verification reads signatures for the candidates only: the
-    // candidate frame (two longs per pair) is the broadcast build side
-    // of the join with the sigs scan, so index signatures are never
-    // shuffled (same size gate as the key broadcast above)
-    readIdx("sigs", SigsSchema, None)
-      .select(col("doc_id").as("idx_id"), col("sig").as("idx_sig"))
-      .join(if (semiKeys.isDefined) broadcast(cand) else cand, "idx_id")
-      .join(batchSigs.select(col("doc_id").as("new_id"), col("sig").as("new_sig")),
+    verified(
+      readIdx("sigs", SigsSchema, None)
+        .select(col("doc_id").as("idx_id"), col("sig").as("idx_sig"))
+        .join(cand, "idx_id"),
+      batchSigs, perms, threshold)
+  }
+
+  /** (new_id, idx_id, est_jaccard ≥ threshold) from candidate rows
+    * carrying (new_id, idx_id, idx_sig) and the batch's signatures.
+    */
+  private def verified(cand: DataFrame, batchSigs: DataFrame, perms: Int,
+                       threshold: Double): DataFrame =
+    cand.join(batchSigs.select(col("doc_id").as("new_id"), col("sig").as("new_sig")),
         "new_id")
       .withColumn("est_jaccard",
         expr(s"size(filter(zip_with(new_sig, idx_sig, (x, y) -> x = y), v -> v))" +
           s" / CAST($perms AS DOUBLE)"))
       .filter(col("est_jaccard") >= threshold)
       .select(col("new_id"), col("idx_id"), round(col("est_jaccard"), 6).as("est_jaccard"))
+
+  /** A long → long multimap in two primitive arrays sorted by key —
+    * the batch's per-band collision keys shipped to tasks and the
+    * candidate pairs by index id, at 16 bytes an entry.
+    */
+  private[dedup] final class LongMultiMap(keys: Array[Long], vals: Array[Long])
+      extends Serializable {
+    private def first(k: Long): Int = {
+      var (lo, hi) = (0, keys.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (keys(mid) < k) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    def contains(k: Long): Boolean = {
+      val i = first(k)
+      i < keys.length && keys(i) == k
+    }
+    def get(k: Long): Array[Long] = {
+      val i = first(k)
+      var j = i
+      while (j < keys.length && keys(j) == k) j += 1
+      java.util.Arrays.copyOfRange(vals, i, j)
+    }
   }
 
-  /** Probe-then-append in one maintenance step — the per-crawl (and
-    * streaming foreachBatch) cadence: the batch's signatures/bands are
-    * computed ONCE and serve both sides (they are the dominant
-    * per-batch CPU — tokenize → shingle → 64-bin OPH — and computing
-    * them twice doubled the drain's cost). Hits land in `hitsOut`
-    * BEFORE the index mutates, so the probe always reflects the
-    * pre-batch index state.
+  private[dedup] object LongMultiMap {
+    def apply(keys: Array[Long], vals: Array[Long]): LongMultiMap = {
+      val order = keys.indices.sortBy(keys(_))
+      new LongMultiMap(order.map(keys).toArray, order.map(vals).toArray)
+    }
+  }
+
+  /** Probe-then-append in one maintenance step, the per-crawl and
+    * streaming foreachBatch cadence. The batch's signatures are
+    * computed once and persisted for both sides; a batch then runs a
+    * fixed sequence of Spark jobs, whatever the index depth or tier
+    * count (9 for a 250-document batch against a base and two tails):
+    * the probe's three collects ([[probeWithBands]]: band-row count,
+    * collision keys, colliding band rows), then the hits write (the
+    * candidates' signatures joined to the batch's) beside the three
+    * tail lays, then one publish. Hits land in `hitsOut` before the
+    * publish, so they always reflect the pre-batch index.
     *
     * Exactly-once with a `batchId` (Spark's micro-batch retry is
     * at-least-once): hits write to `$hitsOut/batch_id=<id>` with
-    * OVERWRITE (a replay rewrites the same partition, never duplicates
-    * rows), the index append rides one manifest publish carrying the
+    * OVERWRITE (a replay rewrites the same partition), the append
+    * publishes against the snapshot the probe read and carries the
     * batch id, and a batch already committed in the resolved snapshot
-    * is a complete no-op. A crashed publish leaves only unreferenced
-    * dirs (vacuum garbage) and the re-driven batch recomputes against
-    * the unchanged index. Without a batchId the append is
-    * crash-ATOMIC but a re-driven call double-appends; callers with
-    * retry semantics must pass one. Batch-less hits still land under a
-    * GENERATED `batch_id=adhoc-*` partition so one hitsOut dir never
-    * mixes flat and partitioned layouts (a Spark read-time error).
+    * is a no-op. A crashed publish leaves only unreferenced dirs
+    * (vacuum garbage), and the re-driven batch recomputes against the
+    * unchanged index. Without a batchId the append is crash-atomic but
+    * a re-driven call appends twice; callers with retry semantics pass
+    * one. Batch-less hits land under a generated `batch_id=adhoc-*`
+    * partition, so one hitsOut dir never mixes flat and partitioned
+    * layouts (a Spark read-time error).
     */
   def probeAndAppendMinHashIndex(newDocs: DataFrame, indexDir: String,
                                  hitsOut: String, shingleW: Int = 5,
@@ -1513,16 +1606,17 @@ object Dedup {
           manifestReader(spark, indexDir, m), perms, threshold,
           nBands = perms / rowsPerBand)
         val bid = hitsBid
-        hits.write.mode("overwrite").parquet(s"$hitsOut/batch_id=$bid")
-        // the append publishes against the SAME snapshot the probe
-        // read — the CAS fails loudly if anything landed in between.
+        // the hits write runs beside the tail lays and lands before the
+        // publish; the append publishes against the SAME snapshot the
+        // probe read — the CAS fails loudly if anything landed in between.
         // On a lost race, a batch-ID'd retry overwrites its own hits
         // partition, but an ADHOC (generated-id) retry would write a
         // SECOND partition and double-count the log — drop this
         // attempt's hits before rethrowing
         try appendAtManifest(sigs, banded, indexDir, m, batchId,
           commuting = false,
-          expectMeta = minHashMeta(shingleW, perms, rowsPerBand))
+          expectMeta = minHashMeta(shingleW, perms, rowsPerBand),
+          alongside = Seq(() => hits.write.mode("overwrite").parquet(s"$hitsOut/batch_id=$bid")))
         catch {
           case e: IllegalStateException if batchId.isEmpty =>
             val p = new org.apache.hadoop.fs.Path(s"$hitsOut/batch_id=$bid")

@@ -706,15 +706,14 @@ object ManifestCommit {
                 partitions: Option[Seq[String]] = None): DataFrame = {
     val dirs = m.table(table).map(d => s"$indexDir/$d")
     val scans = partitions match {
-      case None => dirs.map(spark.read.schema(schema).parquet(_))
+      case None => dirs.map(d => scanOf(spark, schema, Seq(d)))
       case Some(ps) =>
         val f = fs(spark.sessionState.newHadoopConf(), indexDir)
         dirs.flatMap { root =>
           val present = ps.distinct.map(p => s"$root/$p")
             .filter(p => f.exists(new Path(p)))
           if (present.isEmpty) None
-          else Some(spark.read.schema(schema).option("basePath", root)
-            .parquet(present: _*))
+          else Some(scanOf(spark, schema, present, basePath = Some(root)))
         }
     }
     // an empty table is a LOCAL empty relation, which the optimizer
@@ -725,6 +724,32 @@ object ManifestCommit {
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     else scans.reduce(_.unionByName(_))
   }
+
+  /** One parquet scan over published data dirs, resolved once per
+    * session and then reused: a published dir never changes, so its
+    * listing cannot go stale, and resolving a partitioned dir (listing
+    * its subdirs, inferring their values) was most of a probe's
+    * planning time.
+    */
+  private[util] def scanOf(spark: SparkSession, schema: StructType, paths: Seq[String],
+                           basePath: Option[String] = None): DataFrame = {
+    val key = (spark, schema, paths, basePath)
+    Option(resolvedScans.get(key)).getOrElse {
+      val reader = spark.read.schema(schema)
+      val scan = basePath.fold(reader)(reader.option("basePath", _)).parquet(paths: _*)
+      resolvedScans.put(key, scan)
+      scan
+    }
+  }
+
+  private type ScanKey = (SparkSession, StructType, Seq[String], Option[String])
+
+  /** [[scanOf]]'s resolved scans, the least recently used dropped first. */
+  private val resolvedScans = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[ScanKey, DataFrame](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[ScanKey, DataFrame]): Boolean =
+        size() > 512
+    })
 
   /** Garbage-collect: delete data dirs referenced by NO manifest in
     * the newest `keepGens` generations (crashed writers' orphans and

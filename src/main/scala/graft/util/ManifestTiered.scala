@@ -40,19 +40,23 @@ object ManifestTiered {
   def tailTable(name: String): String = s"$name.tail"
 
   /** Base ∪ runs ∪ tail of one tiered table, pinned to the caller's
-    * snapshot. The optional filter prunes the (partitioned) base
-    * statically and the flat runs/tail via parquet footer stats —
-    * callers must keep it to direct column predicates for the latter
-    * to engage. `partitions` limits the BASE to those partition subdirs
-    * ([[ManifestCommit.readTable]]); runs and tail are flat.
+    * snapshot, as at most two relations: the base, and every flat run
+    * and tail dir read as ONE relation (one plan node to analyze and
+    * one scan to filter, however many appends the tail holds). The
+    * optional filter prunes the (partitioned) base statically and the
+    * flat dirs via parquet footer stats — callers must keep it to
+    * direct column predicates for the latter to engage. `partitions`
+    * limits the BASE to those partition subdirs
+    * ([[ManifestCommit.readTable]]).
     */
   def read(spark: SparkSession, indexDir: String, m: Manifest, name: String,
            schema: StructType, filter: Option[Column] = None,
            partitions: Option[Seq[String]] = None): DataFrame = {
     def f(df: DataFrame) = filter.map(df.filter).getOrElse(df)
-    f(ManifestCommit.readTable(spark, indexDir, m, name, schema, partitions))
-      .unionByName(f(ManifestCommit.readTable(spark, indexDir, m, l1Table(name), schema)))
-      .unionByName(f(ManifestCommit.readTable(spark, indexDir, m, tailTable(name), schema)))
+    val base = f(ManifestCommit.readTable(spark, indexDir, m, name, schema, partitions))
+    val flat = (m.table(l1Table(name)) ++ m.table(tailTable(name))).map(d => s"$indexDir/$d")
+    if (flat.isEmpty) base
+    else base.unionByName(f(ManifestCommit.scanOf(spark, schema, flat)))
   }
 
   /** Rows of the tail only (what a Minor fold rewrites). */

@@ -18,8 +18,12 @@ object Sessions {
     */
   private val CodegenCacheEntries = 800
 
+  /** The shared session; `conf` adds or overrides settings for one
+    * entry point (`graft.Bench`'s state-store cadence, say).
+    */
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
-            appName: String = "graft"): SparkSession = {
+            appName: String = "graft",
+            conf: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -33,6 +37,7 @@ object Sessions {
       // generated-class cache: JVM-global and sized once, by the first
       // session that generates code
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

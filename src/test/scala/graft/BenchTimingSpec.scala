@@ -55,4 +55,22 @@ class BenchTimingSpec extends AnyFunSuite {
     try assert(Bench.unpersistable(Seq(plain, local)).toSeq == Seq(plain))
     finally plain.unpersist()
   }
+
+  test("the steady set is a fixed list that sweep timings cannot change") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(Bench.SteadyQueries.forall(SparkEntry.queries.contains),
+      Bench.SteadyQueries.filterNot(SparkEntry.queries.contains))
+    // one sweep where every query ran fast, one where every query ran slow
+    val rng = new scala.util.Random(7)
+    def sweep(lo: Double) = names.map(n => n -> (Right(lo + rng.nextDouble()): Either[Throwable, Double]))
+    val fast = Bench.steadyOf(sweep(0.0))
+    assert(fast == Bench.SteadyQueries)
+    assert(Bench.steadyOf(sweep(5.0)) == fast)
+    // a query the sweep saw fail gets no steady run
+    val failed = sweep(0.0).map {
+      case ("graph_hits", _) => "graph_hits" -> Left(new IllegalStateException("boom"))
+      case other => other
+    }
+    assert(Bench.steadyOf(failed) == fast.filterNot(_ == "graph_hits"))
+  }
 }

@@ -57,6 +57,12 @@ class MinHashGeneratedSpec extends AnyFunSuite {
       dupsOf(9200L, crawlC.take(70), 10) ++ dupsOf(9300L, crawlD.take(300), 10) ++
       fresh(9400 until 9420) :+ ((9999L, boiler))
 
+  /** Documents in the shallower index of the depth test: two pages of
+    * doc_id values in its `sigs` file (parquet closes a page at 20,000
+    * rows), so the deeper one has four.
+    */
+  private val SigsDepth = 40000
+
   private def df(docs: Seq[Doc]): DataFrame =
     spark.createDataFrame(docs).toDF("doc_id", "text")
 
@@ -166,6 +172,61 @@ class MinHashGeneratedSpec extends AnyFunSuite {
 
     assert(hitSet(Dedup.dedupAgainstMinHashIndex(df(probes), dir, asOfGen = Some(built))) ==
       bruteForce(probes, crawlA), "AS-OF probe of the built generation differs")
+  }
+
+  test("above the broadcast gate the shuffled probe finds the same hits") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = java.nio.file.Files.createTempDirectory("mh_gen_gate").toString
+    Dedup.saveMinHashIndex(df(crawlA), dir)
+    Dedup.appendMinHashIndex(df(crawlB), dir, batchId = Some("b"))
+    val m = ManifestCommit.current(conf, dir)
+    val (sigs, bands) = Dedup.bandedSignaturesDev(df(probes))
+    def probe(gate: Option[Long]) = {
+      val read = Dedup.manifestReader(spark, dir, m)
+      gate.fold(Dedup.probeWithBands(spark, sigs, bands, read, 64, 0.5, 16))(g =>
+        Dedup.probeWithBands(spark, sigs, bands, read, 64, 0.5, 16, maxBroadcastKeys = g))
+    }
+    val collected = probe(None)
+    val shuffled = probe(Some(0L))
+    val want = bruteForce(probes, crawlA ++ crawlB)
+    assert(hitSet(collected) == want)
+    assert(hitSet(shuffled) == want)
+    // the shuffled plan joins the band rows lazily; the collected one
+    // has already gathered its candidates and reads only signatures
+    def readsBands(h: DataFrame) = h.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.toString.contains("data/bands")) => f
+    }.nonEmpty
+    assert(readsBands(shuffled) && !readsBands(collected))
+  }
+
+  test("the signature bytes a probe reads stay flat when the index is twice as deep") {
+    val words = new java.util.Random(20261021L)
+    def corpus(ids: Range): Seq[Doc] =
+      ids.map(i => (i.toLong, Vector.fill(8)(s"v${words.nextInt(5000)}").mkString(" ")))
+    val deep = corpus(0 until 2 * SigsDepth)
+    val shallow = deep.take(SigsDepth)
+    // copies of a few indexed documents: candidates with neighbouring ids
+    val batch = df(shallow.slice(100, 110).map { case (i, t) => (i + 1000000L, t) })
+    /** (sigs bytes on disk, sigs bytes the probe read, hits) */
+    def probed(indexed: Seq[Doc]): (Long, Long, Set[(Long, Long, Double)]) = {
+      val dir = java.nio.file.Files.createTempDirectory("mh_gen_deep").toString
+      Dedup.saveMinHashIndex(df(indexed), dir)
+      val hits = Dedup.dedupAgainstMinHashIndex(batch, dir)
+      // the lazy result's only file scan is the `sigs` read
+      val (rows, jobs) = graft.util.JobGroups.jobsOf(spark)(hitSet(hits))
+      val stored = parquetFiles(java.nio.file.Paths.get(dir, "data", "sigs"))
+        .map(java.nio.file.Files.size).sum
+      (stored, jobs.map(_.inputBytes).sum, rows)
+    }
+    val (shallowStored, shallowRead, shallowHits) = probed(shallow)
+    val (deepStored, deepRead, deepHits) = probed(deep)
+    assert(shallowHits == deepHits && shallowHits.size >= 10)
+    // a whole-table read would double; the page-skipping read grows only
+    // by the deeper file's page index
+    assert(shallowRead < shallowStored / 100,
+      s"read $shallowRead of $shallowStored sigs bytes")
+    assert(deepRead - shallowRead < (deepStored - shallowStored) / 100,
+      s"sigs bytes read grew $shallowRead -> $deepRead for ${deepStored - shallowStored} more stored")
   }
 
   test("an index without the layout line is refused by every entry point") {

@@ -143,18 +143,16 @@ class MinHashIndexSpec extends AnyFunSuite {
   test("probe prunes to the batch's touched (band, bmod) partitions and scans bands ONCE") {
     // bands is read without signatures; sigs is read once, for verification
     assume(sf.isDefined)
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val corpus = graft.util.Tables(spark, sf.get, "documents")
     val dir = java.nio.file.Files.createTempDirectory("mhidx_pr").toString
     Dedup.saveMinHashIndex(corpus, dir)
-    val probe = Dedup.dedupAgainstMinHashIndex(
-      corpus.filter(col("doc_id") < 2), dir)
+    val (probe, scans) = ProbeScans.of(spark, dir) {
+      Dedup.dedupAgainstMinHashIndex(corpus.filter(col("doc_id") < 2), dir)
+    }
 
     // manifest data dirs: data/bands/d-*/band=... and data/widths/d-*/...
-    def scansOf(sub: String) = probe.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.exists(_.toString.contains(sub)) => f
-    }
+    def scansOf(sub: String) =
+      scans.filter(_.relation.location.rootPaths.exists(_.toString.contains(sub)))
     // the r11 design scanned bands TWICE per probe (candidate join +
     // a full-index over-cap groupBy); the widths sidecar removes the
     // second scan entirely

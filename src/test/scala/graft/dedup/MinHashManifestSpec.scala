@@ -105,9 +105,38 @@ class MinHashManifestSpec extends AnyFunSuite {
     assert(before.nonEmpty)
   }
 
+  test("a probe-and-append over a base and two tails runs in at most 10 Spark jobs, " +
+      "none of them a per-tier key broadcast") {
+    val rng = new java.util.Random(20261020L)
+    val texts = (0L until 1000L)
+      .map(i => i -> Seq.fill(50)(s"w${rng.nextInt(3000)}").mkString(" ")).toMap
+    def docs(ids: Seq[Long], shift: Long = 0L) =
+      spark.createDataFrame(ids.map(i => (i + shift, texts(i)))).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("mh_mani_j").toString
+    val hitsOut = java.nio.file.Files.createTempDirectory("mh_mani_jh").toString
+    Dedup.saveMinHashIndex(docs(0L until 600L), dir)
+    Dedup.appendMinHashIndex(docs(600L until 700L), dir, batchId = Some("t1"))
+    Dedup.appendMinHashIndex(docs(700L until 800L), dir, batchId = Some("t2"))
+    assert(ManifestCommit.current(conf, dir).entries(ManifestTiered.tailTable("bands")).size == 2)
+    // new documents plus copies of one indexed document from each tier
+    val batch = docs(800L until 1000L).unionByName(docs(Seq(5L, 650L, 750L), shift = 10000L))
+    val (_, jobs) = graft.util.JobGroups.jobsOf(spark) {
+      Dedup.probeAndAppendMinHashIndex(batch, dir, hitsOut, batchId = Some("p"))
+    }
+    // one job counts the batch's keys, one gathers them (they reach the
+    // tasks as one broadcast variable, not as an exchange per tier), one
+    // each collects the colliding widths and bands rows, the hits write
+    // joins the candidates' signatures (at most one broadcast exchange),
+    // and the three tail lays follow
+    assert(jobs.size <= 10, s"${jobs.size} jobs: ${jobs.map(_.stages.mkString("|"))}")
+    assert(jobs.count(_.isBroadcast) <= 1, s"${jobs.count(_.isBroadcast)} broadcast exchanges")
+    val hits = spark.read.parquet(s"$hitsOut/batch_id=p").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(Set((10005L, 5L), (10650L, 650L), (10750L, 750L)).subsetOf(hits), hits)
+  }
+
   test("manifest probes prune the partitioned base statically and push band/bmod to the flat tiers") {
     assume(sf.isDefined)
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val corpus = graft.util.Tables(spark, sf.get, "documents")
     val dir = java.nio.file.Files.createTempDirectory("mh_mani_p").toString
     Dedup.saveMinHashIndex(corpus, dir)
@@ -115,12 +144,10 @@ class MinHashManifestSpec extends AnyFunSuite {
       .withColumn("doc_id", col("doc_id") + 7000000L), dir,
       batchId = Some("b1"))
     Dedup.compactMinHashIndex(spark, dir) // tail → one flat L1 run
-    val probe = Dedup.dedupAgainstMinHashIndex(
-      corpus.filter(col("doc_id") < 2), dir)
-    val scans = probe.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.exists(_.toString.contains("data/bands")) => f
+    val (_, probeScans) = ProbeScans.of(spark, dir) {
+      Dedup.dedupAgainstMinHashIndex(corpus.filter(col("doc_id") < 2), dir)
     }
+    val scans = probeScans.filter(_.relation.location.rootPaths.exists(_.toString.contains("data/bands")))
     assert(scans.nonEmpty)
     val (baseScans, flatScans) = scans.partition(
       _.relation.location.rootPaths.exists(_.toString.contains("data/bands/")))

@@ -117,7 +117,6 @@ class TieredCompactionSpec extends AnyFunSuite {
   }
 
   test("probes prune level-1 runs via pushed footer predicates (flat sorted runs)") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val dir = java.nio.file.Files.createTempDirectory("tier_prune").toString
     Dedup.saveMinHashIndex(docs(0, 100), dir)
     Dedup.appendMinHashIndex(docs(100, 10), dir, batchId = Some("b1"))
@@ -132,11 +131,8 @@ class TieredCompactionSpec extends AnyFunSuite {
     try assert(st.count() <= 4,
       "flat run must be a handful of files, not a partition tree")
     finally st.close()
-    val probe = Dedup.dedupAgainstMinHashIndex(docs(0, 1), dir)
-    val runScans = probe.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.exists(_.toString.contains("bands.l1")) => f
-    }
+    val (_, scans) = ProbeScans.of(spark, dir)(Dedup.dedupAgainstMinHashIndex(docs(0, 1), dir))
+    val runScans = scans.filter(_.relation.location.rootPaths.exists(_.toString.contains("bands.l1")))
     assert(runScans.nonEmpty, "probe must read the level-1 run")
     runScans.foreach { f =>
       val pushed = f.metadata.getOrElse("PushedFilters", "")
