@@ -856,7 +856,7 @@ object Dedup {
     */
   private[graft] val MinHashHashFamily = "fnv1a64-oph1"
 
-  /** Bucket sub-partition count: `bands/` and the `widths/` sidecar lay
+  /** Bucket sub-partition count: `bands/` lays
     * out as band=* / bmod=* with bmod = pmod(bucket, MinHashBucketMods),
     * so a probe pushes its batch's bounded touched-(band, bmod) set —
     * ≤ nBands × this many values — as a STATIC partition filter (the
@@ -864,8 +864,8 @@ object Dedup {
     * reading the whole persisted index per batch. Pruning wins when the
     * batch touches few of the partitions (interactive probes, small
     * micro-batches against a years-deep index); a batch wide enough to
-    * touch every mod degrades to the full-scan cost, but the widths
-    * sidecar still spares the O(index) over-cap aggregate either way.
+    * touch every mod degrades to the full-scan cost, and the over-cap
+    * anchors still come from the colliding band rows alone.
     * Recorded in the meta marker: a probe computing bmod with a
     * different modulus would prune REAL candidates away silently.
     *
@@ -913,28 +913,6 @@ object Dedup {
     org.apache.spark.sql.types.StructField("sig",
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
 
-  /** `widths/` sidecar: per-bucket width + min-id anchor, maintained
-    * INCREMENTALLY — the build writes one row per bucket, every append
-    * adds a delta row per touched bucket, and readers fold
-    * (sum bw, min aid) over the TOUCHED partitions only, so a probe
-    * that does not read the colliding band rows itself (the shuffled
-    * probe of a wide batch) detects over-cap buckets in O(touched
-    * buckets), not with a whole-index aggregate. It always equals the
-    * fold of the band rows it summarizes: both lay and compact in one
-    * publish. Compaction re-folds the deltas back to one row per bucket.
-    */
-  private[graft] val WidthsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("bw",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("aid",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("bmod",
-      org.apache.spark.sql.types.IntegerType)))
-
   private val ProbeHitSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("new_id",
       org.apache.spark.sql.types.LongType),
@@ -955,14 +933,13 @@ object Dedup {
   // ---- size-tiered LSM layout + maintenance commit protocol ----
   //
   // LSM shape over the versioned-manifest commit protocol
-  // (graft.util.ManifestCommit / ManifestTiered): `bands` + `widths`
-  // are the BASE — (band, bmod)-partitioned so probes prune
-  // statically; `bands.l1` / `widths.l1` hold LEVEL-1 runs as flat
-  // (band, bmod, bucket)-sorted files pruned by parquet footer stats
-  // (one run per minor compaction); `bands.tail` / `widths.tail` are
-  // the level-0 TAIL where appends land as a handful of FLAT dirs.
+  // (graft.util.ManifestCommit / ManifestTiered): the `bands` BASE is
+  // (band, bmod)-partitioned so probes prune statically; `bands.l1`
+  // holds LEVEL-1 runs as flat (band, bmod, bucket)-sorted files pruned
+  // by parquet footer stats (one run per minor compaction); `bands.tail`
+  // is the level-0 TAIL where appends land as a handful of FLAT dirs.
   // `sigs` tiers the same way with flat doc_id-sorted base and runs. A
-  // micro-batch append therefore costs three small unpartitioned writes
+  // micro-batch append therefore costs two small unpartitioned writes
   // + ONE manifest publish, never a 100+-partition-dir commit; probes
   // resolve one manifest snapshot and read pruned base + pruned runs
   // + the (compaction-bounded) tail. This is the Delta/Iceberg-style
@@ -987,14 +964,6 @@ object Dedup {
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
-
-  /** The widths sidecar's delta rows for a batch's band rows — shared
-    * by the build and append lay sites.
-    */
-  private def widthsOf(banded: DataFrame): DataFrame =
-    banded.groupBy(col("band"), col("bmod"), col("bucket"))
-      .agg(count(lit(1)).as("bw"), min(col("doc_id")).as("aid"))
-      .select(col("bucket"), col("bw"), col("aid"), col("band"), col("bmod"))
 
   // ---- versioned-manifest (object-store) protocol arms ----
   //
@@ -1024,9 +993,6 @@ object Dedup {
       val bd = ManifestTiered.layDir(spark, indexDir, "bands",
         banded, partitionBy = Seq("band", "bmod"),
         sortKeys = Seq(col("bucket"), col("doc_id")))
-      val wd = ManifestTiered.layDir(spark, indexDir, "widths",
-        widthsOf(banded), partitionBy = Seq("band", "bmod"),
-        sortKeys = Seq(col("bucket")))
       // every document has exactly one band row per band
       val sd = ManifestTiered.layDir(spark, indexDir, "sigs", sigs,
         partitionBy = Nil, sortKeys = Seq(col("doc_id")),
@@ -1037,7 +1003,7 @@ object Dedup {
       // silently no-op a new crawl reusing a batch id (the manifest
       // generation stays monotone — the stale-writer guard needs it)
       ManifestCommit.publish(conf, indexDir, m => m.copy(
-        tables = Map("bands" -> Seq(bd), "widths" -> Seq(wd), "sigs" -> Seq(sd)),
+        tables = Map("bands" -> Seq(bd), "sigs" -> Seq(sd)),
         committed = Map.empty, writers = Map.empty, floor = 0L)); ()
     } finally { sigs.unpersist(blocking = false); () }
   }
@@ -1058,7 +1024,7 @@ object Dedup {
   /** Lay the batch's tail dirs and publish against the caller's
     * resolved snapshot. Cheapest possible lay: flat unsorted tail dirs
     * (the append's cost follows the batch; compaction owns the
-    * re-sort), all three tables landing in ONE publish — atomically,
+    * re-sort), both tables landing in ONE publish — atomically,
     * with the batch id. `bands` derives from `sigs` (persisted by the
     * caller).
     */
@@ -1098,16 +1064,16 @@ object Dedup {
                                       alongside: Seq[() => Unit] = Nil): Unit = {
     val spark = sigs.sparkSession
     val conf = spark.sessionState.newHadoopConf()
-    // the three tail lays are independent reads of the persisted batch —
-    // overlap their write jobs from driver threads (§2.6); the widths
-    // and sigs lays ride the bands lay's wall-clock
+    // the two tail lays are independent reads of the persisted batch —
+    // overlap their write jobs from driver threads (§2.6); the sigs lay
+    // rides the bands lay's wall-clock
     def lay(table: String, rows: DataFrame) = () =>
       Some(ManifestTiered.layDir(spark, indexDir, table, rows, partitionBy = Nil, sortKeys = Nil))
     val laid = graft.util.DriverPar.inParallel(spark.sparkContext)(Seq(
-      lay("bands.tail", bands), lay("widths.tail", widthsOf(bands)), lay("sigs.tail", sigs)) ++
+      lay("bands.tail", bands), lay("sigs.tail", sigs)) ++
       alongside.map(write => () => { write(); None })).flatten
     val update = (mm: ManifestCommit.Manifest) =>
-      Seq("bands.tail", "widths.tail", "sigs.tail").zip(laid).foldLeft(mm) {
+      Seq("bands.tail", "sigs.tail").zip(laid).foldLeft(mm) {
         case (acc, (t, e)) => ManifestCommit.addDir(acc, t, e.dir, e.rows)
       }
     def metaUnchanged(): Unit = {
@@ -1141,25 +1107,16 @@ object Dedup {
           s"bucket_mods=$MinHashBucketMods and $MinHashLayout" +
           s"rebuild with saveMinHashIndex.")
     // shared manifest fold driver: bands (dominant) decides the tier
-    // action; the widths sidecar re-folds (sum bw / min aid within the
-    // folded mass — readers re-fold across tiers, so probe results are
-    // identical at every tier state) and sigs folds as-is, all landing
-    // in the SAME publish
+    // action and sigs folds the same action as-is, both landing in the
+    // SAME publish. An index laid before probes took their over-cap
+    // anchors from the band rows still names `widths*` tables; nothing
+    // reads or folds them
     ManifestTiered.compactTables(spark, indexDir, Seq(
       ManifestTiered.FoldSpec("bands", BandsSchema,
         basePartitionBy = Seq("band", "bmod"),
         baseSortKeys = Seq(col("bucket"), col("doc_id")),
         runSortKeys = Seq(col("band"), col("bmod"), col("bucket"), col("doc_id")),
         runRowsPerFile = BandsRowsPerRunFile),
-      ManifestTiered.FoldSpec("widths", WidthsSchema,
-        basePartitionBy = Seq("band", "bmod"),
-        baseSortKeys = Seq(col("bucket")),
-        runSortKeys = Seq(col("band"), col("bmod"), col("bucket")),
-        runRowsPerFile = WidthsRowsPerRunFile,
-        refold = w => w
-          .groupBy(col("band"), col("bmod"), col("bucket"))
-          .agg(sum(col("bw")).as("bw"), min(col("aid")).as("aid"))
-          .select(col("bucket"), col("bw"), col("aid"), col("band"), col("bmod"))),
       ManifestTiered.FoldSpec("sigs", SigsSchema,
         basePartitionBy = Nil,
         baseSortKeys = Seq(col("doc_id")),
@@ -1185,11 +1142,10 @@ object Dedup {
   }
 
   /** Run-file sizes, ~128 MB each: a sig-free band row is 2 longs +
-    * 2 ints, ~15 B on disk (0.25 MB for 16,000 rows); a widths row is
-    * 3 longs + 2 ints; a sigs row (64 longs) is ~520 B on disk.
+    * 2 ints, ~15 B on disk (0.25 MB for 16,000 rows); a sigs row
+    * (64 longs) is ~520 B on disk.
     */
   private val BandsRowsPerRunFile = 8L * 1000 * 1000
-  private val WidthsRowsPerRunFile = 8L * 1000 * 1000
   private val SigsRowsPerRunFile = 250L * 1000
 
   /** A batch's signatures and the band rows derived from them, at the
@@ -1238,10 +1194,9 @@ object Dedup {
     * `ann_index_update` and the BM25 delta fold): crawl N+1's
     * band rows and signatures land as flat tail dirs, so the index grows
     * by exactly the batch's ~0.8 KB/doc and the dominant bytes are never
-    * rewritten; the widths sidecar gets matching delta rows in the
-    * same manifest publish. The marker is validated FIRST — appending
-    * signatures from a different hash family/banding would poison
-    * every later probe. With a `batchId`, the append is
+    * rewritten; both land in one manifest publish. The marker is
+    * validated FIRST — appending signatures from a different hash
+    * family/banding would poison every later probe. With a `batchId`, the append is
     * retry-idempotent: a batch already committed in the resolved
     * snapshot is a no-op. doc_id novelty is upstream's contract, same
     * as [[dedupAgainstMinHashIndex]].
@@ -1346,17 +1301,16 @@ object Dedup {
     *     key. (A twin in a bucket gone wide on a shared prefix is then
     *     found through its other bands' under-cap buckets: a miss needs
     *     every shared band over the cap and the anchor dissimilar.)
-    *     These are the counts and anchors the `widths` sidecar holds,
-    *     taken from the rows the probe reads anyway, so this path reads
-    *     no `widths` file.
+    *     The counts and anchors come from the rows the probe reads
+    *     anyway, so no per-bucket summary is maintained.
     * The returned plan reads `sigs` only for the candidate ids, through
     * an [[inIds]] predicate: row-group and page skipping over the
     * doc_id-sorted files, and no generated class per batch.
     *
     * A wider batch plans the same rules as one shuffled query: the
-    * batch's keys join the index rows, the over-cap anchors fold from
-    * the `widths` sidecar (no whole-index aggregate), and `sigs` is
-    * read whole.
+    * batch's keys semi-join the index band rows, the over-cap anchors
+    * are counted over those colliding rows per (band, bucket) (no
+    * whole-index aggregate), and `sigs` is read whole.
     */
   private[dedup] def probeWithBands(spark: SparkSession, batchSigs: DataFrame,
                                     bandedBatch: DataFrame,
@@ -1489,16 +1443,16 @@ object Dedup {
       .agg(collect_set(col("band").cast("long") * MinHashBucketMods + col("bmod")))
       .collect()(0).getSeq[Long](0)
     val partFilter = bandFilter(touched, nBands)
-    val overCap = readIdx("widths", WidthsSchema, partFilter)
-      .groupBy(col("band"), col("bucket"))
-      .agg(sum(col("bw")).as("bw"), min(col("aid")).as("aid"))
-      .filter(col("bw") > SimHashMaxBucket)
-      .select(col("band"), col("bucket"), col("aid"))
+    // each colliding (band, bucket) holds every index row of that
+    // bucket, so its count and min id are the bucket's width and anchor
+    val bucket = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
     val idx = readIdx("bands", BandsSchema, partFilter)
       .select(col("band"), col("bucket"), col("doc_id").as("idx_id"))
-      .join(overCap, Seq("band", "bucket"), "left")
-      .filter(col("aid").isNull || col("idx_id") === col("aid"))
-      .drop("aid")
+      .join(bandedBatch.select(col("band"), col("bucket")), Seq("band", "bucket"), "left_semi")
+      .withColumn("bw", count(lit(1)).over(bucket))
+      .withColumn("aid", min(col("idx_id")).over(bucket))
+      .filter(col("bw") <= SimHashMaxBucket || col("idx_id") === col("aid"))
+      .select(col("band"), col("bucket"), col("idx_id"))
     val cand = bandedBatch
       .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
       .join(idx, Seq("band", "bucket"))
@@ -1561,10 +1515,10 @@ object Dedup {
     * streaming foreachBatch cadence. The batch's signatures are
     * computed once and persisted for both sides; a batch then runs a
     * fixed sequence of Spark jobs, whatever the index depth or tier
-    * count (9 for a 250-document batch against a base and two tails):
+    * count (7 for a 250-document batch against a base and two tails):
     * the probe's three collects ([[probeWithBands]]: band-row count,
     * collision keys, colliding band rows), then the hits write (the
-    * candidates' signatures joined to the batch's) beside the three
+    * candidates' signatures joined to the batch's) beside the two
     * tail lays, then one publish. Hits land in `hitsOut` before the
     * publish, so they always reflect the pre-batch index.
     *
@@ -1639,12 +1593,10 @@ object Dedup {
     * rewrote the whole base every cycle (48.6 s / 27.2 GB shuffle at
     * 1 M docs to fold 0.5 s appends).
     *
-    * At every tier the widths sidecar folds alongside its bands rows
-    * (sum bw / min aid per bucket WITHIN the folded mass; readers
-    * re-fold across tiers) and the sigs rows fold as-is, so probe
-    * results are identical across every level state — all tables land
-    * in ONE manifest publish, and probes resolve one snapshot, so
-    * compaction needs no scheduling against probes at all.
+    * At every tier the sigs rows fold the same action as the bands
+    * rows, so probe results are identical across every level state —
+    * both tables land in ONE manifest publish, and probes resolve one
+    * snapshot, so compaction needs no scheduling against probes at all.
     * Committed-batch state and the meta marker are untouched.
     */
   /** `vacuumKeep`: run [[graft.util.ManifestCommit.vacuum]] inline
@@ -1901,9 +1853,9 @@ object Dedup {
         org.apache.spark.sql.Row(nSig, h.getLong(0), h.getLong(1))), 1), schema)
     },
     // static replay of "crawl 3 probes crawls 0-2": banded collisions
-    // across the split with the index-side over-cap anchor rule (widths
-    // measured over doc % 4 < 3 — compaction's fold must equal this or
-    // the hash gate catches it), signature agreement ≥ 32/64
+    // across the split with the index-side over-cap anchor rule (bucket
+    // widths measured over doc % 4 < 3, at every tier state the
+    // maintenance left), signature agreement ≥ 32/64
     Some(s"""WITH $WordShingleFnvCtes,${sigBandCtes(4)},
       wdt AS (SELECT band, bucket, COUNT(*) AS bw, MIN(doc_id) AS aid
               FROM banded WHERE doc_id % 4 < 3 GROUP BY band, bucket),

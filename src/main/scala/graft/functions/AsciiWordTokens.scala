@@ -2,11 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType,
+  StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** ASCII word tokenizer: equivalent to
@@ -88,7 +90,73 @@ case class AsciiTokenHashes(child: Expression) extends UnaryExpression {
   override def prettyName: String = "ascii_token_hashes"
 }
 
+/** Per-document term frequencies: `struct<dl, terms: array<struct<term,
+  * tf>>>`, where `dl` is the token count and `terms` holds each distinct
+  * `ascii_tokens` term once, in first-occurrence order, with its count.
+  * One static-kernel call per row, so a BM25 postings pass explodes it
+  * into (term, doc_id, dl, tf) rows without a `groupBy` shuffle: a
+  * document row already holds all of its tokens.
+  */
+case class AsciiTermCounts(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"ascii_term_counts expects string, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = AsciiWordTokens.TermCountsType
+  override def nullIntolerant: Boolean = true
+
+  override def nullSafeEval(v: Any): Any =
+    AsciiWordTokens.termCounts(v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.AsciiWordTokens.termCounts($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "ascii_term_counts"
+}
+
 object AsciiWordTokens {
+
+  private[functions] val TermCountsType: StructType = StructType(Seq(
+    StructField("dl", IntegerType, nullable = false),
+    StructField("terms", ArrayType(StructType(Seq(
+      StructField("term", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false))), containsNull = false),
+      nullable = false)))
+
+  /** [[tokenize]]'s tokens counted per distinct term. */
+  def termCounts(str: UTF8String): InternalRow = {
+    val toks = tokenize(str)
+    val n = toks.numElements()
+    val slot = new java.util.HashMap[UTF8String, Integer](math.max(16, n * 2))
+    val terms = new Array[UTF8String](n)
+    val tfs = new Array[Long](n)
+    var distinct = 0
+    var i = 0
+    while (i < n) {
+      val t = toks.getUTF8String(i)
+      val at = slot.putIfAbsent(t, distinct)
+      if (at == null) { terms(distinct) = t; tfs(distinct) = 1L; distinct += 1 }
+      else tfs(at) += 1L
+      i += 1
+    }
+    val rows = new Array[Any](distinct)
+    i = 0
+    while (i < distinct) {
+      rows(i) = new GenericInternalRow(Array[Any](terms(i), tfs(i)))
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](n, new GenericArrayData(rows)))
+  }
+
+  def asciiTermCounts(c: Column): Column =
+    Bridge.column(AsciiTermCounts(Bridge.expression(c)))
 
   /** xxhash64-of-each-token, fused with the tokenize scan. MUST stay
     * bit-identical to `transform(ascii_tokens(s), t -> xxhash64(t))`:

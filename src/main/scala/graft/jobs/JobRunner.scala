@@ -454,10 +454,9 @@ object JobRunner {
             .toDF("table", "n_dirs", "n_rows")
         }
       case "dedup_index_compact" =>
-        // input = index dir from dedup_index_build. Rewrites the
-        // append-only minhash band partitions to one sorted file set
-        // each and folds the widths sidecar's per-batch delta rows —
-        // the maintenance arm that keeps a 24/7 update cadence from
+        // input = index dir from dedup_index_build. Folds the
+        // append-only minhash band and signature tails into sorted runs
+        // or the base — the maintenance arm that keeps a 24/7 update cadence from
         // rotting the index into a small-files scan. Probe results are
         // identical before/after (one manifest publish per fold).
         // --output_option vacuum_keep=K additionally GCs superseded
@@ -469,9 +468,9 @@ object JobRunner {
         }
       case "bm25_index_compact" =>
         // input = index dir from bm25_index_build. Folds the per-merge
-        // postings, df and stats tails into sorted runs or the base
-        // (df and stats re-summed); probe results identical, row-group
-        // term pruning restored.
+        // postings and stats tails into sorted runs or the base (stats
+        // re-summed); probe results identical, row-group term pruning
+        // restored.
         // --output_option vacuum_keep=K GCs superseded generations
         // inline (see JobCli.vacuumKeep).
         {

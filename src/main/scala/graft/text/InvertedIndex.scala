@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.QueryDef
-import graft.functions.GraftFunctions._
+import graft.functions.AsciiWordTokens
 import graft.util.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -32,6 +32,11 @@ import org.apache.spark.sql.types.DoubleType
   *    cadence. Stats are additive, so readers SUM them across
   *    base ∪ runs ∪ tail.
   *
+  * Postings come from one narrow pass: `ascii_term_counts` counts each
+  * document's terms inside its row, and an explode emits the rows — no
+  * shuffle, since a doc_id names one document row. The stats row is one
+  * aggregate over the same documents.
+  *
   * There is no df table: a term's df is the number of its postings
   * rows across the tiers, and a probe reads every one of them anyway,
   * so it counts df in the window that ranks them.
@@ -50,13 +55,9 @@ object InvertedIndex {
   private def bucketOf(termCol: org.apache.spark.sql.Column) =
     pmod(xxhash64(termCol), lit(NumBuckets.toLong))
 
-  /** One tokenize pass → postings + corpus stats. The postings frame
-    * is persisted for the build: its two consumers (postings write,
-    * total_dl stat) would otherwise each re-tokenize and re-explode the
-    * full corpus from scratch.
-    * Persisting postings — not `d`, whose token arrays are ~10× the
-    * text — costs one compact (term, doc_id, dl, tf) materialization
-    * and pays the corpus scan exactly once per build.
+  /** Build: the postings base, bucket-partitioned and term-sorted, and
+    * the stats row, laid side by side and published together. Each lay
+    * reads `docs` once; neither persists anything.
     */
   def save(docs: DataFrame, dir: String): Unit = {
     graft.util.ManifestCommit.assertPublishable(
@@ -64,26 +65,25 @@ object InvertedIndex {
     saveManifest(docs, dir)
   }
 
-  /** One tokenize pass → (term, doc_id, dl, tf, bucket) — shared by
-    * build and delta fold.
+  /** (term, doc_id, dl, tf, bucket) in one narrow pass over `docs`:
+    * each row's terms are counted inside the row by `ascii_term_counts`
+    * and exploded. A zero-token or null-text document has no postings
+    * row. Shared by build and delta fold.
     */
-  private def tokenizedPostings(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), size(col("toks")).as("dl"), col("toks"))
-      .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-      .groupBy(col("term"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", bucketOf(col("term")))
+  private[text] def tokenizedPostings(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), AsciiWordTokens.asciiTermCounts(col("text")).as("tc"))
+      .select(col("doc_id"), col("tc.dl").as("dl"), explode(col("tc.terms")).as("t"))
+      .select(col("t.term").as("term"), col("doc_id"), col("dl"), col("t.tf").as("tf"),
+        bucketOf(col("t.term")).as("bucket"))
 
-  /** Corpus stats without re-tokenizing: n_docs from the base table's
-    * id column (zero-token docs have no postings row but DO count
-    * toward n_docs/avgdl); total_dl = sum(tf) over the postings, since
-    * a doc's tf values sum to its dl (a dl = 0 doc adds 0) — a global
-    * sum, no per-doc dedupe shuffle.
+  /** The (n_docs, total_dl) row of `docs` as one aggregate: every
+    * document counts in n_docs, and a zero-token or null-text document
+    * adds 0 to total_dl.
     */
-  private def statsOf(docs: DataFrame, postings: DataFrame): DataFrame =
-    docs.select(col("doc_id")).agg(count(lit(1)).as("n_docs"))
-      .crossJoin(postings.agg(coalesce(sum(col("tf")), lit(0L)).as("total_dl")))
+  private[text] def statsOf(docs: DataFrame): DataFrame =
+    docs.agg(count(lit(1)).as("n_docs"),
+      coalesce(sum(AsciiWordTokens.asciiTermCounts(col("text")).getField("dl")), lit(0L))
+        .as("total_dl"))
 
   /** The one (n_docs, total_dl) row summed over stats rows — every
     * tier holds additive integer deltas, so the sum is exact.
@@ -105,21 +105,18 @@ object InvertedIndex {
   private def saveManifest(docs: DataFrame, dir: String): Unit = {
     val s = docs.sparkSession
     val conf = s.sessionState.newHadoopConf()
-    val postings = tokenizedPostings(docs).persist()
-    try {
-      // two independent lays off the persisted postings — overlap
-      // their jobs from driver threads (§2.6, one publish below)
-      val Seq(pd, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
-        () => ManifestTiered.layDir(s, dir, "postings", postings,
-          partitionBy = Seq("bucket"), sortKeys = Seq(col("term"), col("doc_id"))),
-        () => ManifestTiered.layDir(s, dir, "stats", statsOf(docs, postings),
-          partitionBy = Nil, sortKeys = Nil)))
-      // a REBUILD replaces every table and resets the committed-batch
-      // state (a new logical index must not inherit tokens)
-      ManifestCommit.publish(conf, dir, m => m.copy(
-        tables = Map("postings" -> Seq(pd), "stats" -> Seq(sd)),
-        committed = Map.empty, writers = Map.empty, floor = 0L)); ()
-    } finally postings.unpersist(blocking = false)
+    // two independent lays, each its own read of `docs` — overlap their
+    // jobs from driver threads (§2.6, one publish below)
+    val Seq(pd, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
+      () => ManifestTiered.layDir(s, dir, "postings", tokenizedPostings(docs),
+        partitionBy = Seq("bucket"), sortKeys = Seq(col("term"), col("doc_id"))),
+      () => ManifestTiered.layDir(s, dir, "stats", statsOf(docs),
+        partitionBy = Nil, sortKeys = Nil)))
+    // a REBUILD replaces every table and resets the committed-batch
+    // state (a new logical index must not inherit tokens)
+    ManifestCommit.publish(conf, dir, m => m.copy(
+      tables = Map("postings" -> Seq(pd), "stats" -> Seq(sd)),
+      committed = Map.empty, writers = Map.empty, floor = 0L)); ()
   }
 
   private def appendDeltaManifest(deltaDocs: DataFrame, dir: String,
@@ -137,23 +134,20 @@ object InvertedIndex {
           s"(a fold into nothing would commit stats without a base and " +
           s"every probe would score against the fold alone).")
     if (batchId.exists(m.isCommitted)) return
-    val postings = tokenizedPostings(deltaDocs).persist()
-    try {
-      // two flat tail lays off the persisted delta postings, overlapped
-      // from driver threads (§2.6); neither reads the snapshot, so the
-      // publish commutes with any racing fold or compaction
-      val Seq(pd, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
-        () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("postings"),
-          postings.select(col("term"), col("doc_id"), col("dl"), col("tf"), col("bucket")),
-          partitionBy = Nil, sortKeys = Nil),
-        () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("stats"),
-          statsOf(deltaDocs, postings), partitionBy = Nil, sortKeys = Nil)))
-      ManifestCommit.publishCommuting(conf, dir, m, mm =>
-        Seq("postings" -> pd, "stats" -> sd).foldLeft(mm) {
-          case (acc, (t, e)) =>
-            ManifestCommit.addDir(acc, ManifestTiered.tailTable(t), e.dir, e.rows)
-        }, batchId); ()
-    } finally postings.unpersist(blocking = false)
+    // two flat tail lays, each its own narrow read of the delta,
+    // overlapped from driver threads (§2.6); neither reads the
+    // snapshot, so the publish commutes with any racing fold or
+    // compaction
+    val Seq(pd, sd) = graft.util.DriverPar.inParallel(s.sparkContext)(Seq(
+      () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("postings"),
+        tokenizedPostings(deltaDocs), partitionBy = Nil, sortKeys = Nil),
+      () => ManifestTiered.layDir(s, dir, ManifestTiered.tailTable("stats"),
+        statsOf(deltaDocs), partitionBy = Nil, sortKeys = Nil)))
+    ManifestCommit.publishCommuting(conf, dir, m, mm =>
+      Seq("postings" -> pd, "stats" -> sd).foldLeft(mm) {
+        case (acc, (t, e)) =>
+          ManifestCommit.addDir(acc, ManifestTiered.tailTable(t), e.dir, e.rows)
+      }, batchId); ()
   }
 
   private def compactManifest(s: SparkSession, dir: String): Unit =
@@ -255,6 +249,10 @@ object InvertedIndex {
     * a probe counts df from the postings it reads. Nothing already in
     * the index is read or rewritten, and with a `batchId` a batch
     * already committed in the resolved snapshot is a no-op.
+    *
+    * The two lays each read the delta once and persist nothing: the
+    * postings lay is one narrow job, and the stats lay's one-row
+    * aggregate is the fold's only shuffle (≤ 3 Spark jobs per fold).
     *
     * Both land in ONE manifest publish. The update only adds
     * dirs, so it commutes: a lost CAS re-resolves the newer snapshot
@@ -366,50 +364,32 @@ object InvertedIndex {
         FROM sc)
       SELECT term, doc_id, score, rk FROM r WHERE rk <= 10"""))
 
-  private def sessionMergedIndex(s: SparkSession, dir: String): String =
-    graft.util.Caches.fill(builtIdx, s.sparkContext.applicationId + ":merged:" + dir,
-      (d: String) => graft.util.FileTrees.rmTree(d)) {
-      val d = java.nio.file.Files.createTempDirectory("graft_bm25_merged").toString
-      val docs = Tables(s, dir, "documents")
-      save(docs.filter(col("doc_id") % 5 =!= 0), d)
-      appendDelta(docs.filter(col("doc_id") % 5 === 0), d,
-        batchId = Some("merge-1"))
-      d
-    }
-
-  /** Registered incremental-maintenance probe: index built from 80% of
-    * the corpus, the remaining 20% folded in via [[appendDelta]], then
-    * probed. Oracle = the SAME full-corpus BM25 SQL as bm25_index_topk:
-    * incremental maintenance must be indistinguishable from a
-    * from-scratch build, hash-checked — appended postings (and with
-    * them df) and additive stats all have to land exactly.
-    */
-  val bm25IndexMergeTopk: QueryDef = QueryDef(
-    "bm25_index_merge_topk",
-    (s, dir) => probe(s, sessionMergedIndex(s, dir),
-      Seq("join", "vector", "filter", "dup")),
-    bm25IndexTopk.oracle)
-
   /** The registered probe's bounded top-k (≤ 4 terms × 10 rows),
     * collected while the caller holds the index lock and returned as a
     * local frame: a lazy probe handed out of the lock would read dirs
     * that the next invocation's rewind may vacuum.
     */
-  private def collectedProbe(s: SparkSession, idx: String): DataFrame = {
-    val top = probe(s, idx, Seq("join", "vector", "filter", "dup"))
+  private def collectedProbe(s: SparkSession, idx: String,
+                             asOfGen: Option[Long] = None): DataFrame = {
+    val top = probe(s, idx, Seq("join", "vector", "filter", "dup"), asOfGen = asOfGen)
     s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
   }
 
-  /** Build-once per (application, sf dir): an 80/20 build+fold index
-    * plus the post-fold generation — the snapshot each invocation
-    * rewinds to (tail 20% < base 80% → Minor).
+  /** The one maintenance fixture of the three maintenance queries, built
+    * once per (application, sf dir): 80 % of the corpus saved, the
+    * remaining 20 % folded in, and the post-fold generation — the
+    * snapshot each compacting invocation rewinds to (tail 20 % < base
+    * 80 % → Minor). `fixtureBuilds` counts the builds per sf dir.
     */
   private val foldedIdx =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  private[text] val fixtureBuilds =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   private[text] def sessionFoldedIndex(s: SparkSession, dir: String): (String, Long) =
     graft.util.Caches.fill(foldedIdx, s.sparkContext.applicationId + ":folded:" + dir,
       (v: (String, Long)) => graft.util.FileTrees.rmTree(v._1)) {
+      fixtureBuilds.merge(dir, 1, (a, b) => a + b)
       val d = java.nio.file.Files.createTempDirectory("graft_bm25_folded").toString
       val docs = Tables(s, dir, "documents")
       save(docs.filter(col("doc_id") % 5 =!= 0), d)
@@ -418,70 +398,62 @@ object InvertedIndex {
       (d, ManifestCommit.current(s.sessionState.newHadoopConf(), d).gen)
     }
 
+  /** Registered incremental-maintenance probe: the fixture index (80 %
+    * of the corpus built, the remaining 20 % folded in via
+    * [[appendDelta]]) probed at its post-fold generation, under the
+    * index lock, so it reads the folded tail whatever compaction the
+    * other two queries ran. Oracle = the SAME full-corpus BM25 SQL as
+    * bm25_index_topk: incremental maintenance must be indistinguishable
+    * from a from-scratch build, hash-checked — appended postings (and
+    * with them df) and additive stats all have to land exactly.
+    */
+  val bm25IndexMergeTopk: QueryDef = QueryDef(
+    "bm25_index_merge_topk",
+    (s, dir) => {
+      val (idx, seedGen) = sessionFoldedIndex(s, dir)
+      graft.util.WorkLocks.sync(idx)(collectedProbe(s, idx, asOfGen = Some(seedGen)))
+    },
+    bm25IndexTopk.oracle)
+
+  /** One compacting invocation on the fixture: rewind to the post-fold
+    * snapshot (manifest time-travel — an O(fold output) reset), fold
+    * the tail, optionally vacuum inline, and probe, all under the index
+    * lock (index maintenance is single-writer: graft.util.WorkLocks). The
+    * bench therefore measures one real Minor fold + probe every time,
+    * not a NoOp re-probe of the first invocation's fold.
+    */
+  private def compactedProbe(s: SparkSession, dir: String,
+                             vacuumKeep: Option[Int]): DataFrame = {
+    val conf = s.sessionState.newHadoopConf()
+    val (idx, seedGen) = sessionFoldedIndex(s, dir)
+    graft.util.WorkLocks.sync(idx) {
+      ManifestTiered.benchRewind(conf, idx, seedGen)
+      compact(s, idx, vacuumKeep)
+      collectedProbe(s, idx)
+    }
+  }
+
   /** Registered maintenance arm: fold the appended tail into the
     * tiered layout WITH THE INLINE VACUUM (`vacuumKeep` — the 24/7
     * compact-verb ergonomic), then probe. Oracle = the SAME
     * full-corpus BM25 SQL: compaction + vacuum must be invisible to
     * retrieval, hash-checked (bm25_index_manifest_topk is the
-    * no-vacuum twin). Each invocation rewinds to the post-fold
-    * snapshot (manifest time-travel), so the bench measures one real
-    * Minor fold + vacuum pass + probe every time, not a NoOp re-probe
-    * of the first invocation's fold.
+    * no-vacuum twin). keep=2 retains the post-fold snapshot the next
+    * invocation rewinds to; the vacuum pass itself runs every cycle.
     */
   val bm25IndexCompactTopk: QueryDef = QueryDef(
     "bm25_index_compact_topk",
-    (s, dir) => {
-      val conf = s.sessionState.newHadoopConf()
-      val (idx, seedGen) = sessionFoldedIndex(s, dir)
-      // index maintenance is single-writer: serialize concurrent
-      // invocations in one session (graft.util.WorkLocks)
-      graft.util.WorkLocks.sync(idx) {
-        ManifestTiered.benchRewind(conf, idx, seedGen)
-        // keep=2 retains the pre-fold snapshot the next invocation
-        // rewinds to; the vacuum pass itself runs for real every cycle
-        compact(s, idx, vacuumKeep = Some(2))
-        collectedProbe(s, idx)
-      }
-    },
+    (s, dir) => compactedProbe(s, dir, vacuumKeep = Some(2)),
     bm25IndexTopk.oracle)
 
-  /** Build-once per (application, sf dir): an 80/20 manifest-protocol
-    * build+fold plus the post-fold generation — the snapshot each
-    * invocation rewinds to.
-    */
-  private val manifestIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  /** The bm25_index_compact_topk lifecycle on the versioned-manifest
-    * (object-store) commit protocol: 80% built, 20% folded via the
-    * manifest appendDelta (one tail dir per table in ONE publish), the
-    * tails Minor-folded into flat sorted runs, then probed. Oracle = the SAME full-corpus
-    * BM25 SQL — the commit protocol must be invisible to retrieval,
-    * hash-checked. Each invocation rewinds to the post-fold snapshot
-    * by dropping the previous compaction's generations and vacuuming
-    * (manifest time-travel — an O(fold output) reset), so the bench
-    * measures one real Minor fold + probe every time.
+  /** The bm25_index_compact_topk lifecycle without the inline vacuum:
+    * the fixture's tails Minor-folded into flat sorted runs, then
+    * probed. Oracle = the SAME full-corpus BM25 SQL — compaction must
+    * be invisible to retrieval, hash-checked.
     */
   val bm25IndexManifestTopk: QueryDef = QueryDef(
     "bm25_index_manifest_topk",
-    (s, dir) => {
-      val conf = s.sessionState.newHadoopConf()
-      val (idx, seedGen) = graft.util.Caches.fill(manifestIdx,
-        s.sparkContext.applicationId + ":" + dir,
-        (v: (String, Long)) => graft.util.FileTrees.rmTree(v._1)) {
-          val d = java.nio.file.Files.createTempDirectory("graft_bm25_mani").toString
-          val docs = Tables(s, dir, "documents")
-          save(docs.filter(col("doc_id") % 5 =!= 0), d)
-          appendDelta(docs.filter(col("doc_id") % 5 === 0), d,
-            batchId = Some("fold-1"))
-          (d, ManifestCommit.current(conf, d).gen)
-        }
-      graft.util.WorkLocks.sync(idx) {
-        ManifestTiered.benchRewind(conf, idx, seedGen)
-        compact(s, idx)
-        collectedProbe(s, idx)
-      }
-    },
+    (s, dir) => compactedProbe(s, dir, vacuumKeep = None),
     bm25IndexTopk.oracle)
 
   val all: Seq[QueryDef] =

@@ -129,8 +129,8 @@ object ManifestTiered {
   }
 
   /** One tiered table's fold parameters for [[compactTables]]:
-    * `refold` re-aggregates the folded mass (the widths sidecar's
-    * sum/min — identity for plain tables); run files are flat-sorted
+    * `refold` re-aggregates the folded mass (BM25's additive stats
+    * rows — identity for plain tables); run files are flat-sorted
     * on `runSortKeys`, a Major's base partition-dir tree sorts within
     * partitions on `baseSortKeys` (with no `basePartitionBy`, the base
     * is flat files range-sorted on `baseSortKeys`, sized like a run).
@@ -185,7 +185,7 @@ object ManifestTiered {
     }
     // per-table folds are independent (disjoint tables, fresh dirs,
     // one publish below) — overlap their jobs from driver threads
-    // (§2.6): the widths sidecar's fold rides the bands fold's wall
+    // (§2.6): a sidecar's fold rides the dominant table's wall
     val laid = specs.zip(
       DriverPar.inParallel(spark.sparkContext)(specs.map(s => () => fold(s))))
     ManifestCommit.publishAt(conf, indexDir, m, mm =>

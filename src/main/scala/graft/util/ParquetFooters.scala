@@ -8,9 +8,10 @@ import org.apache.hadoop.conf.Configuration
   * count at lay time. Counting via `spark.read.parquet(dir).count()`
   * is metadata-only I/O but still a full Spark JOB (schedule, task per
   * split, result collection) — a fixed per-lay constant that the
-  * streaming drains pay twice per micro-batch (bands.tail +
-  * widths.tail). A fresh lay is a handful of part files whose footers
-  * the driver can read directly: same exact number, zero jobs.
+  * streaming drains pay on every tail lay of every micro-batch
+  * (bands.tail + sigs.tail). A fresh lay is a handful of part files
+  * whose footers the driver can read directly: same exact number, zero
+  * jobs.
   *
   * Scale guard: above `MaxDriverFiles` files (a Major-compacted base at
   * corpus scale, where per-file footer round-trips on an object store

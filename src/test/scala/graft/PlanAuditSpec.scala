@@ -74,9 +74,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "text_bm25",
     // same 1-row stats crossJoin, reading the persisted inverted index
     "bm25_index_topk",
-    // same 1-row stats crossJoin, probing the incrementally-maintained
-    // index (append-merged postings — identical probe plan)
-    "bm25_index_merge_topk",
     // 1-row vocabulary aggregate onto the bigram stream (as in
     // quality_lm_score) plus the ≤|langs|-row tercile-cutoff table
     "quality_ppl_buckets",

@@ -150,12 +150,11 @@ class MinHashIndexSpec extends AnyFunSuite {
       Dedup.dedupAgainstMinHashIndex(corpus.filter(col("doc_id") < 2), dir)
     }
 
-    // manifest data dirs: data/bands/d-*/band=... and data/widths/d-*/...
+    // manifest data dirs: data/bands/d-*/band=... and data/sigs/d-*/...
     def scansOf(sub: String) =
       scans.filter(_.relation.location.rootPaths.exists(_.toString.contains(sub)))
-    // the r11 design scanned bands TWICE per probe (candidate join +
-    // a full-index over-cap groupBy); the widths sidecar removes the
-    // second scan entirely
+    // the over-cap anchors come from the colliding band rows, so no
+    // second (whole-index) bands scan feeds them
     val bandsScans = scansOf("/bands/")
     assert(bandsScans.size == 1, s"bands must be scanned exactly once, got ${bandsScans.size}")
     bandsScans.foreach { f =>
@@ -164,10 +163,10 @@ class MinHashIndexSpec extends AnyFunSuite {
     }
     val sigsScans = scansOf("/sigs/")
     assert(sigsScans.size == 1, s"sigs must be scanned exactly once, got ${sigsScans.size}")
-    // both index-side scans carry a static partition filter from the
+    // the bands scan carries a static partition filter from the
     // batch's bounded touched set — the probe reads only the partitions
     // the batch can collide with, never the whole persisted index
-    (bandsScans ++ scansOf("/widths/")).foreach { f =>
+    bandsScans.foreach { f =>
       // the batch's touched set arrives as STATIC literals (the join may
       // add a DynamicPruningSubquery on top, which listFiles can't
       // evaluate — the static filter alone must already prune)
@@ -256,14 +255,10 @@ class MinHashIndexSpec extends AnyFunSuite {
     // the tail folded into a level-1 run; vacuum dropped the superseded
     // tail dirs, so the physical file count shrinks too
     assert(m.rows(ManifestTiered.tailTable("bands")) == 0 &&
-      m.rows(ManifestTiered.tailTable("widths")) == 0,
+      m.rows(ManifestTiered.tailTable("sigs")) == 0,
       "tails must be empty after compaction")
     assert(files() < totalBefore,
       s"vacuum must reclaim superseded dirs (${files()} vs $totalBefore)")
-    // widths deltas are FOLDED: one row per (band, bucket) again
-    val w = ManifestTiered.read(spark, dir, m, "widths", Dedup.WidthsSchema)
-    assert(w.groupBy(col("band"), col("bucket")).count()
-      .filter(col("count") > 1).count() == 0, "widths must fold to one row per bucket")
     // committed tokens + meta survive; appends keep working after compact
     assert(m.isCommitted("c1") && m.isCommitted("c2"))
     Dedup.appendMinHashIndex(probe.withColumn("doc_id", col("doc_id") + 5000000L),

@@ -105,7 +105,7 @@ class MinHashManifestSpec extends AnyFunSuite {
     assert(before.nonEmpty)
   }
 
-  test("a probe-and-append over a base and two tails runs in at most 10 Spark jobs, " +
+  test("a probe-and-append over a base and two tails runs in at most 7 Spark jobs, " +
       "none of them a per-tier key broadcast") {
     val rng = new java.util.Random(20261020L)
     val texts = (0L until 1000L)
@@ -125,14 +125,85 @@ class MinHashManifestSpec extends AnyFunSuite {
     }
     // one job counts the batch's keys, one gathers them (they reach the
     // tasks as one broadcast variable, not as an exchange per tier), one
-    // each collects the colliding widths and bands rows, the hits write
-    // joins the candidates' signatures (at most one broadcast exchange),
-    // and the three tail lays follow
-    assert(jobs.size <= 10, s"${jobs.size} jobs: ${jobs.map(_.stages.mkString("|"))}")
+    // collects the colliding band rows, the hits write joins the
+    // candidates' signatures (at most one broadcast exchange), and the
+    // two tail lays run beside it
+    assert(jobs.size <= 7, s"${jobs.size} jobs: ${jobs.map(_.stages.mkString("|"))}")
     assert(jobs.count(_.isBroadcast) <= 1, s"${jobs.count(_.isBroadcast)} broadcast exchanges")
     val hits = spark.read.parquet(s"$hitsOut/batch_id=p").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(Set((10005L, 5L), (10650L, 650L), (10750L, 750L)).subsetOf(hits), hits)
+  }
+
+  private def generated(n: Int, seed: Long): Map[Long, String] = {
+    val rng = new java.util.Random(seed)
+    (0L until n.toLong).map(i => i -> Seq.fill(40)(s"w${rng.nextInt(2000)}").mkString(" ")).toMap
+  }
+
+  test("no widths table is laid by a build, an append, a probe-and-append, a Minor or a Major compaction") {
+    val texts = generated(500, 20261022L)
+    def docs(ids: Seq[Long]) =
+      spark.createDataFrame(ids.map(i => (i, texts(i)))).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("mh_mani_nw").toString
+    val hitsOut = java.nio.file.Files.createTempDirectory("mh_mani_nwh").toString
+    def noWidths(step: String): Unit = {
+      val tables = ManifestCommit.current(conf, dir).tables.keys
+      assert(!tables.exists(_.startsWith("widths")), s"$step published ${tables.toSeq.sorted}")
+      val laid = Option(new java.io.File(dir, "data").list()).map(_.toSeq).getOrElse(Nil)
+      assert(laid.nonEmpty && !laid.exists(_.startsWith("widths")), s"$step laid $laid")
+    }
+    Dedup.saveMinHashIndex(docs(0L until 200L), dir)
+    noWidths("a build")
+    Dedup.appendMinHashIndex(docs(200L until 220L), dir, batchId = Some("a"))
+    noWidths("an append")
+    Dedup.probeAndAppendMinHashIndex(docs(220L until 240L), dir, hitsOut, batchId = Some("p"))
+    noWidths("a probe-and-append")
+    assert(Dedup.compactionTiers(spark, dir)._1 == "Minor")
+    Dedup.compactMinHashIndex(spark, dir)
+    noWidths("a Minor compaction")
+    Dedup.appendMinHashIndex(docs(240L until 500L), dir, batchId = Some("b"))
+    assert(Dedup.compactionTiers(spark, dir)._1 == "Major")
+    Dedup.compactMinHashIndex(spark, dir)
+    noWidths("a Major compaction")
+  }
+
+  test("an index that still names a published widths table probes and compacts like one that does not") {
+    val texts = generated(300, 20261023L)
+    def docs(ids: Seq[Long], shift: Long = 0L) =
+      spark.createDataFrame(ids.map(i => (i + shift, texts(i)))).toDF("doc_id", "text")
+    val clean = java.nio.file.Files.createTempDirectory("mh_mani_wc").toString
+    val stale = java.nio.file.Files.createTempDirectory("mh_mani_ws").toString
+    Seq(clean, stale).foreach { d =>
+      Dedup.saveMinHashIndex(docs(0L until 200L), d)
+      Dedup.appendMinHashIndex(docs(200L until 240L), d, batchId = Some("t1"))
+    }
+    val batch = docs(Seq(3L, 7L, 210L, 230L), shift = 10000L).unionByName(docs(240L until 260L))
+    val (sigs, bands) = Dedup.bandedSignaturesDev(batch)
+    // the per-bucket summary an older build kept, claiming every bucket
+    // the batch touches is over the cap with an anchor no index row has:
+    // a reader that still used it would drop every candidate
+    val widths = ManifestCommit.newDataDir(stale, ManifestTiered.tailTable("widths"))
+    bands.select(col("bucket"), lit(100000L).as("bw"), lit(-1L).as("aid"), col("band"), col("bmod"))
+      .write.parquet(s"$stale/$widths")
+    val nRows = bands.count()
+    ManifestCommit.publish(conf, stale, m =>
+      ManifestCommit.addDir(m, ManifestTiered.tailTable("widths"), widths, nRows))
+    def hits(d: String, gate: Long) = hitSet(Dedup.probeWithBands(spark, sigs, bands,
+      Dedup.manifestReader(spark, d, ManifestCommit.current(conf, d)), 64, 0.5, 16,
+      maxBroadcastKeys = gate))
+    def same(step: String): Unit =
+      // the collected probe, and the shuffled one above a zero gate
+      Seq(16L * 1000 * 1000, 0L).foreach { gate =>
+        val want = hits(clean, gate)
+        assert(Set(10003L -> 3L, 10007L -> 7L, 10210L -> 210L, 10230L -> 230L)
+          .subsetOf(want.map(h => h._1 -> h._2)), s"$step, gate $gate: $want")
+        assert(hits(stale, gate) == want, s"a stale widths table changed the hits $step, gate $gate")
+      }
+    same("before compaction")
+    Seq(clean, stale).foreach(Dedup.compactMinHashIndex(spark, _))
+    same("after a Minor compaction")
+    assert(ManifestCommit.current(conf, stale).table(ManifestTiered.tailTable("widths")) == Seq(widths),
+      "compaction must leave the stale widths entry as it is")
   }
 
   test("manifest probes prune the partitioned base statically and push band/bmod to the flat tiers") {

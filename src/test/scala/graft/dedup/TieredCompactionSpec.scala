@@ -110,10 +110,6 @@ class TieredCompactionSpec extends AnyFunSuite {
     assert(baseFiles(dir) != base0, "major compaction rewrites the base")
     assert(visibleRows(dir) == 16L * 200)
     assert(probeHit(dir) == Set((900000L, 0L, 1.0)))
-    // widths fully folded after major: one row per (band, bucket)
-    val w = ManifestTiered.read(spark, dir, m(dir), "widths", Dedup.WidthsSchema)
-    assert(w.groupBy(col("band"), col("bucket")).count()
-      .filter(col("count") > 1).count() == 0)
   }
 
   test("probes prune level-1 runs via pushed footer predicates (flat sorted runs)") {

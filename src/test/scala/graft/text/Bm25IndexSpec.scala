@@ -163,6 +163,25 @@ class Bm25IndexSpec extends AnyFunSuite {
     assert(held.collect().toSet == second && second.nonEmpty)
   }
 
+  test("the three maintenance queries share one fixture build and score like a full build") {
+    // a private sf dir: the build count is per dir, and no other suite reads this one
+    val sfDir = java.nio.file.Files.createTempDirectory("bm25_fixture_sf").toString
+    val rng = new java.util.Random(20261022L)
+    val vocab = Seq("join", "vector", "filter", "dup") ++ (0 until 200).map(i => s"w$i")
+    spark.createDataFrame((0L until 400L).map(i =>
+      (i, Seq.fill(5 + rng.nextInt(30))(vocab(rng.nextInt(vocab.size))).mkString(" "))))
+      .toDF("doc_id", "text").write.parquet(s"$sfDir/documents.parquet")
+    def run(q: String) = graft.SparkEntry.queries(q)(spark, sfDir)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    val want = run("bm25_index_topk")
+    assert(want.nonEmpty)
+    for (_ <- 1 to 2; q <- Seq("bm25_index_merge_topk", "bm25_index_compact_topk",
+        "bm25_index_manifest_topk"))
+      assert(run(q) == want, s"$q differs from a full build")
+    assert(InvertedIndex.fixtureBuilds.get(sfDir) == 1,
+      s"fixture builds for one sf dir: ${InvertedIndex.fixtureBuilds.get(sfDir)}")
+  }
+
   test("appendDelta is exactly-once under a batch id, even after later folds") {
     import org.apache.spark.sql.functions._
     val docs = graft.util.Tables(spark, sf, "documents")

@@ -254,6 +254,58 @@ class Bm25ManifestSpec extends AnyFunSuite
     assert(statsRow(dir) == statsRow(scratch))
   }
 
+  test("a fold starts at most 3 Spark jobs and shuffles only for its stats row") {
+    val docs = corpus(300)
+    val dir = tmp("bm25_fold_jobs")
+    InvertedIndex.save(docs.filter(col("doc_id") < 200), dir)
+    val (_, jobs) = graft.util.JobGroups.jobsOf(spark) {
+      InvertedIndex.appendDelta(docs.filter(col("doc_id") >= 200), dir, batchId = Some("f1"))
+    }
+    assert(jobs.size <= 3, s"${jobs.size} jobs: ${jobs.map(_.stages.mkString("|"))}")
+    // the stats row's aggregate writes the one shuffle
+    val shuffles = jobs.flatMap(_.shuffleWrites).toSet
+    assert(shuffles.size <= 1, s"${shuffles.size} shuffle writes: ${jobs.map(_.stages.mkString("|"))}")
+    val scratch = tmp("bm25_fold_jobs_s")
+    InvertedIndex.save(docs, scratch)
+    assert(scores(dir) == scores(scratch))
+    assert(statsRow(dir) == statsRow(scratch))
+  }
+
+  test("in-row term counts give the postings and the stats row of the groupBy plan") {
+    val rng = new java.util.Random(20261022L)
+    val words = Seq("Join", "join", "JOIN", "vector", "a1", "Filter", "dup", "x", "naïve")
+    val texts: Seq[String] = (0 until 300).map { i =>
+      i % 10 match {
+        case 0 => null
+        case 1 => "  --- ... !!! "
+        case 2 => ""
+        case _ => Seq.fill(1 + rng.nextInt(30))(
+          words(rng.nextInt(words.size)) + (if (rng.nextInt(4) == 0) ", " else " ")).mkString
+      }
+    }
+    val docs = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("doc_id", "text")
+    // the plan postings came from before: tokens exploded and counted
+    // per (term, doc_id, dl) through a shuffle
+    val grouped = docs.select(col("doc_id"), graft.functions.GraftFunctions.tokens(col("text")).as("toks"))
+      .select(col("doc_id"), size(col("toks")).as("dl"), explode(col("toks")).as("term"))
+      .groupBy(col("term"), col("doc_id"), col("dl"))
+      .agg(count(lit(1)).as("tf"))
+      .withColumn("bucket", pmod(xxhash64(col("term")), lit(InvertedIndex.NumBuckets.toLong)))
+    val postings = InvertedIndex.tokenizedPostings(docs)
+    assert(postings.schema.map(f => f.name -> f.dataType) == grouped.schema.map(f => f.name -> f.dataType))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+    val want = rows(grouped)
+    assert(want.exists(_._4 > 1) && want.exists(_._1 == "join"), "the corpus must repeat and fold terms")
+    assert(rows(postings).sortBy(r => (r._1, r._2)).toSeq == want.sortBy(r => (r._1, r._2)).toSeq)
+    // zero-token and null-text documents count in n_docs and add 0 to total_dl
+    val stats = InvertedIndex.statsOf(docs).head()
+    assert((stats.getLong(0), stats.getLong(1)) == ((300L, want.map(_._4).sum)))
+    val none = InvertedIndex.statsOf(docs.limit(0)).head()
+    assert((none.getLong(0), none.getLong(1)) == ((0L, 0L)))
+  }
+
   test("building a probe starts no Spark job and lists only the probed bucket dirs") {
     val dir = tmp("bm25_probe_jobs")
     InvertedIndex.save(corpus(300), dir)

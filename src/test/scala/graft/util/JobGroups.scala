@@ -12,9 +12,11 @@ object JobGroups {
 
   /** One job the block started: its job tags (a broadcast exchange tags
     * its collect job `broadcast exchange (runId …)`), the names of its
-    * stages, and the bytes its tasks read from files.
+    * stages, the bytes its tasks read from files, and the ids of the
+    * stages it ran that wrote shuffle records.
     */
-  final case class Job(tags: Set[String], stages: Seq[String], inputBytes: Long) {
+  final case class Job(tags: Set[String], stages: Seq[String], inputBytes: Long,
+                       shuffleWrites: Set[Int]) {
     def isBroadcast: Boolean = tags.exists(_.startsWith("broadcast exchange"))
   }
 
@@ -31,6 +33,7 @@ object JobGroups {
     val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Set[String], Seq[String])]()
     val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val bytes = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    val shuffleWrites = new java.util.concurrent.ConcurrentHashMap[Int, Set[Int]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
@@ -45,6 +48,8 @@ object JobGroups {
         Option(jobOfStage.get(e.stageId)).foreach { j =>
           val n = Option(e.taskMetrics).map(_.inputMetrics.bytesRead).getOrElse(0L)
           bytes.merge(j, n, (a, b) => a + b)
+          if (Option(e.taskMetrics).exists(_.shuffleWriteMetrics.recordsWritten > 0))
+            shuffleWrites.merge(j, Set(e.stageId), (a, b) => a ++ b)
         }
     }
     val group = s"job-probe-${java.util.UUID.randomUUID()}"
@@ -68,7 +73,8 @@ object JobGroups {
       } finally sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     (out, started.asScala.toSeq.collect { case (id, `group`, tags, stages) =>
-      Job(tags, stages, Option(bytes.get(id)).map(_.longValue).getOrElse(0L))
+      Job(tags, stages, Option(bytes.get(id)).map(_.longValue).getOrElse(0L),
+        Option(shuffleWrites.get(id)).getOrElse(Set.empty))
     })
   }
 }
